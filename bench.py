@@ -510,13 +510,13 @@ def main() -> None:
         # only unexplained mover was graph_link_scores +22% with
         # untouched code, i.e. tail-run noise that min alone did not
         # absorb on long-running plans (round-5 verdict #5).
-        rs = sorted(runs[name])
-        timings[name] = rs[1] if rs[0] > 2.0 else rs[0]
+        order = sorted(range(len(runs[name])), key=runs[name].__getitem__)
+        rep_idx = order[1] if runs[name][order[0]] > 2.0 else order[0]
+        timings[name] = runs[name][rep_idx]
         # steal delta of the REPORTED run (the one `timings` keeps):
         # feeds the headline flag below, so a reviewer of BENCH_r{N}
         # alone can tell "this entry's number was steal-contaminated"
         # from "this entry's plan regressed"
-        rep_idx = runs[name].index(timings[name])
         rep_steal[name] = steals[name][rep_idx]
         rep_spin[name] = spins[name][rep_idx]
         spark.catalog.clearCache()

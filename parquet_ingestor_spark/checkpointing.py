@@ -17,12 +17,17 @@ Two truncation modes:
 Mirrors the reference's durable-before-ack stance for state the
 pipeline cannot afford to recompute (reference ingestor commit path:
 ``ingestor/ingestor.go`` ack-after-write), applied to iterative
-operator state.
+operator state, and (:func:`epoch_fold_stream`) to the epoch-keyed
+state of streaming maintainers.
 """
 
 from __future__ import annotations
 
+import os
+from typing import Callable
+
 from pyspark.sql import DataFrame
+from pyspark.sql.streaming import StreamingQuery
 
 #: The checkpoint dir last set through this module. SparkContext holds
 #: ONE checkpoint dir: with ``eager=False`` the checkpoint
@@ -37,29 +42,94 @@ from pyspark.sql import DataFrame
 _LAST_CHECKPOINT_DIR: str | None = None
 
 
-def latest_epoch_below(path: str, bound: int) -> int:
-    """Largest ``epoch=N`` directory under ``path`` strictly below
-    ``bound`` (-1 if none) — the replay-safe state floor for epoch-
-    keyed foreachBatch state: a replayed batch re-reads the same
-    pre-state and overwrites its own epoch, never double-folding.
-
-    Only well-formed ``epoch=<digits>`` entries count; a stray
-    temp/staging directory containing '=' is ignored rather than
-    raising ValueError inside foreachBatch and failing the
-    micro-batch. Shared by every epoch-keyed stream maintainer
-    (sketches/scd/matview/mixture/incremental)."""
-    import os
-
+def _epochs(path: str) -> list[int]:
+    """The ids of the well-formed ``epoch=<digits>`` directories under
+    ``path`` (none if it is missing). A stray temp/staging directory
+    containing '=' (``epoch=0=tmp``, ``epoch=abc``) is ignored rather
+    than parsed — inside foreachBatch a ValueError would fail the
+    micro-batch, and in the GC a duplicate id would delete twice."""
     if not os.path.isdir(path):
-        return -1
-    vs = [
+        return []
+    return [
         int(d.split("=", 1)[1])
         for d in os.listdir(path)
-        if d.startswith("epoch=")
-        and d.split("=", 1)[1].isdigit()
-        and int(d.split("=", 1)[1]) < bound
+        if d.startswith("epoch=") and d.split("=", 1)[1].isdigit()
     ]
-    return max(vs, default=-1)
+
+
+def latest_epoch_below(path: str, bound: int) -> int:
+    """Largest ``epoch=N`` directory under ``path`` strictly below
+    ``bound`` (-1 if none) — the replay-safe state floor read by
+    :func:`epoch_fold_stream`."""
+    return max((e for e in _epochs(path) if e < bound), default=-1)
+
+
+def epoch_fold_stream(
+    stream: DataFrame,
+    state_dir: str,
+    state_subs: tuple[str, ...],
+    fold: Callable[..., None],
+    query_name: str,
+) -> StreamingQuery:
+    """Maintain epoch-keyed parquet state from ``stream``: the one
+    commit path behind every streaming state maintainer (sketches,
+    scd, matview, mixture, incremental).
+
+    Each non-empty micro-batch calls ``fold(state, batch_df, emit)``:
+
+    - ``state`` is the tuple of ``state_dir/<sub>/epoch=E`` frames,
+      one per name in ``state_subs``, where E is the largest epoch
+      STRICTLY below the batch id — or ``None`` on the first batch;
+    - ``emit(sub, df)`` overwrites ``state_dir/<sub>/epoch=<batch_id>``
+      and returns that path.
+
+    Replay discipline (the reference's ack-after-durable-write,
+    ``ingestor/ingestor.go``): when a batch's state is written but its
+    checkpoint commit is lost, Structured Streaming re-runs the batch
+    with the same id. The replay reads the same pre-state and
+    overwrites its own epoch instead of folding on top of its own
+    output, so even a non-idempotent fold (integer sums) never
+    double-applies. A torn epoch left by the crash is never read as
+    state — only epochs strictly below the replay's id are — and the
+    overwrite replaces it. E is looked up on ``state_subs[-1]``, which
+    the fold must emit after the other state subs, so an epoch present
+    there is complete in every sub.
+
+    The query drains what is available (``availableNow``) with its
+    checkpoint at ``state_dir/_checkpoint``. Returns the
+    StreamingQuery; callers own awaitTermination/stop.
+    """
+
+    def _process(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        read = batch_df.sparkSession.read
+        e = latest_epoch_below(
+            os.path.join(state_dir, state_subs[-1]), int(batch_id)
+        )
+        state = (
+            tuple(
+                read.parquet(os.path.join(state_dir, sub, f"epoch={e}"))
+                for sub in state_subs
+            )
+            if e >= 0
+            else None
+        )
+
+        def emit(sub: str, df: DataFrame) -> str:
+            path = os.path.join(state_dir, sub, f"epoch={int(batch_id)}")
+            df.write.mode("overwrite").parquet(path)
+            return path
+
+        fold(state, batch_df, emit)
+
+    return (
+        stream.writeStream.foreachBatch(_process)
+        .queryName(query_name)
+        .option("checkpointLocation", os.path.join(state_dir, "_checkpoint"))
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def truncate_lineage(
@@ -132,15 +202,7 @@ def gc_epoch_state(state_path: str, keep_last: int = 2) -> list[int]:
         )
     if keep_last < 2:
         raise ValueError("keep_last must be >= 2 (replay needs pre-state)")
-    import os
-
-    if not os.path.isdir(state_path):
-        return []
-    epochs = sorted(
-        int(d.split("=")[1])
-        for d in os.listdir(state_path)
-        if d.startswith("epoch=") and d.split("=")[1].isdigit()
-    )
+    epochs = sorted(_epochs(state_path))
     doomed = epochs[:-keep_last] if len(epochs) > keep_last else []
     for e in doomed:
         shutil.rmtree(os.path.join(state_path, f"epoch={e}"))

@@ -40,7 +40,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import table
-from ..checkpointing import truncate_lineage
+from ..checkpointing import epoch_fold_stream, truncate_lineage
 from ..queries import register
 from .corpus import _PAIRS_CTE, connected_components
 from .dedup import JACCARD_THRESHOLD, shingle_col
@@ -257,21 +257,15 @@ def stream_dedup_clusters(
     streaming (doc_id, text) source via ``foreachBatch``.
 
     State lives as parquet under ``state_dir`` (postings/, sizes/,
-    labels/), versioned per epoch so a batch never overwrites the
-    files it is reading (the same write-then-swap discipline as the
-    reference's durable-write-before-ack commit,
-    /root/reference/ingestor/ingestor.go). ``labels/<latest>`` is the
-    queryable cluster assignment at any moment.
+    labels/), versioned per epoch by
+    :func:`~..checkpointing.epoch_fold_stream`. ``labels/<latest>`` is
+    the queryable cluster assignment at any moment.
 
-    **Replay-idempotent**: epochs are keyed by the streaming
-    ``batch_id``, and a batch reads the largest epoch *strictly
-    below* its own id — so when Structured Streaming replays a batch
-    after a crash (state written, checkpoint commit lost), the replay
-    reads the same pre-state and overwrites the same epoch instead of
-    re-applying itself on top of its own output (which would double
-    every doc's postings and corrupt Jaccard sizes). This is the
-    batch-id-keyed idempotent-sink rule the batch pipeline uses for
-    its dynamic partition overwrite (pipeline O15).
+    **Replay-idempotent**: a replayed batch overwrites its own epoch
+    instead of re-applying itself on top of its own output, which
+    would double every doc's postings and corrupt Jaccard sizes. This
+    is the batch-id-keyed idempotent-sink rule the batch pipeline uses
+    for its dynamic partition overwrite (pipeline O15).
 
     foreachBatch is the documented Spark pattern for stateful
     maintenance that needs arbitrary joins against accumulated state —
@@ -281,38 +275,13 @@ def stream_dedup_clusters(
 
     Returns the StreamingQuery; callers own awaitTermination/stop.
     """
-    import os
+    subs = ("postings", "sizes", "labels")
 
-    from ..checkpointing import latest_epoch_below
-
-    def _epoch_below(sub: str, bound: int) -> int:
-        return latest_epoch_below(os.path.join(state_dir, sub), bound)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        e = _epoch_below("labels", int(batch_id))
-        state = None
-        if e >= 0:
-            state = tuple(
-                spark.read.parquet(
-                    os.path.join(state_dir, sub, f"epoch={e}")
-                )
-                for sub in ("postings", "sizes", "labels")
-            )
-        ex, sz, lbl = apply_dedup_batch(
+    def fold(state, batch_df, emit):
+        folded = apply_dedup_batch(
             state, batch_df.select("doc_id", text_col), text_col=text_col
         )
-        for sub, df in (("postings", ex), ("sizes", sz), ("labels", lbl)):
-            df.write.mode("overwrite").parquet(
-                os.path.join(state_dir, sub, f"epoch={int(batch_id)}")
-            )
+        for sub, df in zip(subs, folded):
+            emit(sub, df)
 
-    return (
-        stream_docs.writeStream.foreachBatch(_process)
-        .queryName(query_name)
-        .option("checkpointLocation", os.path.join(state_dir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return epoch_fold_stream(stream_docs, state_dir, subs, fold, query_name)

@@ -38,12 +38,11 @@ idempotent).
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import table
+from ..checkpointing import epoch_fold_stream
 from ..functions import ts_lit
 from ..queries import register
 
@@ -148,52 +147,28 @@ def pricing_summary_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return finalize_pricing(state)
 
 
-def _epoch_below(state_dir: str, sub: str, bound: int) -> int:
-    from ..checkpointing import latest_epoch_below
-
-    return latest_epoch_below(os.path.join(state_dir, sub), bound)
-
-
 def stream_pricing_summary(
     stream_lineitem: DataFrame,
     state_dir: str,
     query_name: str = "pricing_view_maintenance",
 ):
     """Structured-Streaming twin: maintain the pricing view from a
-    lineitem stream via ``foreachBatch`` + epoch-keyed partial-sum
-    state. Because integer addition is NOT idempotent, the epoch
-    discipline is load-bearing here: a replayed batch folds into the
-    pre-batch epoch again (strictly-below read + own-epoch overwrite),
-    never double-adding. Read ``view/<latest>`` for the current view,
-    or finalize ``state/<latest>`` on demand.
+    lineitem stream with :func:`~..checkpointing.epoch_fold_stream`
+    over partial-sum state. Because integer addition is NOT
+    idempotent, the epoch discipline is load-bearing here: a replayed
+    batch folds into the pre-batch epoch again, never double-adding.
+    Read ``view/<latest>`` for the current view, or finalize
+    ``state/<latest>`` on demand.
 
     Returns the StreamingQuery; callers own awaitTermination/stop.
     """
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        e = _epoch_below(state_dir, "state", int(batch_id))
-        state = (
-            spark.read.parquet(os.path.join(state_dir, "state", f"epoch={e}"))
-            if e >= 0
-            else None
-        )
-        folded = fold_partials(state, pricing_partials(batch_df))
-        folded.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "state", f"epoch={int(batch_id)}")
-        )
-        finalize_pricing(folded).write.mode("overwrite").parquet(
-            os.path.join(state_dir, "view", f"epoch={int(batch_id)}")
-        )
+    def fold(state, batch_df, emit):
+        prior = state[0] if state else None
+        folded = fold_partials(prior, pricing_partials(batch_df))
+        emit("state", folded)
+        emit("view", finalize_pricing(folded))
 
-    return (
-        stream_lineitem.writeStream.foreachBatch(_process)
-        .queryName(query_name)
-        .option(
-            "checkpointLocation", os.path.join(state_dir, "_checkpoint")
-        )
-        .trigger(availableNow=True)
-        .start()
+    return epoch_fold_stream(
+        stream_lineitem, state_dir, ("state",), fold, query_name
     )

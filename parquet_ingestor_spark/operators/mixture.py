@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import types as T
 
 from ..catalog import table
+from ..checkpointing import epoch_fold_stream
 from ..functions import int_e
 from ..queries import register
 
@@ -695,13 +696,11 @@ def stream_heavy_hitters(
     query_name: str = "heavy_hitters_maintenance",
 ):
     """Structured-Streaming wrapper: maintain the mergeable MG
-    summary from a streaming (doc_id, text) source via
-    ``foreachBatch``. Same epoch discipline as
-    :func:`~.incremental.stream_dedup_clusters`: state parquet under
-    ``state_dir`` (summary/, total/) keyed by streaming batch_id, a
-    batch reads the largest epoch STRICTLY below its own id, so a
-    crash-replay re-reads the same pre-state and overwrites the same
-    epoch instead of double-counting (replay-idempotent).
+    summary from a streaming (doc_id, text) source with
+    :func:`~..checkpointing.epoch_fold_stream`: state parquet under
+    ``state_dir`` (summary/, total/), so a crash-replay re-reads the
+    same pre-state and overwrites the same epoch instead of
+    double-counting (MG counts are sums, not idempotent).
 
     ``summary/<latest>`` is queryable at any moment: every token with
     true stream frequency > n_total/(capacity+1) is present, counts
@@ -711,42 +710,16 @@ def stream_heavy_hitters(
 
     Returns the StreamingQuery; callers own awaitTermination/stop.
     """
-    import os
 
-    from ..checkpointing import latest_epoch_below
-
-    def _epoch_below(sub: str, bound: int) -> int:
-        return latest_epoch_below(os.path.join(state_dir, sub), bound)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        e = _epoch_below("summary", int(batch_id))
-        state = None
-        if e >= 0:
-            state = tuple(
-                spark.read.parquet(
-                    os.path.join(state_dir, sub, f"epoch={e}")
-                )
-                for sub in ("summary", "total")
-            )
+    def fold(state, batch_df, emit):
         summary, total = mg_merge_batch(
             state, batch_df, capacity=capacity, text_col=text_col
         )
-        for sub, df in (("summary", summary), ("total", total)):
-            df.write.mode("overwrite").parquet(
-                os.path.join(state_dir, sub, f"epoch={int(batch_id)}")
-            )
+        emit("summary", summary)
+        emit("total", total)
 
-    return (
-        stream_docs.writeStream.foreachBatch(_process)
-        .queryName(query_name)
-        .option(
-            "checkpointLocation", os.path.join(state_dir, "_checkpoint")
-        )
-        .trigger(availableNow=True)
-        .start()
+    return epoch_fold_stream(
+        stream_docs, state_dir, ("summary", "total"), fold, query_name
     )
 
 
@@ -1225,11 +1198,11 @@ def stream_dsir_weights(
 ):
     """Online DSIR: score each arriving micro-batch against the fixed
     target model and the pool model ACCUMULATED SO FAR, maintaining
-    the pool's bucket counts as epoch-keyed parquet state (the
-    heavy-hitters/HLL epoch discipline: a batch reads the largest
-    epoch strictly below its own id and overwrites its own, so a
-    crash-replay re-derives identical state — counts are exact
-    integers, so the fold is bit-idempotent).
+    the pool's bucket counts as epoch-keyed parquet state with
+    :func:`~..checkpointing.epoch_fold_stream` (a crash-replay
+    re-derives identical state — counts are exact integers, so the
+    replayed fold is bit-identical). Each batch is scored on the pool
+    as read back from its own durable epoch.
 
     Outputs per epoch: ``pool/epoch=N`` (b, cq — the updated model)
     and ``weights/epoch=N`` (doc_id, dsir_logweight — that batch's
@@ -1241,55 +1214,29 @@ def stream_dsir_weights(
 
     Returns the StreamingQuery; callers own awaitTermination/stop.
     """
-    import os
 
-    from ..checkpointing import latest_epoch_below
-
-    def _epoch_below(bound: int) -> int:
-        return latest_epoch_below(os.path.join(state_dir, "pool"), bound)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
+    def fold(state, batch_df, emit):
         spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        e = _epoch_below(int(batch_id))
         doc_bucket = _dsir_doc_buckets(batch_df, buckets, bucket_hash)
         fresh = doc_bucket.groupBy("b").agg(F.sum("c").alias("cq"))
-        if e >= 0:
-            prior = spark.read.parquet(
-                os.path.join(state_dir, "pool", f"epoch={e}")
+        pool = (
+            state[0].unionByName(fresh).groupBy("b").agg(
+                F.sum("cq").alias("cq")
             )
-            pool = (
-                prior.unionByName(fresh).groupBy("b").agg(
-                    F.sum("cq").alias("cq")
-                )
-            )
-        else:
-            pool = fresh
-        pool.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "pool", f"epoch={int(batch_id)}")
+            if state
+            else fresh
         )
-        pool_back = spark.read.parquet(
-            os.path.join(state_dir, "pool", f"epoch={int(batch_id)}")
-        )
+        pool_back = spark.read.parquet(emit("pool", pool))
         counts = pool_back.join(target_counts, "b", "full").select(
             "b",
             F.coalesce("ct", F.lit(0)).alias("ct"),
             F.coalesce("cq", F.lit(0)).alias("cq"),
         )
         ratio = dsir_log_ratio(spark, counts, buckets=buckets, alpha=alpha)
-        dsir_score(doc_bucket, ratio).write.mode("overwrite").parquet(
-            os.path.join(state_dir, "weights", f"epoch={int(batch_id)}")
-        )
+        emit("weights", dsir_score(doc_bucket, ratio))
 
-    return (
-        stream_docs.writeStream.foreachBatch(_process)
-        .queryName(query_name)
-        .option(
-            "checkpointLocation", os.path.join(state_dir, "_checkpoint")
-        )
-        .trigger(availableNow=True)
-        .start()
+    return epoch_fold_stream(
+        stream_docs, state_dir, ("pool",), fold, query_name
     )
 
 

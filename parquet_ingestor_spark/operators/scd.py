@@ -22,6 +22,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import table
+from ..checkpointing import epoch_fold_stream
 from ..queries import register
 
 
@@ -185,13 +186,12 @@ def stream_scd2(
     query_name: str = "scd2_maintenance",
 ):
     """Structured-Streaming SCD2 maintenance: fold each micro-batch of
-    attribute updates into an epoch-keyed dimension parquet via
-    ``foreachBatch`` — the same replay discipline as
-    ``sketches.stream_hll_users`` (a batch reads the largest epoch
-    STRICTLY below its own id and overwrites its own epoch, so a
-    crash-replay re-reads the same pre-state and rewrites the same
-    files instead of double-applying; ``scd2_apply`` itself is
-    deterministic, so the rewrite is bit-identical).
+    attribute updates into an epoch-keyed dimension parquet with
+    :func:`~..checkpointing.epoch_fold_stream` (a crash-replay
+    rewrites the same files instead of double-applying;
+    ``scd2_apply`` itself is deterministic, so the rewrite is
+    bit-identical). The first batch applies onto ``initial``, or onto
+    an empty dimension when none is given.
 
     Within one batch, updates collapse to last-write-per-key before
     applying (max (ts, attr) struct — deterministic under ties), the
@@ -201,26 +201,14 @@ def stream_scd2(
 
     Returns the StreamingQuery; callers own awaitTermination/stop.
     """
-    import os
 
-    from ..checkpointing import latest_epoch_below
-
-    def _epoch_below(bound: int) -> int:
-        return latest_epoch_below(os.path.join(state_dir, "dim"), bound)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        e = _epoch_below(int(batch_id))
-        if e >= 0:
-            state = spark.read.parquet(
-                os.path.join(state_dir, "dim", f"epoch={e}")
-            )
+    def fold(state, batch_df, emit):
+        if state:
+            dim = state[0]
         elif initial is not None:
-            state = initial
+            dim = initial
         else:
-            state = (
+            dim = (
                 batch_df.select(
                     F.col(key),
                     F.col(attr),
@@ -241,19 +229,12 @@ def stream_scd2(
             )
             .select(key, F.col("m.a").alias(attr), F.col("m.t").alias(ts_col))
         )
-        folded = scd2_apply(state, latest, key=key, attr=attr, ts_col=ts_col)
-        folded.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "dim", f"epoch={int(batch_id)}")
+        emit(
+            "dim", scd2_apply(dim, latest, key=key, attr=attr, ts_col=ts_col)
         )
 
-    return (
-        stream_updates.writeStream.foreachBatch(_process)
-        .queryName(query_name)
-        .option(
-            "checkpointLocation", os.path.join(state_dir, "_checkpoint")
-        )
-        .trigger(availableNow=True)
-        .start()
+    return epoch_fold_stream(
+        stream_updates, state_dir, ("dim",), fold, query_name
     )
 
 

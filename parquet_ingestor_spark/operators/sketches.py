@@ -25,6 +25,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..catalog import table
+from ..checkpointing import epoch_fold_stream
 from ..functions import int_e
 from ..queries import register
 
@@ -568,14 +569,12 @@ def stream_hll_users(
     query_name: str = "hll_users_maintenance",
 ):
     """Structured-Streaming wrapper: maintain per-key distinct-count
-    sketches from a streaming source via ``foreachBatch`` — the same
-    epoch discipline as ``stream_heavy_hitters`` (state parquet keyed
-    by streaming batch_id; a batch reads the largest epoch STRICTLY
-    below its own id, so a crash-replay re-reads the same pre-state
-    and overwrites the same epoch instead of double-inserting —
-    though for HLL even a true double-insert is absorbed, since
-    sketch insertion is idempotent per value: the epoch discipline
-    here guards the state files, not the math).
+    sketches from a streaming source with
+    :func:`~..checkpointing.epoch_fold_stream` (a crash-replay
+    overwrites its own epoch instead of double-inserting — though for
+    HLL even a true double-insert is absorbed, since sketch insertion
+    is idempotent per value: the epoch discipline here guards the
+    state files, not the math).
 
     ``sketch/<latest>`` holds (key, sk); estimate on read with
     ``hll_sketch_estimate``. State is keys × few-KB forever,
@@ -583,36 +582,13 @@ def stream_hll_users(
 
     Returns the StreamingQuery; callers own awaitTermination/stop.
     """
-    import os
 
-    from ..checkpointing import latest_epoch_below
+    def fold(state, batch_df, emit):
+        prior = state[0] if state else None
+        emit("sketch", hll_fold_batch(prior, batch_df, key, val, lgk))
 
-    def _epoch_below(bound: int) -> int:
-        return latest_epoch_below(os.path.join(state_dir, "sketch"), bound)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        e = _epoch_below(int(batch_id))
-        state = (
-            spark.read.parquet(os.path.join(state_dir, "sketch", f"epoch={e}"))
-            if e >= 0
-            else None
-        )
-        folded = hll_fold_batch(state, batch_df, key, val, lgk)
-        folded.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "sketch", f"epoch={int(batch_id)}")
-        )
-
-    return (
-        stream_events.writeStream.foreachBatch(_process)
-        .queryName(query_name)
-        .option(
-            "checkpointLocation", os.path.join(state_dir, "_checkpoint")
-        )
-        .trigger(availableNow=True)
-        .start()
+    return epoch_fold_stream(
+        stream_events, state_dir, ("sketch",), fold, query_name
     )
 
 
@@ -1048,15 +1024,6 @@ def corpus_bloom_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and screen each micro-batch against everything seen BEFORE it.
 
 
-def _latest_epoch_below(path: str, bound: int) -> int:
-    """Replay-safe state floor — delegates to the shared
-    :func:`..checkpointing.latest_epoch_below` (well-formed
-    ``epoch=<digits>`` entries only)."""
-    from ..checkpointing import latest_epoch_below
-
-    return latest_epoch_below(path, bound)
-
-
 def stream_bloom_screen(
     stream_df: DataFrame,
     state_dir: str,
@@ -1071,56 +1038,34 @@ def stream_bloom_screen(
     ``screened/epoch=<batch_id>``, and then folded into the bitmap at
     ``bitmap/epoch=<batch_id>``.
 
-    Same epoch discipline as ``stream_hll_users``: state is keyed by
-    streaming batch_id and a batch reads the largest epoch STRICTLY
-    below its own id, so a crash-replay re-screens against the same
-    pre-state and overwrites the same epoch — and even a true double
-    fold is absorbed outright, because bit_or is idempotent (the
-    strongest replay story of the sketch family). State is ≤
-    num_bits/64 rows forever, regardless of stream length.
+    State is kept by :func:`~..checkpointing.epoch_fold_stream`, so a
+    crash-replay re-screens against the same pre-state and overwrites
+    the same epoch — and even a true double fold is absorbed
+    outright, because bit_or is idempotent (the strongest replay
+    story of the sketch family). State is ≤ num_bits/64 rows forever,
+    regardless of stream length.
 
     Returns the StreamingQuery; callers own awaitTermination/stop.
     """
-    import os
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        e = _latest_epoch_below(
-            os.path.join(state_dir, "bitmap"), int(batch_id)
-        )
-        state = (
-            spark.read.parquet(
-                os.path.join(state_dir, "bitmap", f"epoch={e}")
-            )
-            if e >= 0
-            else None
-        )
+    def fold(state, batch_df, emit):
+        key = F.col(key_col)
         bitmap = (
-            state
-            if state is not None
-            else spark.createDataFrame([], "word long, bits long")
+            state[0]
+            if state
+            else batch_df.sparkSession.createDataFrame(
+                [], "word long, bits long"
+            )
         )
-        bloom_probe(
-            bitmap, batch_df, F.col(key_col), num_bits, num_hashes
-        ).write.mode("overwrite").parquet(
-            os.path.join(state_dir, "screened", f"epoch={int(batch_id)}")
+        emit(
+            "screened",
+            bloom_probe(bitmap, batch_df, key, num_bits, num_hashes),
         )
-        fresh = bloom_build(batch_df, F.col(key_col), num_bits, num_hashes)
-        folded = bloom_merge(state, fresh) if state is not None else fresh
-        folded.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "bitmap", f"epoch={int(batch_id)}")
-        )
+        fresh = bloom_build(batch_df, key, num_bits, num_hashes)
+        emit("bitmap", bloom_merge(state[0], fresh) if state else fresh)
 
-    return (
-        stream_df.writeStream.foreachBatch(_process)
-        .queryName(query_name)
-        .option(
-            "checkpointLocation", os.path.join(state_dir, "_checkpoint")
-        )
-        .trigger(availableNow=True)
-        .start()
+    return epoch_fold_stream(
+        stream_df, state_dir, ("bitmap",), fold, query_name
     )
 
 
@@ -1340,45 +1285,20 @@ def stream_cm_counts(
     query_name: str = "cm_counts_maintenance",
 ):
     """Structured-Streaming wrapper: maintain a Count-Min frequency
-    grid from a stream via ``foreachBatch`` + epoch-keyed parquet
-    state (the ``stream_pricing_summary`` discipline — integer sums
-    are not idempotent, so a replayed batch must re-read the largest
-    epoch STRICTLY below its own id and overwrite its epoch, never
-    double-add). State is ≤ depth·width rows forever, regardless of
+    grid from a stream with :func:`~..checkpointing.epoch_fold_stream`
+    (integer sums are not idempotent, so the replay discipline is
+    load-bearing: a replayed batch overwrites its epoch, never
+    double-adds). State is ≤ depth·width rows forever, regardless of
     stream length; estimate on read with ``cm_estimate``.
 
     Returns the StreamingQuery; callers own awaitTermination/stop.
     """
-    import os
 
-    from ..checkpointing import latest_epoch_below
-
-    def _epoch_below(bound: int) -> int:
-        return latest_epoch_below(os.path.join(state_dir, "grid"), bound)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        e = _epoch_below(int(batch_id))
-        state = (
-            spark.read.parquet(os.path.join(state_dir, "grid", f"epoch={e}"))
-            if e >= 0
-            else None
-        )
-        folded = cm_fold_batch(
-            state, batch_df, key_cols, depth=depth, width=width
-        )
-        folded.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "grid", f"epoch={int(batch_id)}")
+    def fold(state, batch_df, emit):
+        prior = state[0] if state else None
+        emit(
+            "grid",
+            cm_fold_batch(prior, batch_df, key_cols, depth=depth, width=width),
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(_process)
-        .queryName(query_name)
-        .option(
-            "checkpointLocation", os.path.join(state_dir, "_checkpoint")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
+    return epoch_fold_stream(stream_df, state_dir, ("grid",), fold, query_name)

@@ -327,22 +327,27 @@ def start_stream_ingest(
         # The batch feeds two sinks (data + DLQ); without caching, each
         # write would re-read and re-parse the source files.
         batch_df.persist()
-        if cfg.payload_log_every > 0:
-            # O23 payload sampling (reference: ingestor/ingestor.go:699-704,
-            # truncated at 4 KiB): cheap driver-side peek, never a full scan.
-            sample = batch_df.select("value").limit(1).collect()
-            if sample and batch_id % cfg.payload_log_every == 0:
-                print(
-                    f"[pipeline] batch={batch_id} payload sample: "
-                    f"{sample[0].value[: cfg.payload_log_max_chars]}"
-                )
-        good, bad = parse_envelopes(
-            batch_df, record_schema, payload_format=cfg.payload_format
-        )
-        if cfg.drop_where:
-            good = good.filter(f"NOT ({cfg.drop_where})")
-        write_batch(good, bad, data_dir, dlq_dir, batch_id, cfg)
-        batch_df.unpersist()
+        try:
+            if cfg.payload_log_every > 0:
+                # O23 payload sampling (reference:
+                # ingestor/ingestor.go:699-704, truncated at 4 KiB):
+                # cheap driver-side peek, never a full scan.
+                sample = batch_df.select("value").limit(1).collect()
+                if sample and batch_id % cfg.payload_log_every == 0:
+                    print(
+                        f"[pipeline] batch={batch_id} payload sample: "
+                        f"{sample[0].value[: cfg.payload_log_max_chars]}"
+                    )
+            good, bad = parse_envelopes(
+                batch_df, record_schema, payload_format=cfg.payload_format
+            )
+            if cfg.drop_where:
+                good = good.filter(f"NOT ({cfg.drop_where})")
+            write_batch(good, bad, data_dir, dlq_dir, batch_id, cfg)
+        finally:
+            # a failed write must not leave the batch pinned in memory
+            # for the life of the session
+            batch_df.unpersist()
 
     return (
         raw.writeStream.foreachBatch(_process)

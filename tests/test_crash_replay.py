@@ -118,3 +118,57 @@ def test_replayed_batch_overwrites_not_appends(spark, tmp_path):
     df = spark.read.parquet(data_dir)
     assert df.count() == 35
     assert df.filter("batch_id = 7").count() == 30
+
+
+def test_epoch_fold_replay_after_lost_commit_skips_torn_epoch(spark, tmp_path):
+    """The same window for epoch-keyed streaming state: batch 2's state
+    epoch is written (then torn) but its checkpoint commit is lost. The
+    restarted query replays batch 2, which must fold onto epoch 1 — not
+    its own torn epoch — and overwrite epoch 2 with exactly the
+    single-run sum. The fold is an integer sum, so a double-add would
+    show."""
+    import pyspark.sql.functions as F
+
+    from parquet_ingestor_spark.checkpointing import epoch_fold_stream
+
+    landing = str(tmp_path / "landing")
+    for i in range(3):
+        spark.range(10 * i, 10 * (i + 1)).coalesce(1).write.mode(
+            "append"
+        ).parquet(landing)
+    state_dir = str(tmp_path / "state")
+    torn = os.path.join(state_dir, "acc", "epoch=2")
+
+    def fold(state, batch_df, emit):
+        acc = batch_df.select(F.col("id").alias("total"))
+        if state is not None:
+            acc = state[0].unionByName(acc)
+        emit("acc", acc.agg(F.sum("total").alias("total")))
+
+    def run_and_read_epoch_2():
+        stream = (
+            spark.readStream.schema("id long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(landing)
+        )
+        epoch_fold_stream(
+            stream, state_dir, ("acc",), fold, "sum_fold"
+        ).awaitTermination(120)
+        return spark.read.parquet(torn).first().total
+
+    assert run_and_read_epoch_2() == sum(range(30))
+
+    # crash after the state write, before the checkpoint commit; the
+    # .crc sidecar must go too or the restart refuses the commit log
+    commits = os.path.join(state_dir, "_checkpoint", "commits")
+    os.remove(os.path.join(commits, "2"))
+    os.remove(os.path.join(commits, ".2.crc"))
+    os.remove(os.path.join(torn, "_SUCCESS"))
+    with open(os.path.join(torn, "part-junk.parquet"), "wb") as f:
+        f.write(b"not parquet")
+
+    assert run_and_read_epoch_2() == sum(range(30))
+    assert "part-junk.parquet" not in os.listdir(torn)  # replay rewrote it
+    assert sorted(os.listdir(os.path.join(state_dir, "acc"))) == [
+        "epoch=0", "epoch=1", "epoch=2"
+    ]

@@ -127,6 +127,34 @@ def test_stream_ingest_restart_no_loss_no_dupes(spark, dirs):
     assert spark.read.parquet(f"{out}/data").count() == g1 + g2
 
 
+def test_stream_ingest_failed_write_releases_batch_cache(
+    spark, dirs, monkeypatch
+):
+    """A sink write that raises fails the query (so the batch replays
+    on restart) and must still drop the batch's cache entry — else
+    every failed batch stays pinned in executor memory."""
+    from pyspark.errors import StreamingQueryException
+
+    from parquet_ingestor_spark import pipeline
+
+    def _failing_write(*args, **kwargs):
+        raise OSError("sink unavailable")
+
+    landing, out, chk = dirs
+    os.makedirs(landing)
+    _write_landing_file(landing, "a.json", 20)
+    spark.catalog.clearCache()
+    monkeypatch.setattr(pipeline, "write_batch", _failing_write)
+    q = start_stream_ingest(
+        spark, landing, out, chk, RECORD_SCHEMA,
+        PipelineConfig(flush_interval="1 second"),
+    )
+    with pytest.raises(StreamingQueryException, match="sink unavailable"):
+        q.processAllAvailable()
+    q.stop()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_parse_envelopes_split(spark):
     raw = spark.createDataFrame(
         [

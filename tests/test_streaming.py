@@ -356,13 +356,14 @@ def test_gc_epoch_state_keeps_replay_floor(tmp_path):
     from parquet_ingestor_spark.checkpointing import gc_epoch_state
 
     root = str(tmp_path / "state" / "dim")
-    for e in (0, 1, 3, 7):
-        os.makedirs(os.path.join(root, f"epoch={e}"))
-        with open(os.path.join(root, f"epoch={e}", "part.parquet"), "w") as f:
+    # "epoch=0=tmp" is a stray staging dir: not an epoch, left alone
+    for d in ("epoch=0", "epoch=1", "epoch=3", "epoch=7", "epoch=0=tmp"):
+        os.makedirs(os.path.join(root, d))
+        with open(os.path.join(root, d, "part.parquet"), "w") as f:
             f.write("x")
     removed = gc_epoch_state(root, keep_last=2)
     assert removed == [0, 1]
-    assert sorted(os.listdir(root)) == ["epoch=3", "epoch=7"]
+    assert sorted(os.listdir(root)) == ["epoch=0=tmp", "epoch=3", "epoch=7"]
     # idempotent; nothing below the floor
     assert gc_epoch_state(root, keep_last=2) == []
     import pytest
