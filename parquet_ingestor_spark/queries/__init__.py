@@ -77,9 +77,15 @@ _LOADED = False
 #:     also r5, is already above), completing the rotation the
 #:     round-9 window deferred.
 #:   - then 34 of the 43-entry round-6 cohort in registration order
-#:     (all least-recently-checked alike); the 9 tail entries
-#:     (q89_shipping_lag_mad, q90/q91/q92/q93/q94/q95/q96,
-#:     q48_conditional_aggs) rotate in round 11.
+#:     (all least-recently-checked alike).
+#:
+#: Round-11 rotation: the 9 round-6 tail entries (q89_shipping_lag_mad,
+#: q90-q96, q48_conditional_aggs; last driver row round 6) take the
+#: slots of the 9 round-6 head entries with the most driver rows (four
+#: each: dedup_simhash, sim_bruteforce_topk_vectorized,
+#: sim_srp_lsh_neardup, emb_whiten, q10_revenue_per_nation,
+#: q14_broadcast_join, q15_pricing_summary, q40_window_breadth,
+#: q47_null_semantics). No entry's execution path changed this round.
 _WINDOW_FIRST: tuple[str, ...] = (
     # -- entries whose execution path changed in round 10 --
     "text_lm_perplexity",
@@ -88,6 +94,16 @@ _WINDOW_FIRST: tuple[str, ...] = (
     "dedup_keep_best",
     "dedup_clusters_incremental",
     "corpus_line_dedup",
+    # -- the round-6 cohort tail, rotated in round 11 --
+    "q89_shipping_lag_mad",
+    "q90_nation_revenue_trend",
+    "q91_resample_interpolate",
+    "q92_share_of_parent",
+    "q93_abc_classification",
+    "q94_contingency_chi2",
+    "q95_touch_attribution",
+    "q96_top_event_paths",
+    "q48_conditional_aggs",
     # -- the round-5 cohort remainder, least-recently-checked --
     "dq_orders_constraints",
     "scd2_customer_segments",
@@ -101,28 +117,19 @@ _WINDOW_FIRST: tuple[str, ...] = (
     "q75_resample_ffill",
     # -- the round-6 cohort head (registration order) --
     "dedup_minhash_lsh",
-    "dedup_simhash",
     "dedup_ppjoin_pairs",
     "sim_ivf_topk",
-    "sim_bruteforce_topk_vectorized",
-    "sim_srp_lsh_neardup",
     "pq_adc_topk",
     "sim_ivfpq_topk",
     "emb_normalize",
     "emb_quantize",
     "emb_label_pca1",
     "emb_dim_stats",
-    "emb_whiten",
     "emb_cov_matrix",
     "emb_pca1_power",
     "events_hll_users",
     "events_user_overlap_sketch",
     "corpus_bloom_seen",
-    "q10_revenue_per_nation",
-    "q14_broadcast_join",
-    "q15_pricing_summary",
-    "q40_window_breadth",
-    "q47_null_semantics",
     "q52_range_frame",
     "q76_anomalous_hours",
     "q77_copurchase_pairs",

@@ -12,11 +12,21 @@ Design notes (100 TB target, tested on local[32]):
   and all testdata timestamps are naive-UTC.
 - Parquet codec snappy: the reference's default in every example
   (reference: examples/basic/main.go:79, encoder/encoder_parquet.go:74).
+- ``file://`` is bound to ``jvm/NioLocalFileSystem.java``: without
+  libhadoop (never shipped in the pyspark wheel) Hadoop's local
+  filesystem forks ``chmod`` for every file, ``.crc`` sidecar and
+  directory a write or a streaming checkpoint creates; the shim sets the
+  same bits in-process. It is compiled once per source version with the
+  JDK's ``javac``; a JRE-only install gets Hadoop's own local filesystem.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -57,6 +67,58 @@ _BASE_CONF: dict[str, str] = {
 }
 
 
+_JVM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
+_LOCALFS_SRC = os.path.join(_JVM_DIR, "NioLocalFileSystem.java")
+_LOCALFS_CLASS = "parquet_ingestor_spark.jvm.NioLocalFileSystem"
+# FileSystem API (parquet and DLQ writes) and FileContext API (the
+# streaming checkpoint's offsets, commits and sources logs).
+_LOCALFS_CONF: dict[str, str] = {
+    "spark.hadoop.fs.file.impl": _LOCALFS_CLASS,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": _LOCALFS_CLASS + "$Fs",
+}
+
+
+def _javac() -> str | None:
+    """The JDK compiler beside the ``java`` Spark launches (``$JAVA_HOME``
+    first, as the launcher does), or None on a JRE-only install."""
+    home = os.environ.get("JAVA_HOME")
+    if home:
+        path = os.path.join(home, "bin", "javac")
+        return path if os.access(path, os.X_OK) else None
+    return shutil.which("javac")
+
+
+def _localfs_jar() -> str | None:
+    """Path of the compiled local-filesystem shim, building it on first
+    use; None when no JDK compiler is installed.
+
+    The jar is named by the source's content hash, so an edited source
+    rebuilds and concurrent builders of one version write the same bytes
+    (each to its own temp name, then an atomic rename)."""
+    javac = _javac()
+    if javac is None:
+        return None
+    with open(_LOCALFS_SRC, "rb") as f:
+        digest = hashlib.sha256(f.read()).hexdigest()[:16]
+    build = os.path.join(_JVM_DIR, "build")
+    jar = os.path.join(build, f"localfs-{digest}.jar")
+    if os.path.exists(jar):
+        return jar
+    from pyspark.find_spark_home import _find_spark_home
+
+    os.makedirs(build, exist_ok=True)
+    with tempfile.TemporaryDirectory(dir=build) as tmp:
+        classes = os.path.join(tmp, "classes")
+        subprocess.run(
+            [javac, "--release", "17", "-d", classes,
+             "-cp", os.path.join(_find_spark_home(), "jars", "*"), _LOCALFS_SRC],
+            check=True,
+        )
+        part = shutil.make_archive(os.path.join(tmp, "localfs"), "zip", classes)
+        os.replace(part, jar)
+    return jar
+
+
 def default_parallelism() -> int:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     try:
@@ -80,6 +142,12 @@ def get_spark(
     builder = SparkSession.builder.appName(app_name).master(
         master or f"local[{cpus}]"
     )
+    for k, v in _session_conf(cpus, extra_conf).items():
+        builder = builder.config(k, v)
+    return builder.getOrCreate()
+
+
+def _session_conf(cpus: int, extra_conf: dict[str, str] | None) -> dict[str, str]:
     conf = dict(_BASE_CONF)
     # Start shuffle width at core count; AQE coalesces below it when the
     # data is small and a cluster deployment overrides it upward.
@@ -87,6 +155,13 @@ def get_spark(
     conf["spark.default.parallelism"] = str(cpus)
     if extra_conf:
         conf.update(extra_conf)
-    for k, v in conf.items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
+    jar = _localfs_jar()
+    if jar is not None:
+        for k, v in _LOCALFS_CONF.items():
+            conf.setdefault(k, v)
+        # Local-mode executors run in the driver JVM, so its class path
+        # serves them too; spark.executor.extraClassPath would only add
+        # the jar to every task's class loader as well.
+        k = "spark.driver.extraClassPath"
+        conf[k] = os.pathsep.join(filter(None, (conf.get(k), jar)))
+    return conf
