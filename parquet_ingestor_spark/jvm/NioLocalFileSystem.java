@@ -11,6 +11,7 @@ import java.util.Set;
 import org.apache.hadoop.conf.Configuration;
 import org.apache.hadoop.fs.ChecksumFs;
 import org.apache.hadoop.fs.DelegateToFileSystem;
+import org.apache.hadoop.fs.FileStatus;
 import org.apache.hadoop.fs.FsConstants;
 import org.apache.hadoop.fs.FsServerDefaults;
 import org.apache.hadoop.fs.LocalFileSystem;
@@ -20,13 +21,19 @@ import org.apache.hadoop.fs.local.LocalConfigKeys;
 import org.apache.hadoop.fs.permission.FsPermission;
 
 /**
- * Hadoop's checksummed local filesystem with permissions set in-process.
+ * Hadoop's checksummed local filesystem with permissions and link status
+ * resolved in-process.
  *
  * <p>Without libhadoop (the pyspark wheel never ships it),
  * {@link RawLocalFileSystem#setPermission} forks {@code chmod} for every
- * file, {@code .crc} sidecar and directory a write creates. {@link Raw}
- * applies the same permission bits through {@code java.nio}; everything
- * else, the {@code .crc} checksum layer included, is Hadoop's own code.
+ * file, {@code .crc} sidecar and directory a write creates, and
+ * {@link RawLocalFileSystem#getFileLinkStatus} forks {@code readlink} for
+ * every path a {@code FileContext} rename checks (eight per streaming
+ * checkpoint log entry). {@link Raw} applies the same permission bits
+ * through {@code java.nio} and answers link status for non-links with
+ * {@code getFileStatus}; sticky bits and real symlinks go to Hadoop's
+ * forking code. Everything else, the {@code .crc} checksum layer
+ * included, is Hadoop's own code.
  * Bind it to {@code file://} with {@code fs.file.impl} (FileSystem API)
  * and {@code fs.AbstractFileSystem.file.impl} = {@link Fs} (FileContext
  * API, used by streaming checkpoints).
@@ -36,7 +43,7 @@ public class NioLocalFileSystem extends LocalFileSystem {
     super(new Raw());
   }
 
-  /** RawLocalFileSystem whose setPermission does not fork. */
+  /** RawLocalFileSystem whose setPermission and getFileLinkStatus do not fork. */
   public static class Raw extends RawLocalFileSystem {
     // OWNER_READ .. OTHERS_EXECUTE: mode bits 0400 down to 0001.
     private static final PosixFilePermission[] BITS = PosixFilePermission.values();
@@ -60,6 +67,22 @@ public class NioLocalFileSystem extends LocalFileSystem {
         }
       }
       super.setPermission(p, permission);
+    }
+
+    /**
+     * Hadoop's answer without the {@code readlink} fork. Hadoop runs
+     * {@code readlink} on the path string; for a path that is not a
+     * symlink (and for every qualified {@code file:/...} string, which
+     * never names a file) the target is empty and it returns
+     * {@code getFileStatus(f)}, a missing path raising the same
+     * {@code FileNotFoundException}. A real symlink goes to Hadoop's code.
+     */
+    @Override
+    public FileStatus getFileLinkStatus(Path f) throws IOException {
+      if (Files.isSymbolicLink(pathToFile(f).toPath())) {
+        return super.getFileLinkStatus(f);
+      }
+      return getFileStatus(f);
     }
   }
 

@@ -36,7 +36,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
@@ -76,21 +76,27 @@ class PipelineConfig:
     # O9 KeyFunc analog: SQL expressions computing the partition
     # columns; None = the reference's default time-partitioned layout.
     key_exprs: dict[str, str] | None = None
-    # O23 payload sampling: log one input payload every N rows (0 = off).
+    # O23 payload sampling: log one input payload every N micro-batches
+    # (0 = off).
     payload_log_every: int = 0
     payload_log_max_chars: int = 4096  # reference truncates at 4 KiB
     extra_writer_options: dict[str, str] = field(default_factory=dict)
 
 
+def _time_partition_cols(ts_col: str) -> dict[str, Column]:
+    return {
+        "year": F.year(ts_col),
+        "month": F.month(ts_col),
+        "day": F.dayofmonth(ts_col),
+        "hour": F.hour(ts_col),
+    }
+
+
 def with_time_partitions(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     """Derive the year/month/day/hour partition columns (UTC — the
-    session timezone is pinned; reference computes keys with t.UTC())."""
-    return (
-        df.withColumn("year", F.year(ts_col))
-        .withColumn("month", F.month(ts_col))
-        .withColumn("day", F.dayofmonth(ts_col))
-        .withColumn("hour", F.hour(ts_col))
-    )
+    session timezone is pinned; reference computes keys with t.UTC()).
+    One ``withColumns`` call, so the plan is analysed once."""
+    return df.withColumns(_time_partition_cols(ts_col))
 
 
 def ingest_batch(
@@ -140,19 +146,22 @@ def write_batch(
     commit-batch-then-ack ordering (ingestor/ingestor.go:569-609).
     """
     cfg = cfg or PipelineConfig()
-    good = good.withColumn("batch_id", F.lit(batch_id))
     ts = cfg.timestamp_col
+    # batch_id first, then the time columns, in one plan analysis
+    cols = {"batch_id": F.lit(batch_id)}
     if cfg.key_exprs:
-        # user-supplied KeyFunc (reference: ingestor/ingestor.go:23-29):
-        # arbitrary partition expressions instead of the time layout
-        for name, expr in cfg.key_exprs.items():
-            good = good.withColumn(name, F.expr(expr))
         part_cols = (*cfg.key_exprs.keys(), "batch_id")
     elif ts in good.columns:
-        good = with_time_partitions(good, ts)
+        cols.update(_time_partition_cols(ts))
         part_cols = (*PARTITION_COLS, "batch_id")
     else:
         part_cols = ("batch_id",)
+    good = good.withColumns(cols)
+    # user-supplied KeyFunc (reference: ingestor/ingestor.go:23-29):
+    # arbitrary partition expressions instead of the time layout, added
+    # one by one since a later one may name an earlier one
+    for name, expr in (cfg.key_exprs or {}).items():
+        good = good.withColumn(name, F.expr(expr))
     (
         good.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -328,12 +337,13 @@ def start_stream_ingest(
         # write would re-read and re-parse the source files.
         batch_df.persist()
         try:
-            if cfg.payload_log_every > 0:
+            if cfg.payload_log_every > 0 and batch_id % cfg.payload_log_every == 0:
                 # O23 payload sampling (reference:
                 # ingestor/ingestor.go:699-704, truncated at 4 KiB):
-                # cheap driver-side peek, never a full scan.
+                # cheap driver-side peek, never a full scan, and a job
+                # only on the sampled batches.
                 sample = batch_df.select("value").limit(1).collect()
-                if sample and batch_id % cfg.payload_log_every == 0:
+                if sample:
                     print(
                         f"[pipeline] batch={batch_id} payload sample: "
                         f"{sample[0].value[: cfg.payload_log_max_chars]}"

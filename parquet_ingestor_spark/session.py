@@ -15,9 +15,12 @@ Design notes (100 TB target, tested on local[32]):
 - ``file://`` is bound to ``jvm/NioLocalFileSystem.java``: without
   libhadoop (never shipped in the pyspark wheel) Hadoop's local
   filesystem forks ``chmod`` for every file, ``.crc`` sidecar and
-  directory a write or a streaming checkpoint creates; the shim sets the
-  same bits in-process. It is compiled once per source version with the
-  JDK's ``javac``; a JRE-only install gets Hadoop's own local filesystem.
+  directory a write or a streaming checkpoint creates, and ``readlink``
+  for every path a checkpoint log's rename checks; the shim sets the
+  same bits and resolves link status in-process (sticky bits and real
+  symlinks fall back to Hadoop's code). It is compiled once per source
+  version with the JDK's ``javac``; a JRE-only install gets Hadoop's own
+  local filesystem.
 """
 
 from __future__ import annotations

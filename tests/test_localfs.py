@@ -1,7 +1,7 @@
 """The in-process local filesystem (``jvm/NioLocalFileSystem.java``):
 bound to ``file://`` for both Hadoop entry points, same permission bits
-as ``chmod``, ``.crc`` sidecars written and verified, and no ``chmod``
-process forked by an ingest."""
+as ``chmod``, same link status as Hadoop's, ``.crc`` sidecars written
+and verified, and no shell command forked by an ingest."""
 
 from __future__ import annotations
 
@@ -54,6 +54,73 @@ def test_set_permission_matches_chmod(spark, tmp_path, mode):
         subprocess.run(["chmod", f"{mode:04o}", theirs], check=True)
         got, want = (os.stat(p).st_mode & 0o7777 for p in (ours, theirs))
         assert got == want, (kind, oct(mode), oct(got), oct(want))
+
+
+def _status(st):
+    return (
+        st.getPath().toString(), st.getLen(), st.isDirectory(), st.isSymlink(),
+        st.getModificationTime(), st.getPermission().toString(),
+    )
+
+
+def test_link_status_matches_hadoop(spark, tmp_path):
+    if session._javac() is None:
+        pytest.skip("no JDK compiler: Hadoop's own local filesystem is used")
+    hadoop, conf = _hadoop(spark)
+    raw = hadoop.fs.FileSystem.getLocal(conf).getRawFileSystem()
+    # answered by the shim, not inherited from Hadoop's forking code
+    assert "getFileLinkStatus" in {m.getName() for m in raw.getClass().getDeclaredMethods()}
+    ours = hadoop.fs.FileContext.getLocalFSFileContext(conf).getDefaultFileSystem()
+    stock = hadoop.fs.RawLocalFileSystem()
+    stock.initialize(spark._jvm.java.net.URI.create("file:///"), conf)
+    (tmp_path / "file").write_text("abc")
+    (tmp_path / "dir").mkdir()
+    (tmp_path / "link").symlink_to(tmp_path / "file")
+    for name in ("file", "dir", "link"):
+        # qualified, as FileContext hands paths to the filesystem
+        path = hadoop.fs.Path(f"file:{tmp_path / name}")
+        assert _status(ours.getFileLinkStatus(path)) == _status(
+            stock.getFileLinkStatus(path)
+        ), name
+    missing = hadoop.fs.Path(f"file:{tmp_path / 'missing'}")
+    for fs in (ours, stock):
+        with pytest.raises(Exception, match="java.io.FileNotFoundException"):
+            fs.getFileLinkStatus(missing)
+
+
+def test_overwrite_rename_moves_crc_sidecar(spark, tmp_path):
+    """The checkpoint log's commit: a temp file renamed over the entry
+    with ``OVERWRITE``; the sidecar must follow it."""
+    jvm, (hadoop, conf) = spark._jvm, _hadoop(spark)
+    gateway = spark.sparkContext._gateway
+    fc = hadoop.fs.FileContext.getLocalFSFileContext(conf)
+    log = tmp_path / "commits"
+    log.mkdir()
+
+    def _path(name):
+        return hadoop.fs.Path(f"file:{log / name}")
+
+    def _write(name, body):
+        out = fc.create(
+            _path(name),
+            jvm.java.util.EnumSet.of(hadoop.fs.CreateFlag.CREATE),
+            gateway.new_array(hadoop.fs.Options.CreateOpts, 0),
+        )
+        out.write(body)
+        out.close()
+
+    _write("0", b"v1 old entry")
+    _write(".0.tmp", b"v1 new entry, longer")
+    opts = gateway.new_array(hadoop.fs.Options.Rename, 1)
+    opts[0] = hadoop.fs.Options.Rename.OVERWRITE
+    fc.rename(_path(".0.tmp"), _path("0"), opts)
+    assert sorted(os.listdir(log)) == [".0.crc", "0"]
+    assert (log / "0").read_bytes() == b"v1 new entry, longer"
+    # the moved sidecar is the new entry's: a checksummed read passes
+    stream = fc.open(_path("0"))
+    got = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+    stream.close()
+    assert got == b"v1 new entry, longer"
 
 
 def _walk(root):
@@ -156,16 +223,26 @@ spark.stop()
 """
 
 
-def test_stream_ingest_forks_no_chmod(tmp_path):
+# Hadoop's local-filesystem shell-outs without libhadoop: chmod
+# (setPermission), readlink (getFileLinkStatus), ls (a status's owner
+# and permission) and stat (link status when the deprecated path is off).
+_SHELL_OUTS = ("chmod", "readlink", "ls", "stat")
+
+
+def test_stream_ingest_forks_no_shell(tmp_path):
     """Hadoop's local filesystem without libhadoop forks ``chmod`` for
-    every file, sidecar and directory (~160 for this one-file drain)."""
+    every file, sidecar and directory (~160 for this one-file drain)
+    and ``readlink`` for every path a checkpoint log's rename checks
+    (32 for this drain once the chmod forks were gone: 8 per log entry,
+    for metadata and for one batch's sources, offsets and commits)."""
     if session._javac() is None:
         pytest.skip("no JDK compiler: Hadoop's own local filesystem is used")
-    bindir, log = tmp_path / "bin", str(tmp_path / "chmod.log")
+    bindir, log = tmp_path / "bin", str(tmp_path / "spawns.log")
     bindir.mkdir()
-    spy = bindir / "chmod"
-    spy.write_text(f'#!/bin/sh\necho "$@" >> {log}\nexec {shutil.which("chmod")} "$@"\n')
-    spy.chmod(0o755)
+    for cmd in _SHELL_OUTS:
+        spy = bindir / cmd
+        spy.write_text(f'#!/bin/sh\necho "{cmd} $@" >> {log}\nexec {shutil.which(cmd)} "$@"\n')
+        spy.chmod(0o755)
     script = textwrap.dedent(_DRAIN).format(
         repo=_REPO, tests=os.path.join(_REPO, "tests"), log=log,
         landing=str(tmp_path / "landing"), out=str(tmp_path / "out"),

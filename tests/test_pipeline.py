@@ -155,6 +155,30 @@ def test_stream_ingest_failed_write_releases_batch_cache(
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def test_stream_ingest_payload_sample_cadence(spark, dirs, capsys):
+    """``payload_log_every`` counts micro-batches: with 2, batches 0
+    and 2 of three print a sample and batch 1 does not."""
+    landing, out, chk = dirs
+    os.makedirs(landing)
+    for i in range(3):
+        _write_landing_file(landing, f"{i}.json", 10, offset=100 * i)
+    q = start_stream_ingest(
+        spark, landing, out, chk, RECORD_SCHEMA,
+        PipelineConfig(
+            flush_interval="1 second", max_files_per_trigger=1, payload_log_every=2
+        ),
+    )
+    _run_until_drained(q)
+    batches = spark.read.parquet(f"{out}/data").select("batch_id").distinct()
+    assert batches.count() == 3
+    sampled = [
+        line.split()[1]
+        for line in capsys.readouterr().out.splitlines()
+        if "payload sample:" in line
+    ]
+    assert sampled == ["batch=0", "batch=2"]
+
+
 def test_parse_envelopes_split(spark):
     raw = spark.createDataFrame(
         [
