@@ -93,16 +93,14 @@ HEADLINE = (
 # corpus_dsir_weights (md5 feature hashing) is the oracle twin the
 # driver gate checks; _fast (xxhash64) is what production runs — both
 # stay under bench watch so the twins can't silently diverge in cost.
-# HEADLINE ENTRIES TIME THE PRODUCTION PATHS (round-7 verdict #2):
-# for the four entries whose registered md5/expression twins carry an
-# oracle-verifiability tax that exceeded 1.5x of the production probe
-# on the driver bench (minhash 4.0x, ivf/adc/ivfpq 2.2-2.6x in
-# BENCH_r07), the headline keys below now time the PRODUCTION
-# serving paths via _PROD_OVERRIDES — "the oracle doesn't need to be
-# the thing we time". The registered twins stay under bench watch as
-# `*_twin` scaling probes so the tax remains on record and can't
-# silently grow; the driver's sf0.01 CORRECTNESS gate still
-# hash-checks the twins every time they rotate through the window.
+# Headline entries time the production paths: for the four entries
+# whose registered md5/expression twins carry an oracle-verifiability
+# tax over 1.5x of the production path (minhash 4.0x, ivf/adc/ivfpq
+# 2.2-2.6x in BENCH_r07), the headline keys time the production serving
+# paths via the overrides in _extra_probes — the oracle doesn't need to
+# be the thing we time. The registered twins stay under bench watch as
+# `*_twin` scaling probes so the tax stays on record and can't silently
+# grow; the driver's sf0.01 correctness gate still hash-checks them.
 # sim_recall_eval is deliberately NOT a headline entry: it is an
 # offline index audit whose cost is three exact-baseline corpus scans
 # plus driver-side codebook fits — benching it would measure the
@@ -133,11 +131,11 @@ HEADLINE = (
 
 def _extra_probes():
     """Bench-only scaling probes (NOT registry entries — they measure
-    the registered pipelines at different knob settings, round-4
-    verdict #6): the iterative graph entries at 2x their registered
-    round counts. The lineage-truncation contract claims per-round
-    cost is flat (constant-size plans, no lineage growth); these
-    datapoints let a reviewer check it numerically:
+    the registered pipelines at different knob settings): the iterative
+    graph entries at 2x their registered round counts. The
+    lineage-truncation contract claims per-round cost is flat
+    (constant-size plans, no lineage growth); these datapoints let a
+    reviewer check it numerically:
     time(x2) - time(x1) ~= x1's per-round marginal cost × rounds,
     i.e. x2 < 2× x1 (the fixed edge-mining cost amortizes), and never
     superlinear."""
@@ -149,10 +147,8 @@ def _extra_probes():
         pagerank_parts,
     )
 
-    # Data-scaling probes for the dedup/ANN family (r5 verdict #8's
-    # second datapoint, complementing the 10×-rows ⇒ 1.49×-wall
-    # measurement of commit d33359c): the SAME pipelines on a 2×-rows
-    # derived corpus (each row unioned with an id-shifted,
+    # Data-scaling probes for the dedup/ANN family: the SAME pipelines
+    # on a 2×-rows derived corpus (each row unioned with an id-shifted,
     # text-perturbed twin so the distinct-ratio router keeps the
     # production direct path). Banded LSH claims near-linear cost in
     # rows; compare x2rows against the headline dedup_minhash_lsh /
@@ -166,12 +162,15 @@ def _extra_probes():
         ivf_search,
     )
 
+    import atexit
+    import shutil
     import tempfile
 
-    # fresh per-process scratch dir: a fixed path + _SUCCESS marker
-    # would silently reuse STALE twins after testdata regeneration or
-    # a derivation change (round-6 self-review finding)
+    # fresh per-process scratch dir, removed at interpreter exit: a
+    # fixed path + _SUCCESS marker would silently reuse STALE twins
+    # after testdata regeneration or a derivation change
     _x2_cache = tempfile.mkdtemp(prefix="spark_graft_x2rows_")
+    atexit.register(shutil.rmtree, _x2_cache, ignore_errors=True)
 
     def _x2_table(s, d, name, derive):
         # materialize the derived corpus ONCE per bench process so the
@@ -211,10 +210,10 @@ def _extra_probes():
         return _x2_table(s, d, "embeddings", derive)
 
     # corpus_bloom_seen's REGISTERED entry pays an oracle tax (md5 bit
-    # positions, ~+0.8 s at sf0.1 vs r5's xxhash64 build) so the
-    # driver can hash-check the whole bitmap/probe pipeline; this
-    # probe keeps the PRODUCTION hasher's cost visible so the delta
-    # reads as the deliberate twin rule, not a regression.
+    # positions, ~+0.8 s at sf0.1 vs an xxhash64 build) so the driver
+    # can hash-check the whole bitmap/probe pipeline; this probe keeps
+    # the PRODUCTION hasher's cost visible so the delta reads as the
+    # deliberate twin rule, not a regression.
     from parquet_ingestor_spark.operators.dedup import shingle_col
     from parquet_ingestor_spark.operators.sketches import (
         BLOOM_BITS,
@@ -243,10 +242,10 @@ def _extra_probes():
     def _minhash_prod(s, d):
         return minhash_lsh_pairs(table(s, d, "documents"))
 
-    # same oracle-tax visibility rule for the round-6 ANN twins: the
-    # registered sim_ivf_topk / pq_adc_topk / sim_ivfpq_topk now run
-    # expression twins the driver can hash-check; these probes keep
-    # the numpy single-pass serving paths' costs on record so the
+    # same oracle-tax visibility rule for the ANN twins: the registered
+    # sim_ivf_topk / pq_adc_topk / sim_ivfpq_topk run expression twins
+    # the driver can hash-check; these probes keep the numpy
+    # single-pass serving paths' costs on record so the
     # twin-vs-serving delta reads as the deliberate rule, not a
     # regression.
     from parquet_ingestor_spark.operators.similarity import (
@@ -255,8 +254,8 @@ def _extra_probes():
     )
 
     prod_overrides = {
-        # the four headline keys the round-7 verdict moved to their
-        # production paths (see the HEADLINE comment above)
+        # the four headline keys timed on their production paths (see
+        # the HEADLINE comment above)
         "dedup_minhash_lsh": _minhash_prod,
         "sim_ivf_topk": lambda s, d: ivf_search(
             table(s, d, "embeddings"), n_lists=IVF_K
@@ -272,7 +271,7 @@ def _extra_probes():
         # oracle-tax visibility (inverse of corpus_bloom_seen_prod,
         # whose registered entry met the 1.5x bar and stays headline):
         # these probes time the REGISTERED md5/expression twins whose
-        # headline slots now run the production paths
+        # headline slots run the production paths
         "dedup_minhash_lsh_twin": REGISTRY["dedup_minhash_lsh"].fn,
         "sim_ivf_topk_twin": REGISTRY["sim_ivf_topk"].fn,
         "pq_adc_topk_twin": REGISTRY["pq_adc_topk"].fn,
@@ -280,12 +279,12 @@ def _extra_probes():
         "graph_pagerank_x2rounds": lambda s, d: pagerank_parts(
             s, d, 2 * _PAGERANK_ITERS
         ),
-        # per-stage breakdown (round-7 verdict #4): the mining stage
-        # alone (basket pair expansion + canonical-dedup shuffle, no
-        # checkpoint). With x1/x2rounds this decomposes the entry:
-        # rounds-marginal = x2 - x1; mining = this probe; the
-        # remainder is checkpoint materialization + final sort. Lets
-        # round 9 tell a mining regression from round-cost drift.
+        # per-stage breakdown: the mining stage alone (basket pair
+        # expansion + canonical-dedup shuffle, no checkpoint). With
+        # x1/x2rounds this decomposes the entry: rounds-marginal =
+        # x2 - x1; mining = this probe; the remainder is checkpoint
+        # materialization + final sort. Tells a mining regression from
+        # round-cost drift.
         "graph_pagerank_mine_stage": lambda s, d: order_copair_stream(
             s, d
         )
@@ -313,47 +312,137 @@ def _extra_probes():
 SPIN_FLOOR_MS = 35.0
 
 
+def _vm_dirty_pages() -> int:
+    # nr_dirty + nr_writeback from /proc/vmstat: a slow run at flat
+    # load and zero GC delta leaves kernel page-cache writeback as the
+    # prime suspect, and this stamp makes that attribution mechanical
+    # (best-effort; 0 if unreadable).
+    try:
+        with open("/proc/vmstat") as f:
+            vals = {
+                k: int(v)
+                for k, v in (ln.split() for ln in f)
+                if k in ("nr_dirty", "nr_writeback")
+            }
+        return vals.get("nr_dirty", 0) + vals.get("nr_writeback", 0)
+    except (OSError, ValueError):
+        return 0
+
+
+def _cpu_steal_jiffies() -> int | None:
+    # cumulative steal jiffies from /proc/stat: on a virtualized host,
+    # CPU a neighbor VM takes does NOT show up in load1m, so a per-run
+    # steal DELTA is the only mechanical way to attribute that class of
+    # drift. None if unreadable (not 0: a 0 fallback would turn one
+    # failed endpoint read into a full-counter-sized or large-negative
+    # delta that reads as real steal; timed_run records -1 instead).
+    try:
+        with open("/proc/stat") as f:
+            return int(f.readline().split()[8])
+    except (OSError, IndexError, ValueError):
+        return None
+
+
+def _cpu_spin_ms() -> float:
+    # fixed 500k-iteration pure-Python loop, timed immediately before
+    # each run and OUTSIDE the perf_counter window: a direct sample of
+    # how fast this guest's CPU actually executes right now.
+    # Hypervisor frequency/memory-bandwidth contention is invisible to
+    # /proc/stat steal (runs 4-11x their clean record at near-zero
+    # steal have been recorded), so steal stamps alone cannot clear a
+    # slow run. The spin is an absolute yardstick: ~10-20 ms on a
+    # healthy box of this class, 3-10x that when the host is contended,
+    # whether or not the contention is billed as steal.
+    t0 = time.perf_counter()
+    s = 0
+    for i in range(500_000):
+        s += i
+    return round((time.perf_counter() - t0) * 1000.0, 1)
+
+
+def _gc_total_ms(spark) -> int:
+    # cumulative stop-the-world time across all JVM collectors; per-run
+    # DELTAS separate "this run paid GC" from "this run's plan is slow"
+    # (a run at low machine load can still stall on heap pressure the
+    # suite accumulated).
+    beans = (
+        spark.sparkContext._jvm.java.lang.management.ManagementFactory
+        .getGarbageCollectorMXBeans()
+    )
+    return sum(beans.get(i).getCollectionTime() for i in range(beans.size()))
+
+
+def drop_persisted(spark) -> None:
+    """Unpersist every RDD the finished run persisted.
+
+    The iterative entries (pagerank, k-core, CC) truncate lineage via
+    localCheckpoint; those blocks are NOT in the catalog cache and
+    otherwise accumulate run over run (each run builds its own fresh
+    checkpoints), evicting and spilling storage memory — measured as
+    2-6× swings on the graph entries. A finished run's blocks are never
+    referenced again."""
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist(False)
+
+
+def timed_run(spark, fn, sf_dir) -> dict:
+    """One run of ``fn(spark, sf_dir)``: execute its full physical plan
+    into the noop sink and return ``{"load1m", "vm_dirty",
+    "cpu_spin_ms", "wall_s", "gc_ms", "cpu_steal"}``.
+
+    The machine stamps are taken just before the run so a slow run can
+    be attributed to machine pressure or to the plan: 1-minute load,
+    dirty+writeback pages, spin-probe ms, then the steal-jiffies and GC
+    deltas across the run (steal is -1 when either /proc/stat read
+    failed). Only the noop-sink execution is timed. Persisted RDDs are
+    dropped afterwards (``drop_persisted``)."""
+    rec = {
+        "load1m": round(os.getloadavg()[0], 2),
+        "vm_dirty": _vm_dirty_pages(),
+        "cpu_spin_ms": _cpu_spin_ms(),
+    }
+    s0 = _cpu_steal_jiffies()
+    g0 = _gc_total_ms(spark)
+    t0 = time.perf_counter()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    rec["wall_s"] = round(time.perf_counter() - t0, 3)
+    rec["gc_ms"] = _gc_total_ms(spark) - g0
+    s1 = _cpu_steal_jiffies()
+    rec["cpu_steal"] = -1 if s0 is None or s1 is None else s1 - s0
+    drop_persisted(spark)
+    return rec
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
     _ensure_loaded()
-    # 23 queries × several codegen units each overflow the default
-    # 100-entry generated-class cache — evictions force janino
-    # recompiles of the wide-aggregate plans mid-bench.
-    spark = get_spark(
-        app_name="pqing-bench",
-        extra_conf={"spark.sql.codegen.cache.maxEntries": "2000"},
-    )
+    spark = get_spark(app_name="pqing-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
-    # Per-query warm-then-measure, best-of-3. Warm at the measured SF
-    # (AQE picks different join strategies per SF → different codegen
-    # units), immediately before timing (a global warm-everything pass
-    # leaves enough heap/codegen pressure to skew later queries), and
-    # take the min of three timed runs (AQE re-planning occasionally
-    # recompiles, and JIT needs iterations on interpreted-expression
-    # paths; min = steady-state data-processing cost). Persisted
-    # blocks a query materialized for its own DAG are dropped before
-    # the next query so cache churn never bleeds across entries.
-    # All three timed runs are reported (``runs``) so a reviewer can
-    # separate load noise (one outlier run) from a plan regression
-    # (all three slow); ``load_avg`` stamps machine pressure at start
-    # and end for the same reason. SPARK_GRAFT_ONLY=a,b,c filters the
-    # headline set for local iteration.
+    # Per-query warm-then-measure. Warm at the measured SF (AQE picks
+    # different join strategies per SF → different codegen units),
+    # immediately before timing (a global warm-everything pass leaves
+    # enough heap/codegen pressure to skew later queries), then three
+    # timed runs. Persisted blocks a query materialized for its own DAG
+    # are dropped before the next query so cache churn never bleeds
+    # across entries. All three timed runs are reported (``runs``, with
+    # index-aligned machine stamps) so a reviewer can separate load
+    # noise (one outlier run) from a plan regression (all three slow).
+    # SPARK_GRAFT_ONLY=a,b,c filters the entries for local iteration.
     only = os.environ.get("SPARK_GRAFT_ONLY")
     overrides, extra = _extra_probes()
     # INTERLEAVE the scaling/twin probes right after their headline
-    # counterparts instead of running them all at the end (round-8
-    # verdict #2): a full run's self-load ramps monotonically, so a
-    # tail-positioned twin probe was measured under peak pressure
-    # while its production counterpart ran near-idle — two rounds of
-    # "it's probably load" that the ordering itself manufactured.
-    # Probe names are prefixed by their headline entry by convention;
-    # unprefixed probes keep their tail position.
+    # counterparts instead of running them all at the end: a full run's
+    # self-load ramps monotonically, so a tail-positioned twin probe
+    # would be measured under peak pressure while its production
+    # counterpart ran near-idle. Probe names are prefixed by their
+    # headline entry by convention; unprefixed probes keep their tail
+    # position.
     by_head: dict[str, list[str]] = {}
     tail_probes: list[str] = []
     for p in extra:
@@ -368,226 +457,86 @@ def main() -> None:
     if only:
         names = tuple(q for q in names if q in set(only.split(",")))
     load0 = os.getloadavg()
-    timings: dict[str, float] = {}
-    runs: dict[str, list[float]] = {}
-    loads: dict[str, list[float]] = {}
-    gcs: dict[str, list[int]] = {}
-    dirty: dict[str, list[int]] = {}
-    steals: dict[str, list[int]] = {}
-    spins: dict[str, list[float]] = {}
-    rep_steal: dict[str, int] = {}
-    rep_spin: dict[str, float] = {}
-
-    def _vm_dirty_pages() -> int:
-        # nr_dirty + nr_writeback from /proc/vmstat: the round-9 log's
-        # sporadic 8-15 s single-run stalls showed FLAT load and ZERO
-        # GC delta, leaving kernel page-cache writeback as the prime
-        # suspect — this per-run stamp makes that attribution
-        # mechanical instead of argued (best-effort; 0 if unreadable).
-        try:
-            with open("/proc/vmstat") as f:
-                vals = {
-                    k: int(v)
-                    for k, v in (ln.split() for ln in f)
-                    if k in ("nr_dirty", "nr_writeback")
-                }
-            return vals.get("nr_dirty", 0) + vals.get("nr_writeback", 0)
-        except (OSError, ValueError):
-            return 0
-
-    def _cpu_steal_jiffies() -> int | None:
-        # cumulative steal jiffies from /proc/stat: on a virtualized
-        # host, CPU a neighbor VM takes does NOT show up in load1m
-        # (this session measured q10 at 3.4x its r8 cost at load 1.6
-        # while a probe showed ~1 steal jiffy per 2 user jiffies under
-        # load) — a per-run steal DELTA is the only mechanical way to
-        # attribute that class of drift. Best-effort: None if
-        # unreadable (r9 ADVICE: a 0 fallback turned a single failed
-        # endpoint read into a garbage delta — full-counter-sized or
-        # large-negative — that a reviewer could misread as real
-        # steal; the delta below records -1 when either endpoint
-        # failed, an explicit sentinel).
-        try:
-            with open("/proc/stat") as f:
-                return int(f.readline().split()[8])
-        except (OSError, IndexError, ValueError):
-            return None
-
-    def _cpu_spin_ms() -> float:
-        # fixed 500k-iteration pure-Python loop, timed immediately
-        # before each run and OUTSIDE the perf_counter window: a
-        # direct sample of how fast this guest's CPU actually executes
-        # right now. Round 10 observed runs 4-11x their clean record
-        # with near-ZERO steal delta (graph_triangles 17.9 s at 7
-        # jiffies; dedup_exact 5.6 s at 17) — hypervisor frequency/
-        # memory-bandwidth contention is invisible to /proc/stat
-        # steal, so the steal stamps alone cannot clear a slow run.
-        # The spin is an absolute yardstick: ~10-20 ms on a healthy
-        # box of this class, 3-10x that when the host is contended,
-        # regardless of whether the contention is billed as steal.
-        t0 = time.perf_counter()
-        s = 0
-        for i in range(500_000):
-            s += i
-        return round((time.perf_counter() - t0) * 1000.0, 1)
-
-    def _gc_total_ms() -> int:
-        # cumulative stop-the-world time across all JVM collectors;
-        # per-run DELTAS separate "this run paid GC" from "this run's
-        # plan is slow" — the last unattributable axis in the twin
-        # readings (load was made per-run in round 9, but a run at
-        # low machine load can still stall on heap pressure the
-        # suite accumulated).
-        beans = (
-            spark.sparkContext._jvm.java.lang.management.ManagementFactory
-            .getGarbageCollectorMXBeans()
-        )
-        return sum(
-            beans.get(i).getCollectionTime() for i in range(beans.size())
-        )
+    records: dict[str, list[dict]] = {}
+    reported: dict[str, dict] = {}
     for name in names:
-        if name in overrides:
-            fn = overrides[name]  # headline times the production path
-        else:
-            fn = extra[name] if name in extra else REGISTRY[name].fn
+        # headline keys in `overrides` time the production path
+        fn = overrides.get(name) or extra.get(name) or REGISTRY[name].fn
         try:
-            w0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             # long-running entries (the graph family) JIT-compile
-            # enough generated code that the FIRST timed run still
-            # carried 20-40% of compile/GC noise in r4/r5 details —
-            # warm slow entries twice so every timed run is
-            # steady-state (r5 verdict #5's spread target)
-            if time.perf_counter() - w0 > 2.0:
-                for rdd in (
-                    spark.sparkContext._jsc.getPersistentRDDs().values()
-                ):
-                    rdd.unpersist(False)
-                fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
+            # enough generated code that a single warm-up still left
+            # 20-40% compile/GC noise in the first timed run — warm
+            # slow entries twice so every timed run is steady-state
+            if timed_run(spark, fn, sf_dir)["wall_s"] > 2.0:
+                timed_run(spark, fn, sf_dir)
         except Exception:
             pass  # warm-up failures surface in the timed run
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist(False)  # drop the warm-up's checkpoints too
-        # every per-run stamp list resets together with runs (r9
-        # ADVICE: the setdefault form never reset, so a name appearing
-        # twice in `names` would accumulate 6 stamps against a 3-run
-        # list and silently break the documented index alignment)
-        runs[name] = []
-        loads[name] = []
-        gcs[name] = []
-        dirty[name] = []
-        steals[name] = []
-        spins[name] = []
-        for _ in range(3):
-            # stamp 1-minute load immediately before EACH timed run
-            # (round-8 verdict #2): start/end-of-suite stamps couldn't
-            # attribute a slow entry to machine pressure vs plan
-            # regression — per-run stamps make that separation
-            # mechanical for any reviewer of bench_detail.json.
-            loads[name].append(round(os.getloadavg()[0], 2))
-            dirty[name].append(_vm_dirty_pages())
-            spins[name].append(_cpu_spin_ms())
-            s0 = _cpu_steal_jiffies()
-            g0 = _gc_total_ms()
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs[name].append(round(time.perf_counter() - t0, 3))
-            gcs[name].append(_gc_total_ms() - g0)
-            s1 = _cpu_steal_jiffies()
-            steals[name].append(
-                -1 if s0 is None or s1 is None else s1 - s0
-            )
-            # The iterative entries (pagerank, k-core, CC) truncate
-            # lineage via localCheckpoint; those blocks are NOT in
-            # the catalog cache and otherwise accumulate run over run
-            # (each timed run builds its own fresh checkpoints),
-            # evicting and spilling storage memory — measured as
-            # 2-6× swings on the graph entries. A finished run's
-            # blocks are never referenced again, so drop them before
-            # the next run starts.
-            for rdd in (
-                spark.sparkContext._jsc.getPersistentRDDs().values()
-            ):
-                rdd.unpersist(False)
+        drop_persisted(spark)  # a failed warm-up's checkpoints too
+        records[name] = [timed_run(spark, fn, sf_dir) for _ in range(3)]
         # min-of-3 = steady-state cost for fast entries; for slow
-        # entries (>2 s at the min) report the MEDIAN instead — r5's
-        # only unexplained mover was graph_link_scores +22% with
-        # untouched code, i.e. tail-run noise that min alone did not
-        # absorb on long-running plans (round-5 verdict #5).
-        order = sorted(range(len(runs[name])), key=runs[name].__getitem__)
-        rep_idx = order[1] if runs[name][order[0]] > 2.0 else order[0]
-        timings[name] = runs[name][rep_idx]
-        # steal delta of the REPORTED run (the one `timings` keeps):
-        # feeds the headline flag below, so a reviewer of BENCH_r{N}
-        # alone can tell "this entry's number was steal-contaminated"
-        # from "this entry's plan regressed"
-        rep_steal[name] = steals[name][rep_idx]
-        rep_spin[name] = spins[name][rep_idx]
+        # entries (>2 s at the min) report the MEDIAN instead: min
+        # alone did not absorb tail-run noise on long-running plans.
+        walls = [r["wall_s"] for r in records[name]]
+        order = sorted(range(len(walls)), key=walls.__getitem__)
+        rep_idx = order[1] if walls[order[0]] > 2.0 else order[0]
+        reported[name] = records[name][rep_idx]
         spark.catalog.clearCache()
         # A full 60+-entry run accumulates JVM pressure (codegen
-        # classes, shuffle buffers, finalizable blocks) that the r4/r5
-        # detail logs show as 2x tail-entry swings (graph_kcore ran
-        # 10.6/8.2/5.6 s late in a full run vs a stable 3.5 s in any
-        # short run). One explicit GC per entry keeps each entry's
-        # first timed run comparable to its isolated cost.
+        # classes, shuffle buffers, finalizable blocks) that shows as
+        # 2x tail-entry swings late in a full run. One explicit GC per
+        # entry keeps each entry's first timed run comparable to its
+        # isolated cost.
         spark.sparkContext._jvm.System.gc()
 
     # Scaling probes report separately: they measure the SAME pipelines
     # at different knobs, so folding them into the headline total would
     # double-count and break round-over-round comparability.
-    probes = {n: timings.pop(n) for n in extra if n in timings}
+    probes = {n: reported.pop(n)["wall_s"] for n in extra if n in reported}
+    timings = {n: r["wall_s"] for n, r in reported.items()}
     total = round(sum(timings.values()), 3)
-    # Output contract (round-3 post-mortem): the driver tail-captures
-    # stdout and parses the LAST one-line JSON; round 3's single line
-    # carried per-run arrays + load_avg, outgrew the capture window,
-    # and the driver recorded "parsed": null. So: the diagnostic
-    # detail (all three runs per query, machine load) goes on its own
-    # EARLIER line and into bench_detail.json, and the final line is
-    # the compact headline contract only (total + per-query best).
+    all_runs = [r for recs in records.values() for r in recs]
+
+    def per_run(key: str) -> dict[str, list]:
+        return {n: [r[key] for r in recs] for n, recs in records.items()}
+
+    # Output contract: the driver tail-captures stdout and parses the
+    # LAST one-line JSON, so the diagnostic detail (all three runs per
+    # query and their machine stamps) goes on its own EARLIER line and
+    # into bench_detail.json, and the final line is the compact
+    # headline contract only (total + per-query reported run).
     detail = {
-        "runs": runs,
-        # per-timed-run 1m load, index-aligned with "runs" (round-8
-        # verdict #2: separate machine pressure from plan regressions
-        # per entry, not per suite)
-        "load1m_runs": loads,
-        # per-timed-run driver-JVM stop-the-world GC milliseconds,
-        # index-aligned with "runs": a slow run with high gc_ms is
-        # suite heap pressure, not the entry's plan (local[N] runs
-        # executors in the driver JVM, so this covers task GC too)
-        "gc_ms_runs": gcs,
-        # per-timed-run kernel dirty+writeback PAGE count at run start,
-        # index-aligned with "runs": a slow run at flat load/GC but an
-        # elevated dirty-page stamp is the page-cache/writeback ramp
-        # the round-9 log left as the open attribution question
-        "vm_dirty_runs": dirty,
-        # per-timed-run /proc/stat steal-jiffies DELTA (10ms units),
-        # index-aligned with "runs": a slow run with a high steal
-        # delta is host-neighbor pressure this guest cannot see in
-        # load1m — the attribution axis this round's closing session
-        # needed when every entry drifted at single-digit load
-        "cpu_steal_runs": steals,
-        # per-timed-run CPU spin-probe milliseconds (fixed 500k-iter
-        # Python loop timed just before the run, outside the timed
-        # window), index-aligned with "runs": an absolute sample of
-        # guest CPU speed at that moment. Catches the contention class
-        # steal CANNOT see — round 10 recorded runs at 4-11x their
-        # clean cost with single-digit steal jiffies (host frequency /
-        # memory-bandwidth pressure is not billed as steal). A slow
-        # run whose spin stamp is ~3x the suite median is box, not
-        # plan.
-        "cpu_spin_ms_runs": spins,
+        "runs": per_run("wall_s"),
+        # every *_runs stamp below is per timed run, index-aligned
+        # with "runs": 1-minute load at run start
+        "load1m_runs": per_run("load1m"),
+        # driver-JVM stop-the-world GC milliseconds: a slow run with
+        # high gc_ms is suite heap pressure, not the entry's plan
+        # (local[N] runs executors in the driver JVM, so this covers
+        # task GC too)
+        "gc_ms_runs": per_run("gc_ms"),
+        # kernel dirty+writeback PAGE count at run start: a slow run at
+        # flat load/GC but an elevated dirty-page stamp is page-cache
+        # writeback
+        "vm_dirty_runs": per_run("vm_dirty"),
+        # /proc/stat steal-jiffies DELTA (10ms units): a slow run with
+        # a high steal delta is host-neighbor pressure this guest
+        # cannot see in load1m
+        "cpu_steal_runs": per_run("cpu_steal"),
+        # CPU spin-probe milliseconds (timed just before the run,
+        # outside the timed window): catches the contention steal
+        # CANNOT see (host frequency / memory-bandwidth pressure is not
+        # billed as steal). A slow run whose spin stamp is ~3x the
+        # suite median is box, not plan.
+        "cpu_spin_ms_runs": per_run("cpu_spin_ms"),
         "load_avg": {
             "start_1m": round(load0[0], 2),
             "end_1m": round(os.getloadavg()[0], 2),
         },
         "sf": sf,
         # scaling probes live HERE (and in bench_detail.json), not on
-        # the final line: BENCH_r06 recorded "parsed": null because
-        # the final line (61 queries + 10 probes, spaced separators)
-        # outgrew the driver's 2000-char tail capture and its HEAD was
-        # cut. The final line must stay self-contained inside the tail.
+        # the final line: 61 queries + 10 probes outgrow the driver's
+        # 2000-char tail capture and cut the line's HEAD. The final
+        # line must stay self-contained inside the tail.
         "scaling_probes": probes,
     }
     print(json.dumps({"bench_detail": detail}))
@@ -599,39 +548,37 @@ def main() -> None:
             json.dump(detail, f, indent=1)
     except OSError:
         pass  # detail file is best-effort; the stdout contract stands
-    # Machine-pressure aggregates ON the headline line (round-9
-    # verdict #2): the driver keeps only the last ~2000 chars of
-    # stdout, so bench_detail's per-run steal/GC stamps never reach
-    # the judge — PERF_r09 labeled hypervisor CPU steal as a 43-query
-    # regression for exactly this reason. steal_cpu_s = total stolen
+    # Machine-pressure aggregates ON the headline line, because the
+    # driver keeps only the last ~2000 chars of stdout and the per-run
+    # stamps in bench_detail never reach it. steal_cpu_s = total stolen
     # CPU-seconds across ALL timed runs (probes included; -1 sentinel
     # runs skipped); gc_ms = total driver-JVM stop-the-world ms;
     # steal_flagged = how many HEADLINE entries' reported runs carried
-    # >1 s of stolen CPU, worst offenders first (full per-run arrays
-    # stay in bench_detail.json).
-    valid_steal = [d for ds in steals.values() for d in ds if d >= 0]
+    # >1 s of stolen CPU, worst offenders first.
+    valid_steal = [r["cpu_steal"] for r in all_runs if r["cpu_steal"] >= 0]
     flagged = sorted(
-        ((rep_steal[n], n) for n in timings if rep_steal.get(n, 0) > 100),
+        (
+            (reported[n]["cpu_steal"], n)
+            for n in timings
+            if reported[n]["cpu_steal"] > 100
+        ),
         reverse=True,
     )
-    # spin-probe aggregates (same channel rationale as steal_cpu_s):
     # spin_ms_med = median spin across ALL timed runs, an absolute
     # box-speed reading (~10-20 ms healthy for this box class);
     # spin_flagged = headline entries whose REPORTED run's spin stamp
     # exceeded both 2x the suite median and SPIN_FLOOR_MS (that
     # entry's number was taken while the guest CPU itself was
-    # degraded — the attribution axis steal misses entirely when the
-    # host throttles frequency or memory bandwidth instead of
-    # descheduling vCPUs). The floor keeps a fast, quiet box from
-    # flagging jitter: at a 12 ms median, a 25 ms stamp is still a
-    # healthy reading.
-    all_spins = sorted(x for xs in spins.values() for x in xs)
+    # degraded). The floor keeps a fast, quiet box from flagging
+    # jitter: at a 12 ms median, a 25 ms stamp is still a healthy
+    # reading.
+    all_spins = sorted(r["cpu_spin_ms"] for r in all_runs)
     spin_med = all_spins[len(all_spins) // 2] if all_spins else 0.0
     spin_flagged = sorted(
         (
-            (rep_spin[n], n)
+            (reported[n]["cpu_spin_ms"], n)
             for n in timings
-            if rep_spin.get(n, 0.0) > max(2.0 * spin_med, SPIN_FLOOR_MS)
+            if reported[n]["cpu_spin_ms"] > max(2.0 * spin_med, SPIN_FLOOR_MS)
         ),
         reverse=True,
     )
@@ -642,7 +589,7 @@ def main() -> None:
         "queries": {n: round(t, 2) for n, t in timings.items()},
         "sf": sf,
         "steal_cpu_s": round(sum(valid_steal) / 100.0, 1),
-        "gc_ms": sum(sum(g) for g in gcs.values()),
+        "gc_ms": sum(r["gc_ms"] for r in all_runs),
         "steal_flagged": len(flagged),
         "steal_flagged_top": [n for _, n in flagged[:3]],
         "spin_ms_med": spin_med,
@@ -653,15 +600,14 @@ def main() -> None:
     # line measures ~1.7k chars, safely inside the driver's 2000-char
     # tail capture (full-precision timings are in bench_detail.json)
     line = json.dumps(out, separators=(",", ":"))
-    # never ship an unparseable headline again. Shrink order: first
-    # drop the flag-NAME lists (counts stay; names remain in
-    # bench_detail.json) — the per-query dict must survive intact,
-    # because the driver's round-over-round PERF comparison treats a
-    # query missing from the parsed line as dropped. Only then shrink
-    # the kept-query count (a fixed top-40 cut could still overflow
-    # with long entry names — round-7 advisory); worst case the line
-    # degrades to total + truncation marker only, which the driver
-    # can always parse.
+    # never ship an unparseable headline. Shrink order: first drop the
+    # flag-NAME lists (counts stay; names remain in bench_detail.json)
+    # — the per-query dict must survive intact, because the driver's
+    # round-over-round comparison treats a query missing from the
+    # parsed line as dropped. Only then shrink the kept-query count (a
+    # fixed top-40 cut could still overflow with long entry names);
+    # worst case the line degrades to total + truncation marker only,
+    # which the driver can always parse.
     for drop in ("spin_flagged_top", "steal_flagged_top"):
         if len(line) > 1900:
             out.pop(drop, None)

@@ -321,13 +321,10 @@ def start_stream_ingest(
     partitioned parquet, bad → DLQ) while keeping the file-sink commit
     semantics via the checkpoint.
     """
+    from .sources import jsonl_dir_source  # sources imports this module
+
     cfg = config or PipelineConfig()
-    raw = (
-        spark.readStream.format("json")
-        .schema(ENVELOPE_SCHEMA)
-        .option("maxFilesPerTrigger", cfg.max_files_per_trigger)
-        .load(landing_dir)
-    )
+    raw = jsonl_dir_source(spark, landing_dir, cfg.max_files_per_trigger)
 
     dlq_dir = f"{out_dir.rstrip('/')}/{cfg.dlq_suffix}"
     data_dir = f"{out_dir.rstrip('/')}/data"

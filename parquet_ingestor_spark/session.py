@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import pathlib
 import shutil
 import subprocess
 import tempfile
@@ -97,7 +98,8 @@ def _localfs_jar() -> str | None:
 
     The jar is named by the source's content hash, so an edited source
     rebuilds and concurrent builders of one version write the same bytes
-    (each to its own temp name, then an atomic rename)."""
+    (each to its own temp name, then an atomic rename); a build removes
+    the jars of earlier sources."""
     javac = _javac()
     if javac is None:
         return None
@@ -119,6 +121,10 @@ def _localfs_jar() -> str | None:
         )
         part = shutil.make_archive(os.path.join(tmp, "localfs"), "zip", classes)
         os.replace(part, jar)
+    # only the current source's jar is ever put on the class path; a
+    # concurrent builder may have removed a stale jar first
+    for old in set(pathlib.Path(build).glob("localfs-*.jar")) - {pathlib.Path(jar)}:
+        old.unlink(missing_ok=True)
     return jar
 
 

@@ -205,6 +205,20 @@ def test_conf_appends_shim_to_caller_classpath():
     assert conf["spark.hadoop.fs.file.impl"] == _SHIM
 
 
+def test_build_removes_stale_jars(monkeypatch, tmp_path):
+    if session._javac() is None:
+        pytest.skip("no JDK compiler: Hadoop's own local filesystem is used")
+    src = tmp_path / "NioLocalFileSystem.java"
+    shutil.copy(session._LOCALFS_SRC, src)
+    (tmp_path / "build").mkdir()
+    (tmp_path / "build" / "localfs-0000000000000000.jar").write_bytes(b"stale")
+    monkeypatch.setattr(session, "_JVM_DIR", str(tmp_path))
+    monkeypatch.setattr(session, "_LOCALFS_SRC", str(src))
+    jar = session._localfs_jar()
+    assert os.path.dirname(jar) == str(tmp_path / "build")
+    assert os.listdir(tmp_path / "build") == [os.path.basename(jar)]
+
+
 _DRAIN = """
 import os, sys
 sys.path[:0] = [{repo!r}, {tests!r}]

@@ -1,505 +1,81 @@
 #!/usr/bin/env python
-"""Matched alternating A/B of a round-9 change vs its pre-change form.
+"""Matched alternating A/B of two query forms in one Spark session.
 
-The round-9 driver bench flagged three touched entries as slower on
-BOTH its runs (dedup_simhash, unigram_lm_train, dedup_clusters) while
-its own companion data showed heavy host CPU steal; the round-9
-verdict's #1 order is a matched ALTERNATING A/B on one box with per-run
-steal stamps, keeping a change only if its steal-adjusted median wins.
+Usage: python tools/ab_forms.py A B [rounds]
 
-Both forms run in the SAME Spark session, alternating old/new per
-round (never two runs of one form in a row), each run through the noop
-sink with bench.py's exact hygiene (unpersist persistent RDDs between
-runs) and per-run wall / CPU-steal / GC stamps.
+A and B are each a registry name or a ``module:function`` with the
+registry's ``(spark, sf_dir) -> DataFrame`` signature, run at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1). Both sides are warmed
+once; then every round runs each side through ``bench.timed_run`` (noop
+sink, per-run load/dirty/spin/steal/GC stamps, persisted RDDs dropped),
+alternating which side runs first so neither always inherits the
+other's heap and cache state. Prints each side's median and quartiles
+and how many rounds each side won, then one JSON line with every record.
 
-Usage: python tools/ab_forms.py {simhash|unigram|clusters} [rounds]
+To re-run a pre-change form, put it in a scratch module and pass it as
+``module:function`` against the registry name of the current form.
 """
 
 from __future__ import annotations
 
+import importlib
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import pyspark.sql.functions as F
+import numpy as np
 
+from bench import timed_run
 from parquet_ingestor_spark.queries import REGISTRY, _ensure_loaded
 from parquet_ingestor_spark.session import get_spark
 
 
-def _steal() -> int:
-    try:
-        with open("/proc/stat") as f:
-            return int(f.readline().split()[8])
-    except (OSError, IndexError, ValueError):
-        return -1
+def resolve(spec: str):
+    """The ``(spark, sf_dir) -> DataFrame`` callable named by ``spec``."""
+    if ":" in spec:
+        module, _, attr = spec.partition(":")
+        return getattr(importlib.import_module(module), attr)
+    _ensure_loaded()
+    return REGISTRY[spec].fn
 
 
-def _gc_ms(spark) -> int:
-    beans = (
-        spark.sparkContext._jvm.java.lang.management.ManagementFactory
-        .getGarbageCollectorMXBeans()
-    )
-    return sum(beans.get(i).getCollectionTime() for i in range(beans.size()))
-
-
-# --------------------------------------------------------------------------
-# old-form reconstructions (verbatim shapes from the pre-change commits)
-
-
-def _simhash_forms():
-    """Old = 41ed046~1: no lineage truncation of the fingerprint frame
-    (the Python fingerprint pass runs once per self-join side)."""
-    from parquet_ingestor_spark import checkpointing
-    from parquet_ingestor_spark.operators import dedup
-
-    new_fn = REGISTRY["dedup_simhash"].fn
-    real_truncate = checkpointing.truncate_lineage
-
-    def old_fn(spark, sf_dir):
-        dedup.truncate_lineage = lambda df, *a, **k: df
-        try:
-            return new_fn(spark, sf_dir)
-        finally:
-            dedup.truncate_lineage = real_truncate
-
-    # restore guard in case a run dies mid-build
-    def new_fn_guarded(spark, sf_dir):
-        dedup.truncate_lineage = real_truncate
-        return new_fn(spark, sf_dir)
-
-    return old_fn, new_fn_guarded
-
-
-def _unigram_forms():
-    """Old = 5cce5cd~1: the two seed tables (top-vocab substrings,
-    single-char alphabet) collected as TWO sequential driver jobs."""
-    from parquet_ingestor_spark.catalog import table
-    from parquet_ingestor_spark.checkpointing import truncate_lineage
-    from parquet_ingestor_spark.operators.text import (
-        UNIGRAM_EM_ROUNDS,
-        UNIGRAM_MAX_PIECE,
-        UNIGRAM_VOCAB,
-        _viterbi_piece_counts,
-    )
-
-    new_fn = REGISTRY["unigram_lm_train"].fn
-
-    def old_fn(spark, sf_dir):
-        docs = table(spark, sf_dir, "documents")
-        vocab_size, em_rounds = UNIGRAM_VOCAB, UNIGRAM_EM_ROUNDS
-        max_piece_len = UNIGRAM_MAX_PIECE
-        words = (
-            docs.select(F.explode(F.split(F.col("text"), " ")).alias("w"))
-            .filter(F.col("w") != "")
-            .groupBy("w")
-            .agg(F.count("*").alias("freq"))
-        )
-        words = truncate_lineage(words)
-        subs = words.select(
-            F.explode(
-                F.expr(
-                    f"flatten(transform(sequence(2, {max_piece_len}), n -> "
-                    "CASE WHEN length(w) >= n THEN transform("
-                    "sequence(1, length(w) - n + 1), i -> substring(w, i, n)) "
-                    "ELSE array() END))"
-                )
-            ).alias("piece"),
-            "freq",
-        )
-        cands = (
-            subs.groupBy("piece")
-            .agg(F.sum("freq").alias("cnt"))
-            .orderBy(F.desc("cnt"), F.asc("piece"))
-            .limit(vocab_size)
-            .collect()
-        )
-        chars = (
-            words.select(
-                F.explode(F.split(F.col("w"), "")).alias("piece"), "freq"
-            )
-            .filter(F.col("piece") != "")
-            .groupBy("piece")
-            .agg(F.sum("freq").alias("cnt"))
-            .collect()
-        )
-        pieces = {r["piece"]: int(r["cnt"]) for r in cands}
-        for r in chars:
-            pieces[r["piece"]] = pieces.get(r["piece"], 0) + int(r["cnt"])
-        alphabet = {r["piece"] for r in chars}
-        for _ in range(em_rounds):
-            total = sum(pieces.values())
-            observed = (
-                words.mapInPandas(
-                    _viterbi_piece_counts(pieces, total, max_piece_len),
-                    schema="piece string, cnt long",
-                )
-                .groupBy("piece")
-                .agg(F.sum("cnt").alias("cnt"))
-                .collect()
-            )
-            got = {r["piece"]: int(r["cnt"]) for r in observed}
-            pieces = {
-                p: c + 1 if p in alphabet else c
-                for p, c in (
-                    (p, got.get(p, 0)) for p in set(got) | alphabet
-                )
-                if c > 0 or p in alphabet
-            }
-        total = sum(pieces.values())
-        rows = sorted(pieces.items(), key=lambda kv: (-kv[1], kv[0]))
-        out = spark.createDataFrame(
-            [(p, c) for p, c in rows], "piece string, cnt long"
-        )
-        return out.select(
-            "piece", "cnt", (F.col("cnt") / F.lit(total)).alias("prob")
-        ).orderBy(F.desc("cnt"), F.asc("piece"))
-
-    return old_fn, new_fn
-
-
-def _clusters_forms():
-    """Old = ce28ae4~1: hash-min labels iterated over EVERY corpus node
-    (no touched-node restriction, no final attach join)."""
-    from parquet_ingestor_spark.catalog import table
-    from parquet_ingestor_spark.checkpointing import truncate_lineage
-    from parquet_ingestor_spark.operators.corpus import (
-        JACCARD_THRESHOLD,
-        _doc_shingles,
-        exact_jaccard_pairs,
-    )
-
-    new_fn = REGISTRY["dedup_clusters"].fn
-
-    def old_cc(nodes, edges, max_iter=20):
-        both = edges.select(
-            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-        ).unionByName(
-            edges.select(
-                F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
-            )
-        )
-        both = truncate_lineage(both)
-        labels = nodes.select(
-            F.col("doc_id").alias("id"), F.col("doc_id").alias("lbl")
-        )
-        labels = truncate_lineage(labels)
-
-        def _lbl_sum(df):
-            return df.agg(F.sum(F.col("lbl").cast("decimal(38,0)"))).first()[0]
-
-        cur_sum = _lbl_sum(labels)
-        for _ in range(max_iter):
-            prop = both.join(
-                labels.select(F.col("id").alias("src"), "lbl"), "src"
-            ).select(F.col("dst").alias("id"), "lbl")
-            new_labels = truncate_lineage(
-                labels.unionByName(prop)
-                .groupBy("id")
-                .agg(F.min("lbl").alias("lbl"))
-            )
-            new_sum = _lbl_sum(new_labels)
-            labels = new_labels
-            if new_sum == cur_sum:
-                return labels
-            cur_sum = new_sum
-        raise RuntimeError("old-form CC did not converge")
-
-    def old_fn(spark, sf_dir):
-        docs = table(spark, sf_dir, "documents")
-        edges = exact_jaccard_pairs(
-            _doc_shingles(spark, sf_dir), JACCARD_THRESHOLD
-        ).select("doc_a", "doc_b")
-        comp = old_cc(docs.select("doc_id"), edges)
-        sizes = comp.groupBy("lbl").agg(F.count("*").alias("cluster_size"))
-        return (
-            comp.join(sizes, "lbl")
-            .select(
-                F.col("id").alias("doc_id"),
-                F.col("lbl").alias("cluster_id"),
-                "cluster_size",
-            )
-            .orderBy("doc_id")
-        )
-
-    return old_fn, new_fn
-
-
-def _clusters_sliver_forms():
-    """Old = the round-9 attached form (attach join + checkpoint +
-    corpus-sized size aggregate); new = the round-10 sliver
-    decomposition (registered entry)."""
-    from parquet_ingestor_spark.catalog import table
-    from parquet_ingestor_spark.operators.corpus import (
-        JACCARD_THRESHOLD,
-        _doc_shingles,
-        connected_components,
-        exact_jaccard_pairs,
-    )
-
-    new_fn = REGISTRY["dedup_clusters"].fn
-
-    def old_fn(spark, sf_dir):
-        docs = table(spark, sf_dir, "documents")
-        edges = exact_jaccard_pairs(
-            _doc_shingles(spark, sf_dir), JACCARD_THRESHOLD
-        ).select("doc_a", "doc_b")
-        comp = connected_components(docs.select("doc_id"), edges, attach=True)
-        sizes = comp.groupBy("lbl").agg(F.count("*").alias("cluster_size"))
-        return (
-            comp.join(sizes, "lbl")
-            .select(
-                F.col("id").alias("doc_id"),
-                F.col("lbl").alias("cluster_id"),
-                "cluster_size",
-            )
-            .orderBy("doc_id")
-        )
-
-    return old_fn, new_fn
-
-
-def _perplexity_forms():
-    """Old = the round-9 form: truncated exploded-bigram frame, `uni`
-    re-aggregating the corpus bigram stream, vocab size from a second
-    full parquet scan + tokenize."""
-    from parquet_ingestor_spark.catalog import table
-    from parquet_ingestor_spark.checkpointing import truncate_lineage
-    from parquet_ingestor_spark.functions import int_e
-
-    new_fn = REGISTRY["text_lm_perplexity"].fn
-
-    def old_fn(spark, sf_dir):
-        bg = truncate_lineage(
-            table(spark, sf_dir, "documents")
-            .filter(F.expr("size(split(text, ' ')) >= 2"))
-            .select(
-                "doc_id",
-                F.explode(
-                    F.expr(
-                        "transform(array(split(text, ' ')), toks -> "
-                        "transform(sequence(0, size(toks) - 2), "
-                        "i -> struct(toks[i] AS w1, toks[i + 1] AS w2)))[0]"
-                    )
-                ).alias("s"),
-            )
-            .select("doc_id", "s.w1", "s.w2")
-        )
-        big = bg.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
-        uni = big.groupBy("w1").agg(F.sum("c12").alias("c1"))
-        vs = (
-            table(spark, sf_dir, "documents")
-            .select(F.explode(F.split("text", " ")).alias("w"))
-            .agg(F.count_distinct("w").alias("vs"))
-        )
-        nll = -F.log2(
-            (F.col("c12") + F.lit(1.0)) / (F.col("c1") + F.col("vs"))
-        )
-        return (
-            bg.join(big, ["w1", "w2"])
-            .join(uni, "w1")
-            .crossJoin(F.broadcast(vs))
-            .groupBy("doc_id")
-            .agg(
-                F.count("*").alias("n_bigrams"),
-                int_e(F.avg(nll), 4).alias("avg_nll_e4"),
-            )
-            .orderBy("doc_id")
-        )
-
-    return old_fn, new_fn
-
-
-def _cmcounts_forms():
-    """Old = the round-9 form: the per-key count aggregate NOT
-    truncated, so the events scan + keyed aggregate runs once per
-    consumer side (grid build + probe)."""
-    from parquet_ingestor_spark import checkpointing
-    from parquet_ingestor_spark.operators import sketches
-
-    new_fn = REGISTRY["events_cm_counts"].fn
-    real_truncate = checkpointing.truncate_lineage
-
-    def old_fn(spark, sf_dir):
-        # the entry imports truncate_lineage lazily from checkpointing,
-        # so patch it at the source module for the old form
-        checkpointing.truncate_lineage = lambda df, *a, **k: df
-        try:
-            return new_fn(spark, sf_dir)
-        finally:
-            checkpointing.truncate_lineage = real_truncate
-
-    def new_fn_guarded(spark, sf_dir):
-        checkpointing.truncate_lineage = real_truncate
-        return new_fn(spark, sf_dir)
-
-    return old_fn, new_fn_guarded
-
-
-def _q88_forms():
-    """Old = three separate events passes (hourly counts, hour bounds,
-    distinct types); new = everything derived from the truncated
-    hourly table (registered entry)."""
-    from pyspark.sql import Window
-
-    from parquet_ingestor_spark.catalog import table
-
-    new_fn = REGISTRY["q88_moving_average"].fn
-
-    def old_fn(spark, sf_dir):
-        ev = table(spark, sf_dir, "events").select(
-            "event_type", F.date_trunc("hour", F.col("ts")).alias("h")
-        )
-        hourly = ev.groupBy("event_type", "h").agg(F.count("*").alias("cnt"))
-        bounds = ev.agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
-        spine = (
-            ev.select("event_type")
-            .distinct()
-            .crossJoin(F.broadcast(bounds))
-            .select(
-                "event_type",
-                F.explode(
-                    F.expr("sequence(h0, h1, interval 1 hour)")
-                ).alias("h"),
-            )
-        )
-        dense = spine.join(hourly, ["event_type", "h"], "left").select(
-            "event_type", "h", F.coalesce("cnt", F.lit(0)).alias("cnt")
-        )
-        w = (
-            Window.partitionBy("event_type")
-            .orderBy("h")
-            .rowsBetween(-23, Window.currentRow)
-        )
-        return (
-            dense.select(
-                "event_type",
-                F.date_format("h", "yyyy-MM-dd HH:00").alias("hour"),
-                F.col("cnt").cast("bigint").alias("n_events"),
-                F.avg("cnt").over(w).alias("ma24"),
-            )
-            .orderBy("event_type", "hour")
-        )
-
-    return old_fn, new_fn
-
-
-def _linededup_forms():
-    """Old = per-doc totals via a second segmentation explode + doc-
-    keyed groupBy; new = totals as a per-row scalar (registered)."""
-    from parquet_ingestor_spark.catalog import table
-    from parquet_ingestor_spark.operators.lines import (
-        LINE_WORDS,
-        MIN_DOC_LINES,
-        MIN_LINE_WORDS,
-        segment_lines,
-    )
-
-    new_fn = REGISTRY["corpus_line_dedup"].fn
-
-    def old_fn(spark, sf_dir):
-        docs = table(spark, sf_dir, "documents")
-        lines = segment_lines(docs, "text", LINE_WORDS).filter(
-            F.col("nw") >= MIN_LINE_WORDS
-        )
-        keepers = lines.groupBy("line").agg(
-            F.min(F.struct("doc_id", "line_no")).alias("f")
-        )
-        kept_per_doc = (
-            keepers.select(
-                F.col("f.doc_id").alias("doc_id"),
-                F.col("f.line_no").alias("line_no"),
-                "line",
-            )
-            .groupBy("doc_id")
-            .agg(
-                F.count("*").alias("n_lines_kept"),
-                F.array_join(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(F.struct("line_no", "line"))
-                        ),
-                        lambda s: s.line,
-                    ),
-                    " ",
-                ).alias("cleaned_text"),
-            )
-        )
-        totals = lines.groupBy("doc_id").agg(F.count("*").alias("n_total"))
-        return (
-            kept_per_doc.join(totals, "doc_id")
-            .filter(F.col("n_lines_kept") >= MIN_DOC_LINES)
-            .select(
-                "doc_id",
-                "n_lines_kept",
-                (F.col("n_total") - F.col("n_lines_kept")).alias(
-                    "n_lines_removed"
-                ),
-                "cleaned_text",
-            )
-            .orderBy("doc_id")
-        )
-
-    return old_fn, new_fn
-
-
-FORMS = {
-    "simhash": _simhash_forms,
-    "unigram": _unigram_forms,
-    "clusters": _clusters_forms,
-    "clusters2": _clusters_sliver_forms,
-    "perplexity": _perplexity_forms,
-    "cmcounts": _cmcounts_forms,
-    "q88": _q88_forms,
-    "linededup": _linededup_forms,
-}
+def run_ab(spark, a: str, b: str, rounds: int, sf_dir: str) -> dict[str, list[dict]]:
+    """``{"A": [record, ...], "B": [...]}``, one ``timed_run`` record per
+    side per round."""
+    fns = {"A": resolve(a), "B": resolve(b)}
+    for fn in fns.values():
+        timed_run(spark, fn, sf_dir)  # warm-up (JIT/codegen), discarded
+    records: dict[str, list[dict]] = {"A": [], "B": []}
+    for i in range(rounds):
+        for side in ("A", "B") if i % 2 == 0 else ("B", "A"):
+            records[side].append(timed_run(spark, fns[side], sf_dir))
+            spark.catalog.clearCache()
+        spark.sparkContext._jvm.System.gc()
+    return records
 
 
 def main() -> None:
-    which = sys.argv[1]
-    rounds = int(sys.argv[2]) if len(sys.argv) > 2 else 6
+    a, b = sys.argv[1], sys.argv[2]
+    rounds = int(sys.argv[3]) if len(sys.argv) > 3 else 6
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    _ensure_loaded()
-    old_fn, new_fn = FORMS[which]()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(app_name=f"ab-{which}", master=f"local[{cpus}]")
+    spark = get_spark(app_name="ab-forms")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    def run_once(fn):
-        s0, g0 = _steal(), _gc_ms(spark)
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        wall = time.perf_counter() - t0
-        rec = (round(wall, 3), _steal() - s0, _gc_ms(spark) - g0)
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist(False)
-        spark.catalog.clearCache()
-        return rec
-
-    # warm both forms (JIT/codegen), throwaway
-    spark.sparkContext.setJobDescription(f"ab-{which} warm")
-    run_once(old_fn)
-    run_once(new_fn)
-    res = {"old": [], "new": []}
-    for i in range(rounds):
-        for tag, fn in (("old", old_fn), ("new", new_fn)):
-            spark.sparkContext.setJobDescription(f"ab-{which} {tag} r{i}")
-            res[tag].append(run_once(fn))
-            spark.sparkContext._jvm.System.gc()
-    for tag in ("old", "new"):
-        walls = sorted(w for w, _, _ in res[tag])
-        med = walls[len(walls) // 2]
+    records = run_ab(spark, a, b, rounds, sf_dir)
+    walls = {s: [r["wall_s"] for r in recs] for s, recs in records.items()}
+    won = {
+        "A": sum(x < y for x, y in zip(walls["A"], walls["B"])),
+        "B": sum(y < x for x, y in zip(walls["A"], walls["B"])),
+    }
+    for side, spec in (("A", a), ("B", b)):
+        q1, med, q3 = np.percentile(walls[side], [25, 50, 75])
         print(
-            f"{which} {tag}: median {med:.3f}s  "
-            f"runs {[r[0] for r in res[tag]]}  "
-            f"steal_jiffies {[r[1] for r in res[tag]]}  "
-            f"gc_ms {[r[2] for r in res[tag]]}"
+            f"{side} {spec}: median {med:.3f}s [q1 {q1:.3f}, q3 {q3:.3f}]  "
+            f"won {won[side]}/{rounds}  runs {walls[side]}"
         )
-    print(json.dumps({"which": which, "res": res}))
+    print(json.dumps({"A": a, "B": b, "sf_dir": sf_dir, "records": records}))
 
 
 if __name__ == "__main__":
