@@ -9,9 +9,14 @@ with at-least-once delivery and ack-only-after-durable-write
     → writeStream.partitionBy(y, m, d, h).format('parquet')
       .option('checkpointLocation', …).trigger(processingTime=…)
 
+- The payload decode is part of the streaming query
+  (``decode_envelopes`` on the streaming frame), so Spark analyses it
+  once per query, and each micro-batch decodes its rows once: the
+  cached decoded batch feeds both the data write and the DLQ write.
 - The ack guarantee is the streaming checkpoint plus an IDEMPOTENT
   batch commit (``write_batch``): offsets only commit after the sink
-  writes succeed, so a crash replays the uncommitted batch
+  writes succeed — the data and DLQ commits run concurrently, and the
+  ack waits for both — so a crash replays the uncommitted batch
   (at-least-once delivery), and the replay overwrites its own
   batch_id-keyed partitions instead of appending duplicates
   (exactly-once in the files) — the same contract the reference
@@ -33,9 +38,11 @@ size like the reference's byte-threshold flush; everything JVM-side.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
+from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
@@ -144,11 +151,27 @@ def write_batch(
     equivalent of the native file sink's ``_spark_metadata`` protocol,
     and the Spark translation of the reference's
     commit-batch-then-ack ordering (ingestor/ingestor.go:569-609).
+
+    The two commits overlap: the DLQ write runs as a concurrent job on
+    a second thread that carries this thread's Spark local properties
+    (streaming query and batch id, job group, SQL execution id), while
+    the data write runs here. The call returns only after both writes
+    finish, so the ack (the offsets commit) still follows both durable
+    writes. A failed write raises its error; if both fail, the data
+    write's error is raised.
+
+    The id is stamped as a string literal: codegen inlines a bigint
+    literal into the generated source, so every new id would compile
+    fresh classes, while a string literal is passed by reference. The
+    directories read back as ``batch_id=N`` with an int type, and a
+    ``key_exprs`` expression that does arithmetic or comparisons on
+    ``batch_id`` coerces it to a bigint as before.
     """
     cfg = cfg or PipelineConfig()
     ts = cfg.timestamp_col
+    stamp = F.lit(str(batch_id))
     # batch_id first, then the time columns, in one plan analysis
-    cols = {"batch_id": F.lit(batch_id)}
+    cols = {"batch_id": stamp}
     if cfg.key_exprs:
         part_cols = (*cfg.key_exprs.keys(), "batch_id")
     elif ts in good.columns:
@@ -162,20 +185,32 @@ def write_batch(
     # one by one since a later one may name an earlier one
     for name, expr in (cfg.key_exprs or {}).items():
         good = good.withColumn(name, F.expr(expr))
-    (
-        good.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("maxRecordsPerFile", cfg.max_records_per_file)
-        .partitionBy(*part_cols)
-        .parquet(data_dir)
-    )
-    (
-        bad.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .json(dlq_dir)
-    )
+
+    # decorated here, on the caller's thread: the wrapper captures the
+    # local properties at decoration time
+    @inheritable_thread_target(good.sparkSession)
+    def write_dlq() -> None:
+        (
+            bad.withColumn("batch_id", stamp)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .json(dlq_dir)
+        )
+
+    # leaving the pool waits for the DLQ job, so neither an error nor a
+    # return leaves a job of this batch running (the stream unpersists
+    # the batch's cache as soon as this returns)
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        dlq = pool.submit(write_dlq)
+        (
+            good.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .option("maxRecordsPerFile", cfg.max_records_per_file)
+            .partitionBy(*part_cols)
+            .parquet(data_dir)
+        )
+    dlq.result()
 
 
 def _avro_record_schema(record_schema: T.StructType, name: str = "envelope") -> str:
@@ -208,21 +243,29 @@ def _avro_record_schema(record_schema: T.StructType, name: str = "envelope") -> 
     return json.dumps({"type": "record", "name": name, "fields": fields})
 
 
-def parse_envelopes(
+#: Private columns of a decoded envelope frame: the raw payload (kept
+#: so the DLQ and payload sampling see the input as it arrived) and the
+#: split flag, true for a payload that failed to decode.
+_PAYLOAD, _MALFORMED = "_payload", "_malformed"
+
+
+def decode_envelopes(
     raw: DataFrame,
     record_schema: T.StructType,
     payload_col: str = "value",
     payload_format: str = "json",
-) -> tuple[DataFrame, DataFrame]:
-    """O4 + O6: decode payloads into typed records; split failures.
+) -> DataFrame:
+    """O4: decode payloads into typed records, once for both sinks.
 
-    The reference's envelope payload is ``any``
-    (source/source.go:16); this decodes the text wire formats — JSON
-    objects and CSV lines — plus binary Avro, with identical split
-    semantics. Returns ``(good, bad)``. ``bad`` carries the raw
-    payload plus an error tag — the reference's Fail()-and-never-batch
-    path (reference: ingestor/ingestor.go:468-474) re-expressed as a
-    DataFrame split instead of per-message callbacks.
+    Returns one frame: the record fields, then ``raw``'s other columns,
+    then ``_payload`` (the raw payload) and ``_malformed`` (the DLQ
+    flag). ``split_envelopes`` turns it into the good and bad frames
+    with two filters, so the data write and the DLQ write share one
+    decode (and, in the stream, one cached micro-batch).
+
+    The reference's envelope payload is ``any`` (source/source.go:16);
+    this decodes the text wire formats — JSON objects and CSV lines —
+    plus binary Avro, with identical split semantics.
 
     ``payload_format="avro"`` needs the ``spark-avro`` jar on the
     session classpath (it ships separately from pyspark — add
@@ -234,28 +277,10 @@ def parse_envelopes(
     Avro's PERMISSIVE mode null-fills undecodable payloads rather
     than tagging them, so the bad-split rule is "payload present but
     every decoded field null" — an all-null-fields legitimate record
-    is indistinguishable and lands in the DLQ by design.
+    is indistinguishable and lands in the DLQ by design — and a null
+    payload is in neither split.
     """
-    corrupt = "_corrupt_record"
-    schema_with_corrupt = T.StructType(
-        [*record_schema.fields, T.StructField(corrupt, T.StringType(), True)]
-    )
-    # PERMISSIVE + corrupt-record column: malformed payloads surface as
-    # a non-null _corrupt_record instead of silently null-filled rows.
-    opts = {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": corrupt}
-    if payload_format == "json":
-        rec = F.from_json(F.col(payload_col), schema_with_corrupt, opts)
-    elif payload_format == "csv":
-        ddl = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in schema_with_corrupt.fields
-        )
-        rec = F.from_csv(
-            F.col(payload_col),
-            ddl,
-            {**opts, "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss"},
-        )
-    elif payload_format == "avro":
+    if payload_format == "avro":
         try:
             from pyspark.sql.avro.functions import from_avro
 
@@ -264,7 +289,9 @@ def parse_envelopes(
                 _avro_record_schema(record_schema),
                 {"mode": "PERMISSIVE"},
             )
-            parsed = raw.withColumn("_rec", rec)
+            parsed = raw.filter(F.col(payload_col).isNotNull()).withColumn(
+                "_rec", rec
+            )
             parsed._jdf.schema()  # force analysis so a missing jar fails HERE
         except Exception as exc:
             if "avro" in str(exc).lower() or "ClassNotFound" in str(exc):
@@ -274,35 +301,72 @@ def parse_envelopes(
                     "spark.jars.packages) — it is not bundled with pyspark"
                 ) from exc
             raise
-        decoded_null = F.lit(True)
+        malformed = F.lit(True)
         for f in record_schema.fields:
-            decoded_null = decoded_null & F.col(f"_rec.{f.name}").isNull()
-        good = parsed.filter(~decoded_null).select(
-            *[
-                F.col(f"_rec.{f.name}").alias(f.name)
-                for f in record_schema.fields
-            ],
-            *[c for c in raw.columns if c != payload_col],
-        )
-        bad = parsed.filter(
-            decoded_null & F.col(payload_col).isNotNull()
-        ).select(
-            F.base64(F.col(payload_col)).alias("value"),
-            F.lit("transform_error: malformed payload").alias("error"),
-        )
-        return good, bad
+            malformed = malformed & F.col(f"_rec.{f.name}").isNull()
     else:
-        raise ValueError(f"unsupported payload_format {payload_format!r}")
-    parsed = raw.withColumn("_rec", rec)
-    good = parsed.filter(F.col(f"_rec.{corrupt}").isNull()).select(
+        corrupt = "_corrupt_record"
+        schema_with_corrupt = T.StructType(
+            [*record_schema.fields, T.StructField(corrupt, T.StringType(), True)]
+        )
+        # PERMISSIVE + corrupt-record column: malformed payloads surface
+        # as a non-null _corrupt_record instead of silently null-filled
+        # rows.
+        opts = {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": corrupt}
+        if payload_format == "json":
+            rec = F.from_json(F.col(payload_col), schema_with_corrupt, opts)
+        elif payload_format == "csv":
+            ddl = ", ".join(
+                f"{f.name} {f.dataType.simpleString()}"
+                for f in schema_with_corrupt.fields
+            )
+            rec = F.from_csv(
+                F.col(payload_col),
+                ddl,
+                {**opts, "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss"},
+            )
+        else:
+            raise ValueError(f"unsupported payload_format {payload_format!r}")
+        parsed = raw.withColumn("_rec", rec)
+        malformed = F.col(f"_rec.{corrupt}").isNotNull()
+    return parsed.select(
         *[F.col(f"_rec.{f.name}").alias(f.name) for f in record_schema.fields],
         *[c for c in raw.columns if c != payload_col],
+        F.col(payload_col).alias(_PAYLOAD),
+        malformed.alias(_MALFORMED),
     )
-    bad = parsed.filter(F.col(f"_rec.{corrupt}").isNotNull()).select(
-        F.col(payload_col).alias("value"),
+
+
+def split_envelopes(
+    decoded: DataFrame, payload_format: str = "json"
+) -> tuple[DataFrame, DataFrame]:
+    """O6: split a ``decode_envelopes`` frame into ``(good, bad)``.
+
+    ``good`` is the record fields plus the envelope's other columns;
+    ``bad`` carries the raw payload (base64 for binary Avro) plus an
+    error tag — the reference's Fail()-and-never-batch path
+    (reference: ingestor/ingestor.go:468-474) re-expressed as a
+    DataFrame split instead of per-message callbacks.
+    """
+    good = decoded.filter(~F.col(_MALFORMED)).drop(_PAYLOAD, _MALFORMED)
+    value = F.col(_PAYLOAD)
+    bad = decoded.filter(F.col(_MALFORMED)).select(
+        (F.base64(value) if payload_format == "avro" else value).alias("value"),
         F.lit("transform_error: malformed payload").alias("error"),
     )
     return good, bad
+
+
+def parse_envelopes(
+    raw: DataFrame,
+    record_schema: T.StructType,
+    payload_col: str = "value",
+    payload_format: str = "json",
+) -> tuple[DataFrame, DataFrame]:
+    """O4 + O6: decode payloads and split failures in one call —
+    ``split_envelopes(decode_envelopes(...))``. Returns ``(good, bad)``."""
+    decoded = decode_envelopes(raw, record_schema, payload_col, payload_format)
+    return split_envelopes(decoded, payload_format)
 
 
 def start_stream_ingest(
@@ -325,13 +389,17 @@ def start_stream_ingest(
 
     cfg = config or PipelineConfig()
     raw = jsonl_dir_source(spark, landing_dir, cfg.max_files_per_trigger)
+    # decoded on the streaming frame, so Spark analyses the decode once
+    # when the query starts instead of once per micro-batch
+    decoded = decode_envelopes(raw, record_schema, payload_format=cfg.payload_format)
 
     dlq_dir = f"{out_dir.rstrip('/')}/{cfg.dlq_suffix}"
     data_dir = f"{out_dir.rstrip('/')}/data"
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        # The batch feeds two sinks (data + DLQ); without caching, each
-        # write would re-read and re-parse the source files.
+        # The batch feeds two sinks (data + DLQ); caching the decoded
+        # rows lets both writes read them without re-reading the source
+        # files or decoding again.
         batch_df.persist()
         try:
             if cfg.payload_log_every > 0 and batch_id % cfg.payload_log_every == 0:
@@ -339,17 +407,16 @@ def start_stream_ingest(
                 # ingestor/ingestor.go:699-704, truncated at 4 KiB):
                 # cheap driver-side peek, never a full scan, and a job
                 # only on the sampled batches.
-                sample = batch_df.select("value").limit(1).collect()
+                sample = batch_df.select(_PAYLOAD).limit(1).collect()
                 if sample:
                     print(
                         f"[pipeline] batch={batch_id} payload sample: "
-                        f"{sample[0].value[: cfg.payload_log_max_chars]}"
+                        f"{sample[0][0][: cfg.payload_log_max_chars]}"
                     )
-            good, bad = parse_envelopes(
-                batch_df, record_schema, payload_format=cfg.payload_format
-            )
+            good, bad = split_envelopes(batch_df, cfg.payload_format)
             if cfg.drop_where:
                 good = good.filter(f"NOT ({cfg.drop_where})")
+            # through the module global, so a wrapped write_batch is seen
             write_batch(good, bad, data_dir, dlq_dir, batch_id, cfg)
         finally:
             # a failed write must not leave the batch pinned in memory
@@ -357,7 +424,7 @@ def start_stream_ingest(
             batch_df.unpersist()
 
     return (
-        raw.writeStream.foreachBatch(_process)
+        decoded.writeStream.foreachBatch(_process)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(processingTime=cfg.flush_interval)
         .start()

@@ -89,6 +89,54 @@ def test_failed_sink_write_is_never_committed(spark, tmp_path):
     assert df.select("id").distinct().count() == 20
 
 
+@pytest.mark.parametrize("failing_sink", ["data", "_dlq"])
+def test_crash_between_data_and_dlq_commits_replays_once(spark, tmp_path, failing_sink):
+    """A crash between the data write and the DLQ write: one of the two
+    commits of batch 0 lands, the other fails, so the batch is never
+    acked. The restart replays it, and the batch_id-keyed overwrite
+    leaves each good envelope in the data sink once and each corrupt
+    one in the DLQ once."""
+    import pyspark.sql.functions as F
+
+    from parquet_ingestor_spark.pipeline import PipelineConfig, start_stream_ingest
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    with open(landing / "a.json", "w") as f:
+        for i in range(20):
+            payload = "{broken" if i % 5 == 4 else json.dumps({"id": i, "name": f"n{i}"})
+            f.write(json.dumps({"value": payload, "attributes": {}}) + "\n")
+    out, chk = tmp_path / "out", str(tmp_path / "chk")
+    out.mkdir()
+    obstacle = out / failing_sink
+    obstacle.touch()  # a regular file where that sink's directory goes
+    cfg = PipelineConfig(flush_interval="1 second")
+
+    def run():
+        return start_stream_ingest(spark, str(landing), str(out), chk, SCHEMA, cfg)
+
+    q1 = run()
+    with pytest.raises(Exception):
+        q1.processAllAvailable()
+    q1.stop()
+    assert not os.path.exists(os.path.join(chk, "commits", "0"))  # never acked
+    other = "_dlq" if failing_sink == "data" else "data"
+    assert os.path.isdir(out / other / "batch_id=0")  # the other commit landed
+
+    obstacle.unlink()
+    q2 = run()
+    q2.processAllAvailable()
+    q2.stop()
+
+    data = spark.read.parquet(str(out / "data"))
+    dlq = spark.read.json(str(out / "_dlq"))
+    assert data.count() == data.select("id").distinct().count() == 16
+    assert dlq.count() == 4
+    assert dlq.filter(F.col("value") == "{broken").count() == 4
+    assert [r.batch_id for r in data.select("batch_id").distinct().collect()] == [0]
+    assert [r.batch_id for r in dlq.select("batch_id").distinct().collect()] == [0]
+
+
 def test_replayed_batch_overwrites_not_appends(spark, tmp_path):
     """The window the offset-commit test can't cover: the process dies
     AFTER the sink write but BEFORE the checkpoint commit. The replay

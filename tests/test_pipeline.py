@@ -19,6 +19,7 @@ from parquet_ingestor_spark.pipeline import (
     parse_envelopes,
     start_stream_ingest,
     with_time_partitions,
+    write_batch,
 )
 
 RECORD_SCHEMA = T.StructType(
@@ -172,11 +173,14 @@ def test_stream_ingest_payload_sample_cadence(spark, dirs, capsys):
     batches = spark.read.parquet(f"{out}/data").select("batch_id").distinct()
     assert batches.count() == 3
     sampled = [
-        line.split()[1]
+        line
         for line in capsys.readouterr().out.splitlines()
         if "payload sample:" in line
     ]
-    assert sampled == ["batch=0", "batch=2"]
+    assert [line.split()[1] for line in sampled] == ["batch=0", "batch=2"]
+    # the sample is a raw input payload, as it arrived in the envelope
+    for line in sampled:
+        assert "item-" in json.loads(line.split("payload sample: ", 1)[1])["name"]
 
 
 def test_parse_envelopes_split(spark):
@@ -381,3 +385,93 @@ def test_adaptive_controller_retunes_ingest_across_restart(spark, dirs):
     # the controller saw real progress and kept its setting in-bounds
     assert ctl.lo <= ctl.current <= ctl.hi
     assert new_setting is None or ctl.lo <= new_setting <= ctl.hi
+
+
+def _small_batch(spark):
+    """A parsed micro-batch, built JVM-side (no Python workers): 12
+    good rows over three days and one DLQ row."""
+    good = spark.range(12, numPartitions=1).selectExpr(
+        "id",
+        "concat('n', id) AS name",
+        "CAST(id AS DOUBLE) AS value",
+        "timestamp'2024-03-01 00:00:00' + make_dt_interval(id % 3, id % 9) AS ts",
+    )
+    bad = spark.range(1, numPartitions=1).selectExpr(
+        "'oops' AS value", "'transform_error: malformed payload' AS error"
+    )
+    return good, bad
+
+
+def test_write_batch_new_batch_id_compiles_no_classes(spark, tmp_path):
+    """A stream's batch ids only grow. Stamping the id must not change
+    the generated code, or every micro-batch compiles fresh classes."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    good, bad = _small_batch(spark)
+    data, dlq = f"{tmp_path}/data", f"{tmp_path}/_dlq"
+    write_batch(good, bad, data, dlq, batch_id=10)
+    before = codegen.METRIC_COMPILATION_TIME().getCount()
+    write_batch(good, bad, data, dlq, batch_id=11)
+    assert codegen.METRIC_COMPILATION_TIME().getCount() - before == 0
+    df = spark.read.parquet(data)
+    assert dict(df.dtypes)["batch_id"] == "int"
+    assert sorted(r.batch_id for r in df.select("batch_id").distinct().collect()) == [10, 11]
+    assert sorted(p for p in os.listdir(dlq) if p.startswith("batch_id=")) == [
+        "batch_id=10", "batch_id=11"
+    ]
+
+
+def test_write_batch_key_exprs_do_arithmetic_on_batch_id(spark, tmp_path):
+    """``key_exprs`` see the stamped id as a string; arithmetic on it
+    coerces to bigint, so the partition values are the numeric ones."""
+    good, bad = _small_batch(spark)
+    data = f"{tmp_path}/data"
+    cfg = PipelineConfig(key_exprs={"parity": "batch_id % 2"})
+    for batch_id in (10, 11):
+        write_batch(good, bad, data, f"{tmp_path}/_dlq", batch_id, cfg)
+    leaves = {
+        p: sorted(os.listdir(os.path.join(data, p)))
+        for p in os.listdir(data)
+        if p.startswith("parity=")
+    }
+    assert leaves == {"parity=0": ["batch_id=10"], "parity=1": ["batch_id=11"]}
+
+
+def test_write_batch_jobs_keep_callers_job_group(spark, tmp_path):
+    """The DLQ write runs on a second thread; its job must still carry
+    the caller's local properties (job group, streaming query and
+    batch id), which the UI, event log and tracing attribute jobs by."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    good, bad = _small_batch(spark)
+    ungrouped = set(tracker.getJobIdsForGroup())
+    sc.setJobGroup("write-batch-attribution", "write_batch attribution")
+    try:
+        write_batch(good, bad, f"{tmp_path}/data", f"{tmp_path}/_dlq", batch_id=3)
+    finally:
+        sc._jsc.clearJobGroup()
+    grouped = tracker.getJobIdsForGroup("write-batch-attribution")
+    assert len(grouped) >= 2  # the data job and the DLQ job
+    assert set(tracker.getJobIdsForGroup()) == ungrouped
+    assert os.path.isdir(f"{tmp_path}/_dlq/batch_id=3")
+
+
+def test_write_batch_failed_data_write_waits_for_dlq_job(spark, tmp_path):
+    """A data write that fails raises its own error, and only after the
+    concurrent DLQ job has finished: the stream unpersists the batch's
+    cache as soon as write_batch returns."""
+    good, _ = _small_batch(spark)
+    # big enough that the DLQ job outlives the data write's failure
+    bad = spark.range(0, 2_000_000, numPartitions=4).selectExpr(
+        "CAST(id AS STRING) AS value", "'transform_error: malformed payload' AS error"
+    )
+    data = tmp_path / "data"
+    data.touch()  # a regular file where the data sink's directory goes
+    with pytest.raises(Exception, match="not a directory: file:.*/data"):
+        write_batch(good, bad, str(data), f"{tmp_path}/_dlq", batch_id=5)
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    assert os.path.isdir(f"{tmp_path}/_dlq/batch_id=5")
+
+    # both sinks failing raises the data write's error
+    (tmp_path / "dlq_file").touch()
+    with pytest.raises(Exception, match="not a directory: file:.*/data"):
+        write_batch(good, bad.limit(1), str(data), f"{tmp_path}/dlq_file", batch_id=6)
