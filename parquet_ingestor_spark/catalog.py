@@ -2,12 +2,27 @@
 ``events`` stream table and the training-data tables (``documents``,
 ``embeddings``).
 
-All loads are plain ``spark.read.parquet`` — column pruning and filter
+All loads are ``spark.read.parquet`` — column pruning and filter
 pushdown then happen inside the scan (verify with
 ``df.explain('formatted')`` → ``PushedFilters`` / ``ReadSchema``).
+
+Inferring a parquet schema submits one Spark job per read, even for a
+single file, only to read its footer. So the schema of each table file
+is inferred once per file version and memoized: later reads pass it to
+``spark.read.schema(...)``, which submits no job. The memo key is the
+path, the file's ``os.stat`` identity and version (device, inode, size,
+mtime and ctime in ns) and the session settings the parquet schema
+converter reads (``SCHEMA_CONFS``), so a rewritten file or a flipped
+setting is inferred again. Only absolute paths naming a local regular
+file are memoized; a directory (whose stat does not change when a file
+inside it is rewritten) or a URI keeps the inferring read.
 """
 
 from __future__ import annotations
+
+import functools
+import os
+import stat
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -29,6 +44,20 @@ TABLES: tuple[str, ...] = (
 # at TPC-H geometry region/nation are constant-size and supplier grows
 # ~100× slower than lineitem.
 BROADCAST_DIMS: frozenset[str] = frozenset({"region", "nation", "supplier"})
+
+
+#: The session settings Spark 4.1's parquet-to-Spark schema converter
+#: reads; an inferred schema is only reused under the same values.
+SCHEMA_CONFS: tuple[str, ...] = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+)
 
 
 def _ensure_session_confs(spark: SparkSession) -> None:
@@ -64,11 +93,51 @@ def normalize_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+def _file_version(path: str) -> tuple[int, ...] | None:
+    """Identity and version of the local regular file at an absolute
+    ``path``; ``None`` for anything else (URI, relative path, directory,
+    missing file)."""
+    if not os.path.isabs(path):
+        return None
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return (st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns)
+
+
+@functools.lru_cache(maxsize=256)
+def _schema_slot(key: tuple) -> list:
+    """The memo: one slot per key, filled with the schema by the key's
+    first (inferring) read."""
+    return []
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one testdata table, its ``ts`` normalized (``normalize_ts``).
+
+    The first read of a table file infers its schema (one Spark job)
+    and memoizes it; later reads of the same file version under the
+    same ``SCHEMA_CONFS`` values reuse it and submit no job. Paths that
+    are not an absolute local regular file always infer (see the
+    module docstring).
+    """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     _ensure_session_confs(spark)
-    return normalize_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+    path = f"{sf_dir}/{name}.parquet"
+    version = _file_version(path)
+    if version is None:
+        return normalize_ts(spark.read.parquet(path))
+    confs = tuple(spark.conf.get(k) for k in SCHEMA_CONFS)
+    slot = _schema_slot((path, version, confs))
+    if slot:
+        return normalize_ts(spark.read.schema(slot[0]).parquet(path))
+    df = spark.read.parquet(path)
+    slot.append(df.schema)
+    return normalize_ts(df)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

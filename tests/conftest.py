@@ -87,7 +87,6 @@ _SLOW_IDS = {
     "test_operators_quality.py::test_recall_eval_invariants",  # 11 s
     "test_stateful.py::test_stateful_tracker_matches_batch_twin",  # 11 s
     "test_plan_lint.py::test_no_cartesian_no_row_udf[q07_roundtrip_conservation]",  # 11 s
-    "test_crash_replay.py::test_replayed_batch_overwrites_not_appends",  # 10 s
     "test_plan_lint.py::test_no_cartesian_no_row_udf[sim_recall_eval]",  # 10 s
     "test_graph.py::test_determinism_across_partitionings",  # 10 s
     "test_operators_quality.py::test_ivf_recall_vs_bruteforce",  # 9 s

@@ -143,16 +143,17 @@ def test_replayed_batch_overwrites_not_appends(spark, tmp_path):
     re-runs the same batch_id; the idempotent batch commit must
     overwrite that batch's partitions, leaving zero duplicates in both
     the data and DLQ paths."""
-    import pyspark.sql.functions as F
-
     from parquet_ingestor_spark.pipeline import write_batch
 
-    good = spark.createDataFrame(
-        [(i, f"n{i}", float(i), f"2024-03-0{1 + i % 3} 0{i % 9}:00:00") for i in range(30)],
-        "id long, name string, value double, ts_str string",
-    ).select("id", "name", "value", F.to_timestamp("ts_str").alias("ts"))
-    bad = spark.createDataFrame(
-        [("oops", "transform_error: malformed payload")], "value string, error string"
+    # built JVM-side: a frame from a Python list runs Python workers
+    good = spark.range(30, numPartitions=2).selectExpr(
+        "id",
+        "concat('n', id) AS name",
+        "CAST(id AS DOUBLE) AS value",
+        "timestamp'2024-03-01 00:00:00' + make_dt_interval(id % 3, id % 9) AS ts",
+    )
+    bad = spark.range(1, numPartitions=1).selectExpr(
+        "'oops' AS value", "'transform_error: malformed payload' AS error"
     )
     data_dir, dlq_dir = f"{tmp_path}/data", f"{tmp_path}/dlq"
 
