@@ -191,22 +191,21 @@ class MaxFilesController:
     #: (see snapshot_from_progress) — tune to the trigger interval.
     target_batch_ms: float = 10_000.0
     cooldown_sec: float = 30.0
-    cfg: AdaptiveConfig = field(default=None)  # type: ignore[assignment]
+    cfg: AdaptiveConfig = field(init=False)
     #: applied (ts, old, new, reason) tuples — the audit trail the
     #: reference logs on every resize.
     history: list = field(default_factory=list)
     _last_change: float = field(default=0.0, repr=False)
 
     def __post_init__(self) -> None:
-        if self.cfg is None:
-            # the cascade's poller bounds ARE this controller's rate
-            # bounds — without this, current > max_pollers(4) would
-            # permanently veto scale-ups
-            self.cfg = AdaptiveConfig(
-                min_pollers=self.lo,
-                max_pollers=self.hi,
-                cooldown_sec=self.cooldown_sec,
-            )
+        # the cascade's poller bounds ARE this controller's rate
+        # bounds — without this, current > max_pollers(4) would
+        # permanently veto scale-ups
+        self.cfg = AdaptiveConfig(
+            min_pollers=self.lo,
+            max_pollers=self.hi,
+            cooldown_sec=self.cooldown_sec,
+        )
 
     def on_progress(
         self,

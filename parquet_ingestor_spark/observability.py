@@ -14,7 +14,7 @@ Metric-name parity (reference → here):
   ingestor_messages_received_total   ← progress.numInputRows
   ingestor_flush_completed_total     ← one per successful batch
   ingestor_flush_duration_ms         ← progress.batchDuration
-  ingestor_flush_bytes_total         ← sink-reported (when available)
+  ingestor_flush_bytes_total         ← not emitted yet (ROADMAP direction 4)
   ingestor_source_buffer_usage       ← inputRowsPerSecond/processedRowsPerSecond
   (reference names: README.md:170-186, ingestor/ingestor.go:462,521,588)
 """

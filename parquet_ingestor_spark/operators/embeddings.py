@@ -15,9 +15,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import table
 from ..checkpointing import truncate_lineage
-from ..functions import int_e
+from ..functions import dlit, dot, fold, int_e, norm, seq_dot, sumsq
 from ..queries import register
-from .similarity import _dot, with_norm
+from .similarity import with_norm
 
 
 #: Fixed power-method rounds for the hash-verifiable PCA entries.
@@ -41,25 +41,13 @@ def _power_iterate(c: list, iters: int, dim: int = 64) -> tuple:
 
     v = [0.125] * dim
     for _ in range(iters):
-        y = []
-        for i in range(dim):
-            acc = 0.0
-            for j in range(dim):
-                acc += c[i][j] * v[j]
-            y.append(acc)
-        sq = 0.0
-        for z in y:
-            sq += z * z
+        y = [seq_dot(c[i], v) for i in range(dim)]
+        sq = seq_dot(y, y)
         if sq == 0.0:
             continue  # stick: the oracle's zero-norm CASE keeps v too
         nrm = math.sqrt(sq)
         v = [z / nrm for z in y]
-    lam = 0.0
-    for i in range(dim):
-        acc = 0.0
-        for j in range(dim):
-            acc += c[i][j] * v[j]
-        lam += v[i] * acc
+    lam = seq_dot(v, [seq_dot(c[i], v) for i in range(dim)])
     return v, lam
 
 
@@ -87,20 +75,11 @@ def _power_iterate(c: list, iters: int, dim: int = 64) -> tuple:
 )
 def emb_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = with_norm(table(spark, sf_dir, "embeddings"))
-    unit = F.expr(
-        "transform(embedding, x -> CAST(x AS DOUBLE) / nrm)"
-    )
-    unit_norm = F.sqrt(
-        F.aggregate(
-            F.transform(unit, lambda y: y * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
+    unit = "transform(embedding, x -> CAST(x AS DOUBLE) / nrm)"
     return emb.select(
         "vec_id",
         int_e("nrm", 4).alias("norm_e4"),
-        int_e(unit_norm, 4).alias("unit_norm_e4"),
+        int_e(norm(unit), 4).alias("unit_norm_e4"),
     ).orderBy("vec_id")
 
 
@@ -128,19 +107,14 @@ def emb_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def emb_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     amax = F.array_max(F.transform(F.col("embedding"), F.abs))
-    q = F.transform(
-        F.col("embedding"),
-        lambda x: F.round(x / F.col("amax") * 127).cast("long"),
-    )
+    q = "transform(embedding, x -> CAST(round(x / amax * 127) AS BIGINT))"
     return (
         table(spark, sf_dir, "embeddings")
         .withColumn("amax", amax)
         .select(
             "vec_id",
             int_e(F.col("amax").cast("double"), 4).alias("scale_max_e4"),
-            F.aggregate(q, F.lit(0).cast("long"), lambda a, v: a + v).alias(
-                "q_checksum"
-            ),
+            fold(q, "bigint").alias("q_checksum"),
         )
         .orderBy("vec_id")
     )
@@ -405,7 +379,7 @@ def emb_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("cv"),
         F.col("nrm").alias("cn"),
     )
-    csim = _dot("embedding", "cv") / (F.col("nrm") * F.col("cn"))
+    csim = dot("embedding", "cv") / (F.col("nrm") * F.col("cn"))
     assigned = (
         emb.crossJoin(F.broadcast(centroids))
         .select(
@@ -499,11 +473,7 @@ def kmeans_fit(
             [(int(i), [float(x) for x in cents[i]]) for i in range(k)],
             "c_id int, cv array<double>",
         )
-        csim = F.aggregate(
-            F.zip_with("u", "cv", lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
+        csim = dot("u", "cv")
         assigned = (
             unit.crossJoin(F.broadcast(cdf))
             .select("vec_id", "u", "c_id", csim.alias("csim"))
@@ -551,11 +521,7 @@ def kmeans_fit_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(int(i), [float(x) for x in cents[i]]) for i in range(KMEANS_K)],
         "c_id int, cv array<double>",
     )
-    csim = F.aggregate(
-        F.zip_with("u", "cv", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    csim = dot("u", "cv")
     return (
         assigned.join(F.broadcast(cdf), "c_id")
         .select("c_id", csim.alias("csim"))
@@ -587,17 +553,16 @@ def _ratio_half_away(s: int, n: int) -> int:
 
 def _w_quantized(emb: DataFrame) -> DataFrame:
     """(vec_id, w: array<long>) — e8-quantized unit vectors. The norm
-    is the module's standard sequential fold (bit-identical to the
-    oracles' list_sum(list_transform(...))), the division and round
-    are per-element pure functions of it, so both engines quantize to
-    the SAME integers; everything downstream is exact arithmetic."""
-    return emb.select(
+    is the shared sequential fold (bit-identical to the oracles'
+    list_sum(list_transform(...))), computed once per row; the division
+    and round are per-element pure functions of it, so both engines
+    quantize to the SAME integers; everything downstream is exact
+    arithmetic."""
+    return with_norm(emb).select(
         "vec_id",
         F.expr(
-            "transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) / "
-            "sqrt(aggregate(transform(embedding, y -> CAST(y AS DOUBLE) "
-            "* CAST(y AS DOUBLE)), CAST(0 AS DOUBLE), (acc, v) -> acc + v"
-            f")) * {_W_SCALE}) AS BIGINT))"
+            "transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) / nrm "
+            f"* {_W_SCALE}) AS BIGINT))"
         ).alias("w"),
     )
 
@@ -645,18 +610,15 @@ def kmeans_fit_int(
             ],
             "c_id long, q array<long>, norm2 long",
         )
-        dot = F.expr(
-            "aggregate(sequence(0, size(w) - 1), CAST(0 AS BIGINT), "
-            "(acc, i) -> acc + w[i] * q[i])"
-        )
-        score = dot.cast("double") / F.sqrt(F.col("norm2").cast("double"))
+        wq = dot("w", "q", "bigint")
+        score = wq.cast("double") / F.sqrt(F.col("norm2").cast("double"))
         assigned = (
             w.crossJoin(F.broadcast(cdf))
             .select(
                 "vec_id",
                 "w",
                 "c_id",
-                dot.alias("dot"),
+                wq.alias("dot"),
                 score.alias("score"),
                 "norm2",
             )
@@ -700,10 +662,7 @@ def kmeans_fit_int(
         [(i, cents[i][0], cents[i][1]) for i in range(k)],
         "c_id long, centroid_d1_e8 long, centroid_d2_e8 long",
     )
-    norm2w = F.expr(
-        "aggregate(transform(w, x -> x * x), CAST(0 AS BIGINT), "
-        "(acc, v) -> acc + v)"
-    )
+    norm2w = sumsq("w", "bigint")
     cos_e8 = F.round(
         F.col("dot").cast("double")
         / (
@@ -1224,28 +1183,23 @@ def pca_project(
     m×dim component matrix inline as literals (bounded model state),
     and each row's projection is a codegen dot-product expression —
     no shuffle, no UDF at serving time."""
-    import numpy as np
 
-    dim = len(mean)
-    mean_arr = F.array(*[F.lit(float(v)) for v in mean])
-    outs = []
-    for ci, c in enumerate(comps):
-        carr = F.array(*[F.lit(float(v)) for v in c])
-        expr = F.aggregate(
-            F.zip_with(
-                F.zip_with(
-                    F.col("embedding").cast("array<double>"),
-                    mean_arr,
-                    lambda x, mu: x - mu,
-                ),
-                carr,
-                lambda d, w: d * w,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        outs.append(int_e(expr, round_to).alias(f"pc{ci + 1}_e{round_to}"))
-    return emb.select("vec_id", *outs)
+    def arr(vals) -> str:
+        return "array(" + ", ".join(dlit(v) for v in vals) + ")"
+
+    centred = (
+        "zip_with(CAST(embedding AS ARRAY<DOUBLE>), "
+        f"{arr(mean)}, (x, mu) -> x - mu)"
+    )
+    return emb.select(
+        "vec_id",
+        *[
+            int_e(dot(centred, arr(c)), round_to).alias(
+                f"pc{ci + 1}_e{round_to}"
+            )
+            for ci, c in enumerate(comps)
+        ],
+    )
 
 
 def _mu_cov_collect(emb: DataFrame, dim: int) -> tuple:
@@ -1392,24 +1346,7 @@ def emb_pca1_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus one projection scan."""
     emb = table(spark, sf_dir, "embeddings")
     mu, v = _pca1_power_vector(emb)
-    mu_arr = F.array(*[F.lit(float(x)) for x in mu])
-    v_arr = F.array(*[F.lit(float(x)) for x in v])
-    proj = F.aggregate(
-        F.zip_with(
-            F.zip_with(
-                F.col("embedding").cast("array<double>"),
-                mu_arr,
-                lambda x, m: x - m,
-            ),
-            v_arr,
-            lambda d, w: d * w,
-        ),
-        F.lit(0.0),
-        lambda acc, z: acc + z,
-    )
-    return emb.select(
-        "vec_id", int_e(proj, 4).alias("pc1_e4")
-    ).orderBy("vec_id")
+    return pca_project(emb, mu, [v]).orderBy("vec_id")
 
 
 def _pcam_power_vectors(

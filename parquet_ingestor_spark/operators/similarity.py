@@ -11,9 +11,11 @@
 - neardup_pairs: all-pairs cosine ≥ τ (embedding near-dup dedup):
   exact baseline via block cross join; oracle-checkable.
 
-The dot product is a zip_with/aggregate fold in *double* — both Spark
-and the DuckDB oracle fold left-to-right over float32 inputs widened to
-double, so the results agree bit-for-bit before the round(4).
+Every dot product, norm and L2 distance is one of the shared folds in
+``parquet_ingestor_spark.functions`` (``dot``, ``norm``, ``l2sq`` and
+the driver-side ``seq_dot`` / ``seq_l2sq``): a left-to-right fold in
+double, the order the DuckDB oracles' ``list_sum`` folds in, so the
+results agree bit-for-bit before the e4 quantization.
 """
 
 from __future__ import annotations
@@ -23,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from ..catalog import table
 from ..checkpointing import truncate_lineage
-from ..functions import int_e
+from ..functions import dlit, dot, int_e, l2sq, norm, seq_dot, seq_l2sq
 from ..queries import register
 
 TOPK = 5
@@ -55,42 +57,15 @@ def scaled_k(n: int, target: int = TARGET_CLUSTER_SIZE,
     return max(lo, min(hi, -(-n // target)))
 
 
-def _dot(a: str, b: str) -> Column:
-    return F.expr(
-        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * "
-        f"CAST(y AS DOUBLE)), CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-
-
-def _dot_idx(a: str, b: str) -> Column:
-    """Sequential dot as ONE index fold (no zip_with intermediate
-    array): acc + a[i]*b[i], left to right — bit-identical IEEE order
-    to :func:`_dot` and to the oracles' list_sum(list_transform(...)),
-    ~30% less CPU on the crossJoin-heavy twin assignment stages."""
-    return F.expr(
-        f"aggregate(sequence(0, size({a}) - 1), CAST(0 AS DOUBLE), "
-        f"(acc, i) -> acc + CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE))"
-    )
-
-
-def _norm(a: str) -> Column:
-    return F.sqrt(
-        F.expr(
-            f"aggregate(transform({a}, x -> CAST(x AS DOUBLE) * "
-            f"CAST(x AS DOUBLE)), CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-        )
-    )
-
-
 def with_norm(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return emb.withColumn("nrm", _norm(vec_col))
+    return emb.withColumn("nrm", norm(vec_col))
 
 
 def brute_force_topk(
     emb: DataFrame, queries: DataFrame, k: int = TOPK
 ) -> DataFrame:
     """Exact cosine top-k. ``queries``: (q_id, qv, qn); broadcast side."""
-    sim = int_e(_dot("qv", "embedding") / (F.col("qn") * F.col("nrm")), 4)
+    sim = int_e(dot("qv", "embedding") / (F.col("qn") * F.col("nrm")), 4)
     w = Window.partitionBy("q_id").orderBy(F.desc("sim_e4"), F.asc("vec_id"))
     return (
         with_norm(emb)
@@ -307,34 +282,24 @@ def ivf_topk_expr(
     # collapses into AQE noise.
     par = spark.sparkContext.defaultParallelism
     n = with_norm(emb.repartition(par, "vec_id"))
-    def _seq_dot(a: list[float], b: list[float]) -> float:
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += x * y
-        return acc
-
     head = _head_rows(emb, max(n_lists, N_QUERIES))
     cvs = [
         (int(r.vec_id), [float(x) for x in r.embedding])
         for r in head
         if r.vec_id < n_lists
     ]
-    cns = {cid: math.sqrt(_seq_dot(v, v)) for cid, v in cvs}
+    cns = {cid: math.sqrt(seq_dot(v, v)) for cid, v in cvs}
     # the centroid side comes from the SAME bounded head collect the
     # probe computation already paid for — a second parquet scan +
     # norm subtree just to broadcast 25 rows was one whole job of the
     # twin's fixed cost. Python's left-fold x*x sum + math.sqrt is
-    # bit-identical to the _norm expression fold (proven by the green
+    # bit-identical to the norm expression fold (proven by the green
     # probe rows, which divide by these same cns).
     cent = spark.createDataFrame(
         [(cid, v, cns[cid]) for cid, v in cvs],
         "c_id int, cv array<double>, cn double",
     )
-    # fused index fold: one pass, no zip_with product-array allocation
-    # per (vector, centroid) pair — ~30% less CPU than the zip_with
-    # form at identical IEEE order (acc + x_i*y_i, left fold), so the
-    # oracle's list_sum(list_transform(...)) equality is unchanged.
-    csim = _dot_idx("embedding", "cv") / (F.col("nrm") * F.col("cn"))
+    csim = dot("embedding", "cv") / (F.col("nrm") * F.col("cn"))
     assigned = (
         n.crossJoin(F.broadcast(cent))
         .select(
@@ -359,9 +324,9 @@ def ivf_topk_expr(
     pdata = []
     for r in q_rows:
         qv = [float(x) for x in r.embedding]
-        qn = math.sqrt(_seq_dot(qv, qv))
+        qn = math.sqrt(seq_dot(qv, qv))
         ds = [
-            (_seq_dot(qv, cv) / (qn * cns[cid]), cid) for cid, cv in cvs
+            (seq_dot(qv, cv) / (qn * cns[cid]), cid) for cid, cv in cvs
         ]
         ds.sort(key=lambda t: (-t[0], t[1]))
         pdata.extend(
@@ -370,10 +335,7 @@ def ivf_topk_expr(
     pdf = spark.createDataFrame(
         pdata, "q_id long, list_id int, qv array<double>, qn double"
     )
-    sim = F.expr(
-        "aggregate(sequence(0, size(embedding) - 1), CAST(0 AS DOUBLE), "
-        "(acc, i) -> acc + qv[i] * CAST(embedding[i] AS DOUBLE))"
-    ) / (F.col("qn") * F.col("nrm"))
+    sim = dot("qv", "embedding") / (F.col("qn") * F.col("nrm"))
     w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("vec_id"))
     return (
         assigned.join(F.broadcast(pdf), "list_id")
@@ -572,24 +534,18 @@ def cosine_topk_vectorized(
     )
     # exact re-rank: the same sequential-fold arithmetic as
     # brute_force_topk / the oracle — qv doubles and the Python-fold
-    # qn are bit-identical to the _norm expression fold (the IVF twin
+    # qn are bit-identical to the norm expression fold (the IVF twin
     # rule), embeddings are the ORIGINAL float32 values carried
     # through Arrow (exact), so sim_e4 here equals the exact twin's.
-    def _seq_dot(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += x * y
-        return acc
-
     qdf = spark.createDataFrame(
         [
             (int(r.q_id), [float(x) for x in r.qv],
-             math.sqrt(_seq_dot(r.qv, r.qv)))
+             math.sqrt(seq_dot(r.qv, r.qv)))
             for r in q_rows
         ],
         "q_id long, qv array<double>, qn double",
     )
-    sim = _dot("qv", "embedding") / (F.col("qn") * _norm("embedding"))
+    sim = dot("qv", "embedding") / (F.col("qn") * norm("embedding"))
     w = Window.partitionBy("q_id").orderBy(
         F.desc("sim_e4"), F.asc("vec_id")
     )
@@ -701,7 +657,7 @@ def sim_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Exact all-pairs: fine to ~10⁵ vectors per block; beyond that the
     # LSH/IVF bucketing above is the candidate generator and this
     # expression only scores candidates.
-    sim = _dot("va", "vb") / (F.col("na") * F.col("nb"))
+    sim = dot("va", "vb") / (F.col("na") * F.col("nb"))
     return (
         a.crossJoin(b)
         .filter(F.col("vec_a") < F.col("vec_b"))
@@ -908,7 +864,7 @@ def srp_lsh_neardup(
         F.col("embedding").alias("vb"),
         F.col("nrm").alias("nb"),
     )
-    sim = _dot("va", "vb") / (F.col("na") * F.col("nb"))
+    sim = dot("va", "vb") / (F.col("na") * F.col("nb"))
     return (
         cand.join(va, "vec_a")
         .join(vb, "vec_b")
@@ -1032,15 +988,6 @@ def pq_encode_sorted(
     return pq_encode(emb, m, k).orderBy("vec_id")
 
 
-def _dlit(v: float) -> str:
-    """An exactly-round-tripping Spark SQL DOUBLE literal. Plain
-    decimal literals parse as DECIMAL (precision-lossy past 18
-    fraction digits), so append the D suffix; exponent forms are
-    already DOUBLE (and reject a D suffix)."""
-    r = repr(float(v))
-    return r if "e" in r or "E" in r else r + "D"
-
-
 def _pq_best_structs(books) -> list[Column]:
     """Per-subspace (d2, code) struct-argmin expressions — the shared
     expression core of :func:`pq_encode_expr`,
@@ -1064,7 +1011,7 @@ def _pq_best_structs(books) -> list[Column]:
       tree regenerating ~60 KB of Java source each execution, and
       past janino's 64 KB method limit it silently falls back to
       interpreted eval unless every struct is multiply-referenced).
-      Lambda evaluation is the repo's standard fold idiom (``_dot``)
+      Lambda evaluation is the repo's standard fold idiom (``dot``)
       and costs ~0.1 ms/row here.
     Parsed Columns are cached per codebook (expression trees are
     immutable), so the bench's rebuild-per-run protocol skips the
@@ -1078,7 +1025,7 @@ def _pq_best_structs(books) -> list[Column]:
     for si in range(m_):
         cb_lit = "array(" + ", ".join(
             "array("
-            + ", ".join(_dlit(books[si, ci, d]) for d in range(d_sub))
+            + ", ".join(dlit(books[si, ci, d]) for d in range(d_sub))
             + ")"
             for ci in range(k_)
         ) + ")"
@@ -1352,14 +1299,11 @@ def _adc_query_tables(q_rows, books) -> list[tuple[int, list[float]]]:
     out = []
     for r in q_rows:
         qv = [float(x) for x in r.embedding]
-        dt = []
-        for s in range(m):
-            for c in range(k):
-                acc = 0.0
-                for d in range(d_sub):
-                    diff = qv[s * d_sub + d] - float(books[s, c, d])
-                    acc += diff * diff
-                dt.append(acc)
+        dt = [
+            seq_l2sq(qv[s * d_sub:(s + 1) * d_sub], books[s, c].tolist())
+            for s in range(m)
+            for c in range(k)
+        ]
         out.append((r.vec_id, dt))
     return out
 
@@ -1519,13 +1463,7 @@ def ivfpq_topk_expr(
         "c_id int, cv array<double>",
     )
     par = spark.sparkContext.defaultParallelism
-    # fused index fold (no zip_with intermediate array) at identical
-    # IEEE order: acc + (x_i - y_i)^2, left to right.
-    l2 = F.expr(
-        "aggregate(sequence(0, size(embedding) - 1), CAST(0 AS DOUBLE), "
-        "(acc, i) -> acc + (CAST(embedding[i] AS DOUBLE) - cv[i]) "
-        "* (CAST(embedding[i] AS DOUBLE) - cv[i]))"
-    )
+    l2 = l2sq("embedding", "cv")
     assigned = (
         emb.repartition(par, "vec_id").crossJoin(F.broadcast(cent))
         .select("vec_id", "embedding", "c_id", l2.alias("l2"))
@@ -1558,14 +1496,7 @@ def ivfpq_topk_expr(
     pdata = []
     for r in q_rows:
         qv = [float(x) for x in r.embedding]
-        ds = []
-        for cid, cv in cvs:
-            acc = 0.0
-            for d in range(len(qv)):
-                diff = qv[d] - cv[d]
-                acc += diff * diff
-            ds.append((acc, cid))
-        ds.sort()
+        ds = sorted((seq_l2sq(qv, cv), cid) for cid, cv in cvs)
         pdata.extend(
             (r.vec_id, cid, dts[r.vec_id]) for _, cid in ds[:nprobe]
         )
@@ -1768,8 +1699,8 @@ def semantic_dedup(
             F.col("nrm").alias("cn"),
         )
     elif "cn" not in centroids.columns:
-        centroids = centroids.withColumn("cn", _norm("cv"))
-    csim = _dot("embedding", "cv") / (F.col("nrm") * F.col("cn"))
+        centroids = centroids.withColumn("cn", norm("cv"))
+    csim = dot("embedding", "cv") / (F.col("nrm") * F.col("cn"))
     assigned = (
         emb.crossJoin(F.broadcast(centroids))
         .select("vec_id", "embedding", "nrm", "c_id", csim.alias("csim"))
@@ -1810,11 +1741,9 @@ def semantic_dedup(
         # once and read twice (ReusedExchange) — the corpus pays the
         # centroid assignment for the pair search once, not twice.
         xs, ys = assigned.alias("xs"), assigned.alias("ys")
-        cos = F.expr(
-            "aggregate(zip_with(xs.embedding, ys.embedding, (x, y) -> "
-            "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0 AS DOUBLE), "
-            "(acc, v) -> acc + v)"
-        ) / (F.col("xs.nrm") * F.col("ys.nrm"))
+        cos = dot("xs.embedding", "ys.embedding") / (
+            F.col("xs.nrm") * F.col("ys.nrm")
+        )
         removed = (
             xs.join(
                 ys,
@@ -1911,11 +1840,7 @@ def sem_dedup_trained(
         )
     else:
         xs, ys = a.alias("xs"), a.alias("ys")
-        cos = F.aggregate(
-            F.zip_with(F.col("xs.u"), F.col("ys.u"), lambda p, q: p * q),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
+        cos = dot("xs.u", "ys.u")
         removed = (
             xs.join(
                 ys,
@@ -2156,7 +2081,7 @@ def brute_force_l2_topk(
     oracle's rank order mirrors this one verbatim)."""
     dist_e6 = int_e(
         F.col("qn") * F.col("qn") + F.col("nrm") * F.col("nrm")
-        - 2 * _dot("qv", "embedding"),
+        - 2 * dot("qv", "embedding"),
         6,
     )
     w = Window.partitionBy("q_id").orderBy(F.asc("dist_e6"), F.asc("vec_id"))

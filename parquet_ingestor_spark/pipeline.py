@@ -39,7 +39,7 @@ size like the reference's byte-threshold flush; everything JVM-side.
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import pyspark.sql.functions as F
 from pyspark import inheritable_thread_target
@@ -87,7 +87,6 @@ class PipelineConfig:
     # (0 = off).
     payload_log_every: int = 0
     payload_log_max_chars: int = 4096  # reference truncates at 4 KiB
-    extra_writer_options: dict[str, str] = field(default_factory=dict)
 
 
 def _time_partition_cols(ts_col: str) -> dict[str, Column]:

@@ -196,3 +196,18 @@ def test_max_files_controller_healthy_batches_do_not_ratchet_down():
     # on APPLIED changes)
     assert c.on_progress(_Progress(500, 100.0, 900.0), now=400.0) is None
     assert c.on_progress(_Progress(12_000, 5000.0, 100.0), now=401.0) == 32
+
+
+def test_max_files_controller_cascade_bounds_follow_rate_bounds():
+    """The cascade config is derived from lo/hi/cooldown_sec, never
+    passed: a separately passed config made decide() veto every
+    step above its own max_pollers while the clamps read lo/hi."""
+    import pytest
+
+    from parquet_ingestor_spark.adaptive import MaxFilesController
+
+    c = MaxFilesController(lo=2, hi=1024, cooldown_sec=5.0)
+    assert (c.cfg.min_pollers, c.cfg.max_pollers) == (2, 1024)
+    assert c.cfg.cooldown_sec == 5.0
+    with pytest.raises(TypeError):
+        MaxFilesController(hi=1024, cfg=AdaptiveConfig())

@@ -422,17 +422,17 @@ def test_symspell_equals_quadratic_on_random_strings(spark, names, k):
     )
 )
 def test_dlit_sql_double_literals_roundtrip_exactly(spark, vals):
-    """Property: _dlit renders ANY finite double (subnormals, extreme
+    """Property: dlit renders ANY finite double (subnormals, extreme
     exponents, negative zero) as a Spark SQL literal that parses back
     to the identical bits — the contract every PQ/ADC oracle twin's
     inlined codebook rests on."""
     import math
     import struct
 
-    from parquet_ingestor_spark.operators.similarity import _dlit
+    from parquet_ingestor_spark.functions import dlit
 
     exprs = ", ".join(
-        f"{_dlit(v)} AS c{i}" for i, v in enumerate(vals)
+        f"{dlit(v)} AS c{i}" for i, v in enumerate(vals)
     )
     row = spark.sql(f"SELECT {exprs}").collect()[0]
     for i, v in enumerate(vals):
@@ -522,3 +522,110 @@ def test_hist_quantiles_match_definition_and_shard_invariance(rows, nshards):
             need = -((-num * n) // den)
             assert got == buckets[need - 1], (k, num, den, got, buckets)
         assert one[k][2] == n
+
+
+_f32 = st.floats(width=32, allow_nan=False, allow_infinity=False)
+_vec_pair = st.integers(min_value=0, max_value=8).flatmap(
+    lambda n: st.tuples(
+        st.lists(_f32, min_size=n, max_size=n),
+        st.lists(_f32, min_size=n, max_size=n),
+    )
+)
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(pairs=st.lists(_vec_pair, min_size=1, max_size=6))
+def test_vector_folds_match_python_twins_and_duckdb(spark, pairs):
+    """Property: the shared Spark folds (dot, sumsq, l2sq) equal their
+    driver-side twins (seq_dot, seq_l2sq) and DuckDB's
+    list_sum(list_transform(...)) bit for bit on random float32
+    vectors — the left-to-right double fold every similarity and
+    embedding oracle rests on. An empty array folds to 0.0 (DuckDB's
+    list_sum gives NULL there) and a null array to null."""
+    import struct
+
+    import duckdb
+    import pyarrow as pa
+
+    from parquet_ingestor_spark.functions import (
+        dlit,
+        dot,
+        l2sq,
+        seq_dot,
+        seq_l2sq,
+        sumsq,
+    )
+
+    # fixed rows whose left fold differs from other summation orders:
+    # dot sums to 0.0 left to right (1 + 2^60 rounds the 1 away) but
+    # to 1.0 right to left; sumsq/l2sq of [12, 12, 2^30] round to
+    # 2^60 + 256 left to right and to 2^60 + 512 right to left
+    rows = [
+        *pairs,
+        ([1.0, 2.0**60, -(2.0**60)], [1.0, 1.0, 1.0]),
+        ([12.0, 12.0, 2.0**30], [0.0, 0.0, 0.0]),
+        ([], []),
+        (None, None),
+    ]
+
+    def arr(v):
+        if v is None:
+            return "CAST(NULL AS ARRAY<FLOAT>)"
+        items = ", ".join(f"CAST({dlit(x)} AS FLOAT)" for x in v)
+        return f"CAST(array({items}) AS ARRAY<FLOAT>)"
+
+    values = ", ".join(
+        f"({i}, {arr(a)}, {arr(b)})" for i, (a, b) in enumerate(rows)
+    )
+    got = {
+        r.id: (r.d, r.s, r.l)
+        for r in spark.sql(f"SELECT * FROM VALUES {values} AS t(id, a, b)")
+        .select(
+            "id",
+            dot("a", "b").alias("d"),
+            sumsq("a").alias("s"),
+            l2sq("a", "b").alias("l"),
+        )
+        .collect()
+    }
+    f32 = pa.list_(pa.float32())
+    with duckdb.connect() as con:
+        con.register("t", pa.table({
+            "id": list(range(len(rows))),
+            "a": pa.array([a for a, _ in rows], type=f32),
+            "b": pa.array([b for _, b in rows], type=f32),
+        }))
+        duck = {
+            i: (d, s, l)
+            for i, d, s, l in con.execute("""
+                SELECT id,
+                       list_sum(list_transform(generate_series(1, len(a)),
+                           j -> CAST(a[j] AS DOUBLE) * CAST(b[j] AS DOUBLE))),
+                       list_sum(list_transform(a,
+                           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))),
+                       list_sum(list_transform(generate_series(1, len(a)),
+                           j -> (CAST(a[j] AS DOUBLE) - CAST(b[j] AS DOUBLE))
+                                * (CAST(a[j] AS DOUBLE)
+                                   - CAST(b[j] AS DOUBLE))))
+                FROM t
+            """).fetchall()
+        }
+
+    def bits(x):
+        return None if x is None else struct.pack("<d", x)
+
+    for i, (a, b) in enumerate(rows):
+        if a is None:
+            assert got[i] == (None, None, None) == duck[i]
+            continue
+        want = (seq_dot(a, b), seq_dot(a, a), seq_l2sq(a, b))
+        assert [bits(x) for x in got[i]] == [bits(x) for x in want], (a, b)
+        if a:
+            assert [bits(x) for x in duck[i]] == [bits(x) for x in want]
+        else:
+            assert got[i] == (0.0, 0.0, 0.0)
+            assert duck[i] == (None, None, None)
