@@ -16,6 +16,17 @@ converter reads (``SCHEMA_CONFS``), so a rewritten file or a flipped
 setting is inferred again. Only absolute paths naming a local regular
 file are memoized; a directory (whose stat does not change when a file
 inside it is rewritten) or a URI keeps the inferring read.
+
+Small tables the operators build on the driver (centroids, probe lists,
+query sets, k-means state, BPE merges, result tables) go through
+``local_frame``: the rows become a ``pyarrow.Table`` and Spark plans it
+as a ``LocalRelation``, which every action reads on the JVM with no
+job. ``spark.createDataFrame`` of a Python list instead parallelizes
+the rows into a Python RDD, so each action on the frame (a broadcast
+side's collect included) ran ``defaultParallelism`` Python-worker tasks
+for a few dozen rows. Above 48 MiB (the default of
+``spark.sql.execution.arrow.localRelationThreshold``) the Arrow batches
+become a JVM RDD instead, still with no Python worker.
 """
 
 from __future__ import annotations
@@ -24,8 +35,11 @@ import functools
 import os
 import stat
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -138,6 +152,21 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(path)
     slot.append(df.schema)
     return normalize_ts(df)
+
+
+def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """A frame of the driver-side ``rows`` (tuples in ``ddl`` column
+    order; ``None`` is a null cell), planned as a JVM ``LocalRelation``
+    through Arrow (see the module docstring)."""
+    schema = T.StructType.fromDDL(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows, strict=True)) or [()] * len(arrow_schema)
+    arrays = [
+        pa.array(c, f.type) for c, f in zip(cols, arrow_schema, strict=True)
+    ]
+    return spark.createDataFrame(
+        pa.Table.from_arrays(arrays, schema=arrow_schema), schema
+    )
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

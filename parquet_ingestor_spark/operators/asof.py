@@ -22,7 +22,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..catalog import table
+from ..catalog import local_frame, table
 from ..functions import int_e
 from ..queries import register
 
@@ -309,7 +309,7 @@ BANDS: tuple[tuple[str, float, float], ...] = (
 )
 def range_join_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = table(spark, sf_dir, "events")
-    bands = spark.createDataFrame(list(BANDS), "band string, lo double, hi double")
+    bands = local_frame(spark, list(BANDS), "band string, lo double, hi double")
     return (
         events.join(
             F.broadcast(bands),

@@ -13,7 +13,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..catalog import table
+from ..catalog import local_frame, table
 from ..checkpointing import truncate_lineage
 from ..functions import dlit, dot, fold, int_e, norm, seq_dot, sumsq
 from ..queries import register
@@ -106,7 +106,7 @@ def emb_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("embedding",),
 )
 def emb_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    amax = F.array_max(F.transform(F.col("embedding"), F.abs))
+    amax = F.expr("array_max(transform(embedding, x -> abs(x)))")
     q = "transform(embedding, x -> CAST(round(x / amax * 127) AS BIGINT))"
     return (
         table(spark, sf_dir, "embeddings")
@@ -309,7 +309,8 @@ def emb_label_pca1(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "label int, n_vectors bigint, top_eigenvalue_e6 bigint, "
         "explained_ratio_ppm bigint",
@@ -469,7 +470,8 @@ def kmeans_fit(
     assigned = None
     iters = 0
     for iters in range(1, max_iter + 1):
-        cdf = spark.createDataFrame(
+        cdf = local_frame(
+            spark,
             [(int(i), [float(x) for x in cents[i]]) for i in range(k)],
             "c_id int, cv array<double>",
         )
@@ -517,7 +519,8 @@ def kmeans_fit_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-iteration twin below so the driver can hash-check the whole
     fit (the minhash/bloom md5-twin rule applied to k-means)."""
     cents, assigned, _ = kmeans_fit(table(spark, sf_dir, "embeddings"))
-    cdf = spark.createDataFrame(
+    cdf = local_frame(
+        spark,
         [(int(i), [float(x) for x in cents[i]]) for i in range(KMEANS_K)],
         "c_id int, cv array<double>",
     )
@@ -603,7 +606,8 @@ def kmeans_fit_int(
     cents = [init[i] for i in range(k)]
     assigned = None
     for _ in range(iters):
-        cdf = spark.createDataFrame(
+        cdf = local_frame(
+            spark,
             [
                 (i, cents[i], sum(x * x for x in cents[i]))
                 for i in range(k)
@@ -658,7 +662,8 @@ def kmeans_fit_int(
                 int(r.s), int(r.n)
             )
         cents = new
-    final = spark.createDataFrame(
+    final = local_frame(
+        spark,
         [(i, cents[i][0], cents[i][1]) for i in range(k)],
         "c_id long, centroid_d1_e8 long, centroid_d2_e8 long",
     )

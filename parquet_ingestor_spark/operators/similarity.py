@@ -23,7 +23,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
-from ..catalog import table
+from ..catalog import local_frame, table
 from ..checkpointing import truncate_lineage
 from ..functions import dlit, dot, int_e, l2sq, norm, seq_dot, seq_l2sq
 from ..queries import register
@@ -295,7 +295,8 @@ def ivf_topk_expr(
     # twin's fixed cost. Python's left-fold x*x sum + math.sqrt is
     # bit-identical to the norm expression fold (proven by the green
     # probe rows, which divide by these same cns).
-    cent = spark.createDataFrame(
+    cent = local_frame(
+        spark,
         [(cid, v, cns[cid]) for cid, v in cvs],
         "c_id int, cv array<double>, cn double",
     )
@@ -332,8 +333,8 @@ def ivf_topk_expr(
         pdata.extend(
             (r.vec_id, cid, qv, qn) for _, cid in ds[:nprobe]
         )
-    pdf = spark.createDataFrame(
-        pdata, "q_id long, list_id int, qv array<double>, qn double"
+    pdf = local_frame(
+        spark, pdata, "q_id long, list_id int, qv array<double>, qn double"
     )
     sim = dot("qv", "embedding") / (F.col("qn") * F.col("nrm"))
     w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("vec_id"))
@@ -537,7 +538,8 @@ def cosine_topk_vectorized(
     # qn are bit-identical to the norm expression fold (the IVF twin
     # rule), embeddings are the ORIGINAL float32 values carried
     # through Arrow (exact), so sim_e4 here equals the exact twin's.
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        spark,
         [
             (int(r.q_id), [float(x) for x in r.qv],
              math.sqrt(seq_dot(r.qv, r.qv)))
@@ -1337,7 +1339,7 @@ def pq_adc_topk_expr(
     q_rows = [r for r in head if r.vec_id < N_QUERIES]
     d_sub = books.shape[2]
     qdata = _adc_query_tables(q_rows, books)
-    qdf = spark.createDataFrame(qdata, "q_id long, dt array<double>")
+    qdf = local_frame(spark, qdata, "q_id long, dt array<double>")
     # One map-only projection: per-subspace codes + the reconstruction
     # MSE (the quantization error of each scored vector — part of the
     # registered output and the oracle), then the broadcast crossJoin
@@ -1454,7 +1456,8 @@ def ivfpq_topk_expr(
     # and the corpus side fans out to cluster parallelism before the
     # expression-heavy assignment; hash partitioning by vec_id lets
     # the argmin groupBy reuse the exchange.
-    cent = spark.createDataFrame(
+    cent = local_frame(
+        spark,
         [
             (int(r.vec_id), [float(x) for x in r.embedding])
             for r in head
@@ -1500,8 +1503,8 @@ def ivfpq_topk_expr(
         pdata.extend(
             (r.vec_id, cid, dts[r.vec_id]) for _, cid in ds[:nprobe]
         )
-    pdf = spark.createDataFrame(
-        pdata, "q_id long, list_id int, dt array<double>"
+    pdf = local_frame(
+        spark, pdata, "q_id long, list_id int, dt array<double>"
     )
     dist = None
     for s in range(m):
@@ -2267,7 +2270,8 @@ def ivf_index_write(
     ).write.mode("overwrite").partitionBy("list_id").parquet(
         os.path.join(path, "postings")
     )
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(int(i), [float(x) for x in cm[i]]) for i in range(n_lists)],
         "list_id int, centroid array<double>",
     ).write.mode("overwrite").parquet(os.path.join(path, "centroids"))

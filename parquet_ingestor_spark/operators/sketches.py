@@ -24,7 +24,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..catalog import table
+from ..catalog import local_frame, table
 from ..checkpointing import epoch_fold_stream
 from ..functions import int_e
 from ..queries import register
@@ -1053,8 +1053,8 @@ def stream_bloom_screen(
         bitmap = (
             state[0]
             if state
-            else batch_df.sparkSession.createDataFrame(
-                [], "word long, bits long"
+            else local_frame(
+                batch_df.sparkSession, [], "word long, bits long"
             )
         )
         emit(

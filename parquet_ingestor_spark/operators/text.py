@@ -11,7 +11,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
-from ..catalog import table
+from ..catalog import local_frame, table
 from ..functions import int_e
 from ..checkpointing import truncate_lineage
 from ..queries import register
@@ -557,8 +557,10 @@ def bpe_train_merges(
             checkpoint_dir,
         )
 
-    return docs.sparkSession.createDataFrame(
-        merges, "rank int, left string, right string, pair_count long"
+    return local_frame(
+        docs.sparkSession,
+        merges,
+        "rank int, left string, right string, pair_count long",
     )
 
 
@@ -1436,8 +1438,8 @@ def unigram_lm_train(
 
     total = sum(pieces.values())
     rows = sorted(pieces.items(), key=lambda kv: (-kv[1], kv[0]))
-    out = docs.sparkSession.createDataFrame(
-        [(p, c) for p, c in rows], "piece string, cnt long"
+    out = local_frame(
+        docs.sparkSession, [(p, c) for p, c in rows], "piece string, cnt long"
     )
     return out.select(
         "piece", "cnt", (F.col("cnt") / F.lit(total)).alias("prob")

@@ -16,7 +16,7 @@ from decimal import Decimal
 import duckdb
 from pyspark.sql import DataFrame
 
-from .catalog import TABLES
+from .catalog import TABLES, local_frame
 
 
 def duck_connect(sf_dir: str) -> "duckdb.DuckDBPyConnection":
@@ -231,7 +231,7 @@ def rounding_battery(spark, con, max_abs: float = float(2**40)) -> list[str]:
     mismatches: list[str] = []
     for d in (0, 2, 4, 6):
         vals = [v for v in _ROUNDING_BATTERY if abs(v) * 10**d < max_abs]
-        df = spark.createDataFrame([(v,) for v in vals], "x double")
+        df = local_frame(spark, [(v,) for v in vals], "x double")
         got = [
             r.q
             for r in df.select(

@@ -1,18 +1,26 @@
 """``catalog.table``'s schema memo: a table file's schema is inferred
 once per file version and settings, so later reads submit no Spark
-job, return the schema an inferring read returns, and never go stale."""
+job, return the schema an inferring read returns, and never go stale.
+``catalog.local_frame``: a driver-built table holds the rows
+``createDataFrame`` of the same list holds, plans as a ``LocalRelation``
+and is built and collected with no Spark job."""
 
 from __future__ import annotations
 
+import ast
 import contextlib
 import itertools
+import pathlib
 import sys
 import threading
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import types as T
 
-from parquet_ingestor_spark.catalog import TABLES, normalize_ts, table
+from parquet_ingestor_spark import catalog
+from parquet_ingestor_spark.catalog import TABLES, local_frame, normalize_ts, table
 from parquet_ingestor_spark.queries.relational import q10_revenue_per_nation
 
 _groups = itertools.count()
@@ -127,3 +135,75 @@ def test_concurrent_first_reads_share_one_schema(spark, tmp_path):
     with _jobs(spark) as jobs:
         table(spark, str(tmp_path), "nation")
     assert jobs == []
+
+
+#: The column types of every driver-side table the operators build,
+#: with edge values: None cells, integer extremes, signed zero, NaN,
+#: infinities, None and empty arrays, None array elements.
+_CELLS = {
+    "int": [0, -(2**31), 2**31 - 1, None],
+    "bigint": [0, -(2**63), 2**63 - 1, None],
+    "double": [0.1, -0.0, float("nan"), float("inf"), None],
+    "string": ["", "a", "ünï ✓", None],
+    "array<double>": [[0.1, -2.5e-300], [], [None, 1.0], None],
+    "array<bigint>": [[1, -(2**63)], [], [None, 2], None],
+}
+
+
+def _site_ddls() -> list[str]:
+    """The DDL literal of every ``local_frame`` call in the package."""
+    ddls = set()
+    for path in sorted(pathlib.Path(catalog.__file__).parent.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "id", None) == "local_frame"
+            ):
+                ddl = node.args[2]
+                assert isinstance(ddl, ast.Constant), f"{path}:{node.lineno}"
+                ddls.add(ddl.value)
+    return sorted(ddls)
+
+
+_SITE_DDLS = _site_ddls()
+
+
+def _site_rows(ddl: str) -> list[tuple]:
+    """One row per edge cell of the widest column type, the other
+    columns cycling through their own edge cells."""
+    types = [
+        f.dataType.simpleString() for f in T.StructType.fromDDL(ddl).fields
+    ]
+    n = max(len(_CELLS[t]) for t in types)
+    return [
+        tuple(_CELLS[t][i % len(_CELLS[t])] for t in types) for i in range(n)
+    ]
+
+
+def _cells(df) -> list[str]:
+    """Collected rows in order, by ``repr`` (tells NaN, -0.0 and None
+    apart)."""
+    return [repr(tuple(r)) for r in df.collect()]
+
+
+@pytest.mark.parametrize("ddl", _SITE_DDLS)
+@pytest.mark.parametrize("n", [None, 0], ids=["edge_rows", "zero_rows"])
+def test_local_frame_equals_list_frame(spark, ddl, n):
+    assert len(_SITE_DDLS) >= 15
+    rows = _site_rows(ddl)[:n]
+    df = local_frame(spark, rows, ddl)
+    ref = spark.createDataFrame(rows, ddl)
+    assert df.schema == ref.schema
+    assert _cells(df) == _cells(ref)
+
+
+def test_local_frame_plans_local_relation_and_runs_no_job(spark):
+    ddl = "c_id int, cv array<double>, cn double"
+    rows = [(i, [float(i), 1.0 / (i + 1)], float(i) ** 0.5) for i in range(25)]
+    with _jobs(spark) as jobs:
+        df = local_frame(spark, rows, ddl)
+        got = [tuple(r) for r in df.collect()]
+    assert jobs == []
+    assert got == rows
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.lstrip().startswith("LocalRelation"), plan

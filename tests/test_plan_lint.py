@@ -14,13 +14,21 @@ screened for the two anti-patterns that are *never* acceptable at
 The targeted tests in test_plans.py pin per-operator plan shapes;
 this sweep guarantees no *new* entry quietly ships either
 anti-pattern without a dedicated test.
+
+Driver-side tables are built only through ``catalog.local_frame``
+(a JVM ``LocalRelation``): a ``createDataFrame`` of a Python list plans
+as a ``LogicalRDD`` whose every action runs Python-worker tasks.
 """
 
 from __future__ import annotations
 
+import ast
+import pathlib
+
 import pytest
 from pyspark.sql import types as T
 
+from parquet_ingestor_spark import catalog
 from parquet_ingestor_spark.queries import REGISTRY, _ensure_loaded
 
 _ensure_loaded()
@@ -100,3 +108,37 @@ def _assert_driver_hashable_schema(name: str, df) -> None:
             f"column {f.name!r} of type {f.dataType.simpleString()} — "
             "emit long-form scalars or a checksum instead"
         )
+
+
+def _create_dataframe_calls(root: pathlib.Path) -> list[str]:
+    """``file:line`` of every ``.createDataFrame(`` call under ``root``
+    outside ``catalog.local_frame``."""
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        allowed = set()
+        if path.name == "catalog.py":
+            for node in ast.walk(tree):
+                if isinstance(node, ast.FunctionDef) and node.name == "local_frame":
+                    allowed = {id(n) for n in ast.walk(node)}
+        found += [
+            f"{path.relative_to(root.parent)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "createDataFrame"
+            and id(node) not in allowed
+        ]
+    return found
+
+
+def test_driver_tables_built_only_through_local_frame():
+    root = pathlib.Path(catalog.__file__).parent
+    assert _create_dataframe_calls(root) == []
+
+
+def test_sim_ivf_topk_plans_no_logical_rdd(spark, sf_dir):
+    df = REGISTRY["sim_ivf_topk"].fn(spark, sf_dir)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" not in plan, plan
+    assert "LocalRelation" in plan, plan
