@@ -46,7 +46,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 
 from ..catalog import table
 from ..checkpointing import truncate_lineage
-from ..functions import int_e
+from ..functions import int_e, md5_int
 from ..queries import register
 
 # Mersenne prime 2^31-1: (a*h + b) stays < 2^62 — no int64 overflow
@@ -518,14 +518,8 @@ def simhash_fingerprints(
         # from the two md5 halves (15 hex chars each — 16 would cross
         # the int64 sign bit), reproducible verbatim in DuckDB SQL.
         # Callers must pass bits=60 so the vote/pack width matches.
-        h0 = (
-            f"transform(split({text_col}, ' '), t -> "
-            "cast(conv(substring(md5(t), 1, 15), 16, 10) as bigint))"
-        )
-        h1 = (
-            f"transform(split({text_col}, ' '), t -> "
-            "cast(conv(substring(md5(t), 17, 15), 16, 10) as bigint))"
-        )
+        h0 = f"transform(split({text_col}, ' '), t -> {md5_int('t', 1, 15)})"
+        h1 = f"transform(split({text_col}, ' '), t -> {md5_int('t', 17, 15)})"
     else:
         h0 = f"transform(split({text_col}, ' '), t -> xxhash64(t))"
         h1 = f"transform(split({text_col}, ' '), t -> xxhash64(t, 1))"
@@ -748,12 +742,7 @@ def minhash_lsh_pairs_md5(
         ),
     )
     sh = s.select("doc_id", F.explode("shingles").alias("sh"))
-    h = (
-        F.conv(
-            F.substring(F.md5(F.col("sh").cast("binary")), 1, 15), 16, 10
-        ).cast("long")
-        % _MERSENNE
-    )
+    h = F.expr(md5_int("sh", 1, 15)) % _MERSENNE
     # ONE wide aggregate (64 min exprs, map-side combined) instead of
     # a 64-way explode: the explode formulation shuffled
     # shingles × permutations rows and ran 5× slower at sf0.1

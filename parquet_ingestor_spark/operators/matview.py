@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import table
 from ..checkpointing import epoch_fold_stream
-from ..functions import ts_lit
+from ..functions import int_e, ts_lit
 from ..queries import register
 
 #: The view's group keys.
@@ -60,15 +60,12 @@ def pricing_partials(lineitem: DataFrame) -> DataFrame:
     f = lineitem.filter(
         F.col("l_shipdate") <= ts_lit(lineitem, "l_shipdate", CUTOFF)
     )
-    cents = lambda c: F.round(F.col(c) * 100, 0).cast("bigint")  # noqa: E731
-    disc_tt = F.round(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000, 0
-    ).cast("bigint")
+    disc_tt = int_e(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4)
     return f.groupBy(*GROUP).agg(
-        F.sum(cents("l_quantity")).alias("qty_c"),
-        F.sum(cents("l_extendedprice")).alias("base_c"),
+        F.sum(int_e("l_quantity", 2)).alias("qty_c"),
+        F.sum(int_e("l_extendedprice", 2)).alias("base_c"),
         F.sum(disc_tt).alias("disc_price_tt"),
-        F.sum(cents("l_discount")).alias("disc_c"),
+        F.sum(int_e("l_discount", 2)).alias("disc_c"),
         F.count("*").alias("cnt"),
     )
 

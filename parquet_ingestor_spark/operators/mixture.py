@@ -32,7 +32,7 @@ from pyspark.sql import types as T
 
 from ..catalog import table
 from ..checkpointing import epoch_fold_stream
-from ..functions import int_e
+from ..functions import int_e, md5_int, tokens
 from ..queries import register
 
 __all__ = [
@@ -40,12 +40,6 @@ __all__ = [
     "stratified_sample",
     "mixture_weights",
 ]
-
-
-def _tokens_col(text_col: str = "text") -> Column:
-    """Non-empty whitespace tokens — the corpus-wide tokenization rule
-    (identical split semantics in Spark and DuckDB)."""
-    return F.filter(F.split(text_col, " "), lambda w: w != F.lit(""))
 
 
 # ---------------------------------------------------------------------------
@@ -91,7 +85,7 @@ def corpus_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source")
         .agg(
             F.count("*").alias("n_docs"),
-            F.sum(F.size(_tokens_col())).alias("n_tokens"),
+            F.sum(F.size(tokens())).alias("n_tokens"),
         )
     )
     w = Window.partitionBy()
@@ -155,7 +149,7 @@ def temperature_weights(
     """Library form of ``corpus_temperature_weights`` for any stratum
     column and temperature ``alpha``."""
     per = docs.groupBy(stratum_col).agg(
-        F.sum(F.size(_tokens_col())).alias("n_tokens")
+        F.sum(F.size(tokens())).alias("n_tokens")
     )
     w = Window.partitionBy()
     # two window layers (share, then the pow-normalizer) — both run
@@ -181,7 +175,7 @@ def mixture_weights(docs: DataFrame, stratum_col: str = "source") -> DataFrame:
     """Library form of ``corpus_mixture_weights`` over any stratum."""
     per = docs.groupBy(stratum_col).agg(
         F.count("*").alias("n_docs"),
-        F.sum(F.size(_tokens_col())).alias("n_tokens"),
+        F.sum(F.size(tokens())).alias("n_tokens"),
     )
     w = Window.partitionBy()
     share = F.col("n_tokens") / F.sum("n_tokens").over(w)
@@ -204,24 +198,8 @@ def _admission_bucket(modulus: int) -> Column:
     """Deterministic uniform bucket in [0, modulus) from
     (doc_id, source) — md5-derived, identical in Spark and DuckDB,
     stable under task retry (the corpus_weighted_sample rule)."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("doc_id").cast("string"),
-                        F.lit(":"),
-                        F.col("source"),
-                    ).cast("binary")
-                ),
-                1,
-                6,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % modulus
-    )
+    key = "concat(CAST(doc_id AS STRING), ':', source)"
+    return F.expr(md5_int(key, 1, 6)) % modulus
 
 
 @register(
@@ -507,9 +485,9 @@ def heavy_hitters(
     """
     if support >= capacity + 1:
         raise ValueError("need capacity + 1 > support for the guarantee")
-    toks = docs.select(F.explode(_tokens_col(text_col)).alias("token"))
+    toks = docs.select(F.explode(tokens(text_col)).alias("token"))
     total = docs.agg(
-        F.sum(F.size(_tokens_col(text_col))).alias("total")
+        F.sum(F.size(tokens(text_col))).alias("total")
     )  # 1 row
     candidates = (
         docs.select(F.col(text_col).alias("text"))
@@ -582,7 +560,7 @@ def mg_merge_batch(
         .agg(F.sum("cnt").alias("cnt"))
     )
     batch_total = batch_docs.agg(
-        F.sum(F.size(_tokens_col(text_col))).alias("total")
+        F.sum(F.size(tokens(text_col))).alias("total")
     )
     if state is None:
         merged, total = batch_sum, batch_total
@@ -638,8 +616,8 @@ def incremental_heavy_hitters(
     if state is None:
         raise ValueError("no batches")
     candidates = state[0].select("token").distinct()
-    toks = corpus.select(F.explode(_tokens_col(text_col)).alias("token"))
-    total = corpus.agg(F.sum(F.size(_tokens_col(text_col))).alias("total"))
+    toks = corpus.select(F.explode(tokens(text_col)).alias("token"))
+    total = corpus.agg(F.sum(F.size(tokens(text_col))).alias("total"))
     return (
         toks.join(candidates, "token")
         .groupBy("token")
@@ -794,14 +772,7 @@ def text_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("tok") != "")
     )
     flag = F.when(F.col("pos") == 0, F.lit(1)).otherwise(
-        (
-            (
-                F.conv(F.substring(F.md5(F.col("tok").cast("binary")), 1, 8), 16, 10)
-                .cast("long")
-                % CDC_DIVISOR
-                == 0
-            ).cast("int")
-        )
+        (F.expr(md5_int("tok", 1, 8)) % CDC_DIVISOR == 0).cast("int")
     )
     w = (
         Window.partitionBy("doc_id")
@@ -873,7 +844,7 @@ def corpus_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     weights is a config change, not a plan change. Feature extraction
     binds the token array once per row (tokenize-once rule).
     """
-    toks = F.filter(F.split("text", " "), lambda w: w != F.lit(""))
+    toks = tokens()
     docs = (
         table(spark, sf_dir, "documents")
         .select("doc_id", toks.alias("toks"))
@@ -934,22 +905,8 @@ def corpus_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the precondition for leak-free eval when the corpus and the
     pipeline both evolve. One codegen expression, no shuffle but the
     presentation sort."""
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("doc_id").cast("string"), F.lit(":split")
-                    ).cast("binary")
-                ),
-                1,
-                6,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 1000
-    )
+    key = "concat(CAST(doc_id AS STRING), ':split')"
+    bucket = F.expr(md5_int(key, 1, 6)) % 1000
     return (
         table(spark, sf_dir, "documents")
         .select(
@@ -1006,11 +963,7 @@ def _dsir_doc_buckets(
     if bucket_hash == "xxhash64":
         bucket = F.pmod(F.xxhash64(F.col("g")), F.lit(buckets))
     elif bucket_hash == "md5":
-        bucket = (
-            F.conv(F.substring(F.md5(F.col("g").cast("binary")), 1, 8), 16, 10)
-            .cast("long")
-            % buckets
-        )
+        bucket = F.expr(md5_int("g", 1, 8)) % buckets
     else:
         raise ValueError(f"unknown bucket_hash {bucket_hash!r}")
     return (
@@ -1297,7 +1250,7 @@ def neyman_allocation(
             "double"
         )
     ) / F.col("n_docs")
-    sd_milli = F.round(sd * 1000, 0).cast("bigint")
+    sd_milli = int_e(sd, 3)
     w = s.select(
         "stratum",
         "n_docs",

@@ -31,6 +31,7 @@ from pyspark.sql import types as T
 
 from ..catalog import table
 from ..checkpointing import truncate_lineage
+from ..functions import seq_md5_int
 from ..queries import register
 
 #: Output schema of the decode/feature-extract stage.
@@ -719,17 +720,15 @@ RASTER_GRID = 6  # md5-seeded coarse grid edge (bilinear upsampled)
 
 def _raster_grid(seed: int):
     """The 6x6 md5-seeded coarse grid — each cell is the first 15 md5
-    hex chars of "{seed}:{u}:{v}" mod 256 (the repo's md5-bucket
-    determinism rule), reproducible verbatim in SQL."""
-    import hashlib
-
+    hex chars of "{seed}:{u}:{v}" mod 256 (the md5 bucket rule,
+    :func:`~parquet_ingestor_spark.functions.seq_md5_int`),
+    reproducible verbatim in SQL."""
     import numpy as np
 
     g = np.zeros((RASTER_GRID, RASTER_GRID), dtype=np.int64)
     for u in range(RASTER_GRID):
         for v in range(RASTER_GRID):
-            hx = hashlib.md5(f"{seed}:{u}:{v}".encode()).hexdigest()
-            g[u, v] = int(hx[:15], 16) % 256
+            g[u, v] = seq_md5_int(f"{seed}:{u}:{v}", 1, 15) % 256
     return g
 
 

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..catalog import table
 from ..checkpointing import truncate_lineage
-from ..functions import int_e
+from ..functions import int_e, tokens
 from ..queries import register
 
 #: Zipf OLS fit runs over the TOP_FIT most frequent tokens — the
@@ -455,9 +455,7 @@ def text_length_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks)."""
     lens = table(spark, sf_dir, "documents").select(
         "source",
-        F.size(
-            F.filter(F.split("text", " "), lambda w: w != F.lit(""))
-        ).cast("long").alias("n_tok"),
+        F.size(tokens()).cast("long").alias("n_tok"),
     )
     w = Window.partitionBy("source").orderBy("n_tok")
     ranked = lens.select(
@@ -539,9 +537,7 @@ def corpus_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     tok = table(spark, sf_dir, "documents").select(
         "source",
-        F.explode(
-            F.filter(F.split("text", " "), lambda w: w != F.lit(""))
-        ).alias("token"),
+        F.explode(tokens()).alias("token"),
     )
     # the token-count table feeds the totals AND the distribution, and
     # the distribution feeds both self-join sides — truncate both so

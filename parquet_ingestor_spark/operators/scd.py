@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import table
 from ..checkpointing import epoch_fold_stream
+from ..functions import int_e
 from ..queries import register
 
 
@@ -583,7 +584,7 @@ def orders_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     unmatched delete. Prices ride the q71 cents rule (+10% as integer
     cents), so the replacement image is engine-exact."""
     o = table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
+    cents = int_e("o_totalprice", 2)
     base = o.where(F.col("o_orderkey") % 5 != 0).select(
         "o_orderkey",
         "o_orderstatus",

@@ -25,7 +25,9 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from ..catalog import local_frame, table
 from ..checkpointing import truncate_lineage
-from ..functions import dlit, dot, int_e, l2sq, norm, seq_dot, seq_l2sq
+from ..functions import (
+    dlit, dot, int_e, l2sq, norm, seq_dot, seq_l2sq, seq_md5_int
+)
 from ..queries import register
 
 TOPK = 5
@@ -683,15 +685,13 @@ def _srp_plane_signs(dim: int, bits: int):
     uses (P[bit match] ≈ 1 − θ/π at these dims; Achlioptas 2003 for
     the ±1 JL construction), and make every projection an exact
     integer sum instead of a float fold."""
-    import hashlib
-
     import numpy as np
 
     s = np.empty((dim, bits), dtype=np.float64)
     for j in range(bits):
         for i in range(dim):
-            h = hashlib.md5(f"srp:{j}:{i}".encode()).hexdigest()
-            s[i, j] = 1.0 if int(h[0], 16) % 2 else -1.0
+            odd = seq_md5_int(f"srp:{j}:{i}", 1, 1) % 2
+            s[i, j] = 1.0 if odd else -1.0
     return s
 
 

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..catalog import local_frame, table
 from ..checkpointing import epoch_fold_stream
-from ..functions import int_e
+from ..functions import int_e, md5_int, md5_int_col
 from ..queries import register
 
 #: log2 of the HLL register count (DataSketches lgConfigK). 12 → 4096
@@ -86,8 +86,8 @@ def hll_det_registers(
 ) -> DataFrame:
     """(*keys, reg, m_r) registers of a DETERMINISTIC HyperLogLog: the
     register index is the first 12 md5 bits of the value, the rank is
-    1 + leading-zeros of the next 40 bits — the md5-bucket determinism
-    rule (`mixture._admission_bucket`, `sketches._cm_pos`) applied to
+    1 + leading-zeros of the next 40 bits — the md5 bucket rule
+    (:func:`~parquet_ingestor_spark.functions.md5_int`) applied to
     cardinality, which makes the whole sketch hash-comparable to a SQL
     oracle. One keyed aggregate; output is ≤ keys × 4096 rows. ``key``
     may be a list (e.g. ``[key, shard]`` for the mergeable sharded
@@ -106,9 +106,8 @@ def hll_det_registers(
     df = df.where(F.col(val).isNotNull())
     for k in keys:
         df = df.where(F.col(k).isNotNull())
-    h = F.md5(F.col(val).cast("string").cast("binary"))
-    reg = F.conv(F.substring(h, 1, 3), 16, 10).cast("long")
-    w = F.conv(F.substring(h, 4, 10), 16, 10).cast("long")
+    reg = F.expr(md5_int(val, 1, 3))
+    w = F.expr(md5_int(val, 4, 10))
     rank = F.when(w == 0, F.lit(41)).otherwise(
         (F.lit(40) - F.floor(F.log2(w))).cast("long")
     )
@@ -787,18 +786,7 @@ def _bloom_positions(
     if hasher == "md5":
         return F.array(
             *[
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(F.lit(str(i)), key).cast("binary")
-                        ),
-                        1,
-                        15,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                % num_bits
+                md5_int_col(F.concat(F.lit(str(i)), key), 1, 15) % num_bits
                 for i in range(num_hashes)
             ]
         )
@@ -1080,10 +1068,11 @@ def stream_bloom_screen(
 # (linearity) — the same fold-and-merge state shape as the other
 # three sketches, sized d·w counters regardless of corpus size.
 #
-# Determinism contract: positions come from the repo's md5-bucket
-# rule (`_cm_pos`), which DuckDB reproduces bit-identically — so
-# unlike typical sketch entries, the WHOLE sketch and every estimate
-# hash-verify against the SQL oracle (no rows-only concession).
+# Determinism contract: positions come from the md5 bucket rule
+# (`functions.md5_int_col`, via `_cm_pos`), which DuckDB reproduces
+# bit-identically — so unlike typical sketch entries, the WHOLE
+# sketch and every estimate hash-verify against the SQL oracle (no
+# rows-only concession).
 # ---------------------------------------------------------------------------
 
 #: Sketch geometry. Width is the accuracy knob (overestimate ≤
@@ -1097,24 +1086,11 @@ CM_WIDTH = 64
 
 def _cm_pos(key: "F.Column", j: int, width: int) -> "F.Column":
     """Row-j counter column for a key: first 24 md5 bits of
-    ``"j:key"`` mod width — the md5-bucket determinism rule
-    (`mixture._admission_bucket`), seeded per row by the prefix."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.lit(f"{j}:"), key.cast("string")).cast(
-                        "binary"
-                    )
-                ),
-                1,
-                6,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % width
-    )
+    ``"j:key"`` mod width — the md5 bucket rule
+    (:func:`~parquet_ingestor_spark.functions.md5_int_col`), seeded
+    per row by the prefix."""
+    seeded = F.concat(F.lit(f"{j}:"), key.cast("string"))
+    return md5_int_col(seeded, 1, 6) % width
 
 
 def cm_build(

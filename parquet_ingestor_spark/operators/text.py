@@ -12,7 +12,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from ..catalog import local_frame, table
-from ..functions import int_e
+from ..functions import int_e, md5_int, tokens
 from ..checkpointing import truncate_lineage
 from ..queries import register
 
@@ -232,10 +232,7 @@ def winnow_fingerprints_col(
     if hash_rule == "xxhash64":
         gram_hash = f"xxhash64(substring({t}, i, {WINNOW_K}))"
     elif hash_rule == "md5_48":
-        gram_hash = (
-            f"CAST(conv(substring(md5(CAST(substring({t}, i, {WINNOW_K}) "
-            f"AS BINARY)), 1, 12), 16, 10) AS BIGINT)"
-        )
+        gram_hash = md5_int(f"substring({t}, i, {WINNOW_K})", 1, 12)
     else:  # pragma: no cover - guarded misuse
         raise ValueError(f"unknown hash_rule {hash_rule!r}")
     hashes = (
@@ -422,24 +419,8 @@ def corpus_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(100)
         - 5 * F.regexp_extract(F.col("source"), "([0-9]+)", 1).cast("int"),
     )
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("doc_id").cast("string"),
-                        F.lit(":"),
-                        F.col("source"),
-                    ).cast("binary")
-                ),
-                1,
-                6,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
+    key = "concat(CAST(doc_id AS STRING), ':', source)"
+    bucket = F.expr(md5_int(key, 1, 6)) % 100
     return (
         table(spark, sf_dir, "documents")
         .select("doc_id", "source", bucket.alias("bucket"), rate.alias("rate"))
@@ -865,19 +846,8 @@ def corpus_shuffle_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-balanced (~n/shards each); the window never sees more than
     one shard.
     """
-    skey = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit(SHUFFLE_SEED), F.col("doc_id").cast("string")
-                ).cast("binary")
-            ),
-            1,
-            12,
-        ),
-        16,
-        10,
-    ).cast("long")
+    key = f"concat('{SHUFFLE_SEED}', CAST(doc_id AS STRING))"
+    skey = F.expr(md5_int(key, 1, 12))
     w = Window.partitionBy("shard").orderBy("skey", "doc_id")
     return (
         table(spark, sf_dir, "documents")
@@ -951,7 +921,7 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     merge_rows = bpe_train_merges(table(spark, sf_dir, "documents")).collect()
     merges = [(r.left, r.right) for r in merge_rows]  # 8 rows, bounded
-    toks = F.filter(F.split("text", " "), lambda w: w != F.lit(""))
+    toks = tokens()
     return (
         table(spark, sf_dir, "documents")
         .select(

@@ -168,7 +168,7 @@ def q65_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = table(spark, sf_dir, "lineitem").select(
         "l_partkey",
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("c"),
+        int_e("l_extendedprice", 2).alias("c"),
     )
     per_part = li.groupBy(F.col("l_partkey").alias("ps_partkey")).agg(
         F.sum("c").alias("part_value_e2")

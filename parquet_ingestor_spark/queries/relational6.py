@@ -108,9 +108,7 @@ def q70_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent instead of sitting one float-merge away from a
     rounding boundary."""
     li = table(spark, sf_dir, "lineitem")
-    units = F.round(
-        F.col("l_extendedprice") * F.col("l_discount") * 10000, 0
-    ).cast("bigint")
+    units = int_e(F.col("l_extendedprice") * F.col("l_discount"), 4)
     return (
         li.where(
             (F.col("l_shipdate") >= "1996-01-01")
@@ -171,9 +169,7 @@ def q71_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("o_orderkey", "o_custkey")
     )
-    cents = F.round(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100, 0
-    ).cast("bigint")
+    cents = int_e(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2)
     per_cust = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .groupBy("o_custkey")
@@ -229,9 +225,7 @@ def q72_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_partkey", "l_extendedprice", "l_discount")
     )
     part = table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    cents = F.round(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100, 0
-    ).cast("bigint")
+    cents = int_e(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2)
     return (
         li.join(part, li.l_partkey == part.p_partkey)
         .agg(
@@ -401,7 +395,7 @@ def q75_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hourly = ev.groupBy("event_type", "h").agg(
         F.count("*").alias("cnt"),
-        F.sum(F.round(F.col("value") * 1000, 0).cast("bigint")).alias("milli"),
+        F.sum(int_e("value", 3)).alias("milli"),
     )
     bounds = ev.agg(
         F.min("h").alias("h0"), F.max("h").alias("h1")
@@ -784,9 +778,7 @@ def q81_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("recency_days"),
             F.count("*").alias("frequency"),
-            F.sum(
-                F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
-            ).alias("monetary_cents"),
+            F.sum(int_e("o_totalprice", 2)).alias("monetary_cents"),
         )
     )
     cuts = base.agg(
@@ -844,9 +836,7 @@ def q82_weekday_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count("*").alias("n_events"),
-            F.sum(F.round(F.col("value") * 100, 0).cast("bigint")).alias(
-                "value_cents"
-            ),
+            F.sum(int_e("value", 2)).alias("value_cents"),
         )
         .orderBy("weekday", "hour_of_day")
     )
@@ -893,9 +883,7 @@ def q83_nation_trade_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer cents. The FULL join keeps nations one-sided in either
     flow."""
     nation = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    li_cents = F.round(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100, 0
-    ).cast("bigint")
+    li_cents = int_e(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2)
     supply = (
         table(spark, sf_dir, "lineitem")
         .select("l_suppkey", li_cents.alias("cents"))
@@ -907,7 +895,7 @@ def q83_nation_trade_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_name")
         .agg(F.sum("cents").alias("supplied_cents"))
     )
-    o_cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
+    o_cents = int_e("o_totalprice", 2)
     demand = (
         table(spark, sf_dir, "orders")
         .select("o_custkey", o_cents.alias("cents"))
@@ -972,9 +960,7 @@ def q84_monthly_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         .agg(
-            F.sum(
-                F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
-            ).alias("revenue_cents")
+            F.sum(int_e("o_totalprice", 2)).alias("revenue_cents")
         )
     )
     w = Window.orderBy("month")
@@ -1028,9 +1014,7 @@ def q85_revenue_hhi_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning. Two map-side-combinable aggregates, groups bounded
     by the nation catalog."""
     nation = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    cents = F.round(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100, 0
-    ).cast("bigint")
+    cents = int_e(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2)
     per_supp = (
         table(spark, sf_dir, "lineitem")
         .select("l_suppkey", cents.alias("cents"))
@@ -1216,7 +1200,7 @@ def q87_pareto_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     orders = table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
+    cents = int_e("o_totalprice", 2)
     pc = orders.groupBy("o_custkey").agg(F.sum(cents).alias("cents"))
     width = (
         "cast(pow(10, greatest(length(cast(cents as string)) - 2, 0)) "
@@ -1539,9 +1523,7 @@ def q90_nation_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cust = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     nation = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    cents = F.round(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100, 0
-    ).cast("bigint")
+    cents = int_e(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2)
     x = F.months_between(
         F.col("o_orderdate"), F.lit("1995-01-01").cast("timestamp")
     ).cast("bigint")
@@ -1657,9 +1639,7 @@ def q91_resample_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hourly = ev.groupBy("event_type", "h").agg(
         F.count("*").alias("cnt"),
-        F.sum(F.round(F.col("value") * 1000, 0).cast("bigint")).alias(
-            "milli"
-        ),
+        F.sum(int_e("value", 3)).alias("milli"),
     )
     bounds = ev.agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
     spine = (
@@ -1769,9 +1749,7 @@ def q92_share_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_nationkey", "n_regionkey", "n_name"
     )
     region = table(spark, sf_dir, "region").select("r_regionkey", "r_name")
-    cents = F.round(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100, 0
-    ).cast("bigint")
+    cents = int_e(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2)
     rev = (
         li.join(supp, li.l_suppkey == supp.s_suppkey)
         .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
@@ -1867,9 +1845,7 @@ def q93_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_extendedprice", "l_discount"
     )
-    cents = F.round(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100, 0
-    ).cast("bigint")
+    cents = int_e(F.col("l_extendedprice") * (1 - F.col("l_discount")), 2)
     # per-part revenue feeds TWO branches (the bucket histogram and
     # the final class join) — truncate so the lineitem scan+aggregate
     # runs once, not per branch (the scan-audit rule; the untruncated
@@ -2071,7 +2047,7 @@ def q95_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("first_touch", "last_touch")
         .agg(
             F.count("*").alias("n_purchases"),
-            F.sum(F.round(F.col("value") * 100).cast("bigint"))
+            F.sum(int_e("value", 2))
             .cast("bigint")
             .alias("revenue_cents"),
         )

@@ -271,10 +271,8 @@ def test_mg_merge_fold_bounds_and_superset(spark, sf_dir):
     import pyspark.sql.functions as F
 
     from parquet_ingestor_spark.catalog import table
-    from parquet_ingestor_spark.operators.mixture import (
-        _tokens_col,
-        mg_merge_batch,
-    )
+    from parquet_ingestor_spark.functions import tokens
+    from parquet_ingestor_spark.operators.mixture import mg_merge_batch
 
     docs = table(spark, sf_dir, "documents")
     capacity = 64
@@ -291,7 +289,7 @@ def test_mg_merge_fold_bounds_and_superset(spark, sf_dir):
         exact = {
             r.token: r.n
             for r in docs.select(
-                F.explode(_tokens_col()).alias("token")
+                F.explode(tokens()).alias("token")
             )
             .groupBy("token")
             .agg(F.count("*").alias("n"))
@@ -314,10 +312,8 @@ def test_stream_heavy_hitters_foreachbatch(spark, tmp_path):
     import os
     import shutil
 
-    from parquet_ingestor_spark.operators.mixture import (
-        _tokens_col,
-        stream_heavy_hitters,
-    )
+    from parquet_ingestor_spark.functions import tokens
+    from parquet_ingestor_spark.operators.mixture import stream_heavy_hitters
 
     docs = table(spark, "/root/testdata/sf0.001", "documents").select(
         "doc_id", "text"
@@ -356,7 +352,7 @@ def test_stream_heavy_hitters_foreachbatch(spark, tmp_path):
     )
     exact = {
         r.token: r.n
-        for r in docs.select(F.explode(_tokens_col()).alias("token"))
+        for r in docs.select(F.explode(tokens()).alias("token"))
         .groupBy("token")
         .agg(F.count("*").alias("n"))
         .collect()

@@ -110,31 +110,55 @@ def _assert_driver_hashable_schema(name: str, df) -> None:
         )
 
 
-def _create_dataframe_calls(root: pathlib.Path) -> list[str]:
-    """``file:line`` of every ``.createDataFrame(`` call under ``root``
-    outside ``catalog.local_frame``."""
+def _uses_outside(
+    root: pathlib.Path, token: str, allowed: set[str]
+) -> list[str]:
+    """``file:line`` of every use of ``token`` under ``root`` — a call
+    whose callee is named ``token`` (``x.token(...)`` or
+    ``token(...)``) or a string constant containing ``token(`` (SQL
+    text) — outside ``allowed``: module paths relative to ``root``
+    (``"functions.py"``) and functions in them
+    (``"catalog.py:local_frame"``)."""
     found = []
     for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel in allowed:
+            continue
         tree = ast.parse(path.read_text())
-        allowed = set()
-        if path.name == "catalog.py":
-            for node in ast.walk(tree):
-                if isinstance(node, ast.FunctionDef) and node.name == "local_frame":
-                    allowed = {id(n) for n in ast.walk(node)}
-        found += [
-            f"{path.relative_to(root.parent)}:{node.lineno}"
-            for node in ast.walk(tree)
-            if isinstance(node, ast.Call)
-            and isinstance(node.func, ast.Attribute)
-            and node.func.attr == "createDataFrame"
-            and id(node) not in allowed
-        ]
+        inside = {
+            id(n)
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef)
+            and f"{rel}:{fn.name}" in allowed
+            for n in ast.walk(fn)
+        }
+        for node in ast.walk(tree):
+            if id(node) in inside:
+                continue
+            if isinstance(node, ast.Call):
+                f = node.func
+                hit = getattr(f, "attr", getattr(f, "id", None)) == token
+            else:
+                hit = isinstance(node, ast.Constant) and isinstance(
+                    node.value, str
+                ) and f"{token}(" in node.value
+            if hit:
+                found.append(f"{path.relative_to(root.parent)}:{node.lineno}")
     return found
 
 
+_PKG = pathlib.Path(catalog.__file__).parent
+
+
 def test_driver_tables_built_only_through_local_frame():
-    root = pathlib.Path(catalog.__file__).parent
-    assert _create_dataframe_calls(root) == []
+    allowed = {"catalog.py:local_frame"}
+    assert _uses_outside(_PKG, "createDataFrame", allowed) == []
+
+
+def test_md5_bucket_rule_spelled_only_in_functions():
+    # conv(substring(md5(...))) — as F.conv or in SQL text — is the
+    # md5 bucket rule; every operator reaches it through functions.py
+    assert _uses_outside(_PKG, "conv", {"functions.py"}) == []
 
 
 def test_sim_ivf_topk_plans_no_logical_rdd(spark, sf_dir):

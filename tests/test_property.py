@@ -629,3 +629,81 @@ def test_vector_folds_match_python_twins_and_duckdb(spark, pairs):
         else:
             assert got[i] == (0.0, 0.0, 0.0)
             assert duck[i] == (None, None, None)
+
+
+#: every (first, nhex) md5 slice the package reads
+_MD5_SLICES = (
+    (1, 1), (1, 3), (4, 10), (1, 6), (1, 8), (1, 12), (1, 15), (17, 15)
+)
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.text(max_size=16),
+            st.integers(min_value=-(2**63), max_value=2**63 - 1),
+        ),
+        min_size=1,
+        max_size=8,
+    )
+)
+def test_md5_int_matches_python_twin_and_duckdb(spark, rows):
+    """Property: the md5 bucket rule gives one integer in every
+    spelling — the SQL text (md5_int), the Column twin (md5_int_col),
+    the driver-side twin (seq_md5_int) and DuckDB's
+    ('0x' || substring(md5(s), first, nhex))::BIGINT — for random
+    unicode strings and bigints (hashed by their string form), at
+    every (first, nhex) slice the package uses; null maps to null."""
+    import duckdb
+    import pyarrow as pa
+
+    from parquet_ingestor_spark.catalog import local_frame
+    from parquet_ingestor_spark.functions import (
+        md5_int,
+        md5_int_col,
+        seq_md5_int,
+    )
+
+    rows = [*rows, ("", 0), ("naïve café — 東京 🚀", -1), (None, None)]
+    cols = [
+        e.alias(f"{kind}{c}_{f}_{n}")
+        for c in ("s", "v")
+        for f, n in _MD5_SLICES
+        for kind, e in (
+            ("t", F.expr(md5_int(c, f, n))),
+            ("c", md5_int_col(F.col(c), f, n)),
+        )
+    ]
+    frame = local_frame(
+        spark,
+        [(i, s, v) for i, (s, v) in enumerate(rows)],
+        "id long, s string, v bigint",
+    )
+    got = {r["id"]: r for r in frame.select("id", *cols).collect()}
+    with duckdb.connect() as con:
+        con.register("t", pa.table({
+            "id": list(range(len(rows))),
+            "s": pa.array([s for s, _ in rows], type=pa.string()),
+            "v": pa.array([v for _, v in rows], type=pa.int64()),
+        }))
+        duck_cols = ", ".join(
+            f"('0x' || substring(md5({c}::VARCHAR), {f}, {n}))::BIGINT"
+            for c in ("s", "v")
+            for f, n in _MD5_SLICES
+        )
+        duck = {
+            r[0]: r[1:]
+            for r in con.execute(f"SELECT id, {duck_cols} FROM t").fetchall()
+        }
+    for i, (s, v) in enumerate(rows):
+        want = [seq_md5_int(x, f, n) for x in (s, v) for f, n in _MD5_SLICES]
+        if s is None:
+            assert set(want) == {None}
+        sql = [got[i][f"t{c}_{f}_{n}"] for c in "sv" for f, n in _MD5_SLICES]
+        col = [got[i][f"c{c}_{f}_{n}"] for c in "sv" for f, n in _MD5_SLICES]
+        assert sql == col == list(duck[i]) == want, (s, v)
