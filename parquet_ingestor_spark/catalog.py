@@ -54,12 +54,6 @@ TABLES: tuple[str, ...] = (
     "embeddings",
 )
 
-# Tables that are always broadcast-join-sized relative to the facts —
-# at TPC-H geometry region/nation are constant-size and supplier grows
-# ~100× slower than lineitem.
-BROADCAST_DIMS: frozenset[str] = frozenset({"region", "nation", "supplier"})
-
-
 #: The session settings Spark 4.1's parquet-to-Spark schema converter
 #: reads; an inferred schema is only reused under the same values.
 SCHEMA_CONFS: tuple[str, ...] = (
@@ -167,9 +161,3 @@ def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
     return spark.createDataFrame(
         pa.Table.from_arrays(arrays, schema=arrow_schema), schema
     )
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view (for spark.sql use)."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -35,13 +35,17 @@ into lambda bodies; a Column site wraps it in one ``F.expr``),
 :func:`md5_int_col` is the Column twin for a key handed in as a
 Column, and :func:`seq_md5_int` the driver-side Python twin. DuckDB
 oracles spell it ``('0x' || substring(md5(s), first, nhex))::BIGINT``.
-THE tokenizer rule: :func:`tokens` splits on single spaces and drops
-empty tokens, exactly as DuckDB's ``list_filter(string_split(...))``.
+:func:`admission_bucket` applies it to a documents row's
+``doc_id:source`` key (the sampling operators' admission rule).
+THE tokenizer rule: :func:`tokens_sql` splits on single spaces and
+drops empty tokens, exactly as DuckDB's ``list_filter(string_split(...))``;
+:func:`tokens` is its Column twin.
 """
 
 from __future__ import annotations
 
 import hashlib
+import math
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
@@ -84,8 +88,11 @@ def dlit(v: float) -> str:
     """An exactly-round-tripping Spark SQL DOUBLE literal. Plain
     decimal literals parse as DECIMAL (precision-lossy past 18
     fraction digits), so append the D suffix; exponent forms are
-    already DOUBLE (and reject a D suffix)."""
+    already DOUBLE (and reject a D suffix); inf and nan have no
+    literal form, so cast their string."""
     r = repr(float(v))
+    if not math.isfinite(v):
+        return f"CAST('{r}' AS DOUBLE)"
     return r if "e" in r or "E" in r else r + "D"
 
 
@@ -165,6 +172,19 @@ def seq_md5_int(s, first: int, nhex: int) -> int | None:
     return int(h[first - 1 : first - 1 + nhex], 16)
 
 
+def admission_bucket(modulus: int) -> Column:
+    """Deterministic uniform bucket in [0, modulus) of a documents row:
+    the md5 bucket rule over ``doc_id:source``, so admission is stable
+    under task retry and reproducible in DuckDB."""
+    key = "concat(CAST(doc_id AS STRING), ':', source)"
+    return F.expr(md5_int(key, 1, 6)) % modulus
+
+
+def tokens_sql(text_col: str = "text") -> str:
+    """SQL text of the non-empty single-space tokens of ``text_col``."""
+    return f"filter(split({text_col}, ' '), w -> w != '')"
+
+
 def tokens(text_col: str = "text") -> Column:
-    """Non-empty single-space tokens of ``text_col`` (one parse)."""
-    return F.expr(f"filter(split({text_col}, ' '), w -> w != '')")
+    """Column twin of :func:`tokens_sql` (one parse)."""
+    return F.expr(tokens_sql(text_col))

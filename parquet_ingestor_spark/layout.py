@@ -30,6 +30,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from .functions import dlit
+
 #: Bits per clustered column (256 rank buckets). 8 bits × ≤4 columns
 #: keeps the Morton key in a 32-bit range — far finer than any
 #: realistic file count, and the expression stays compact.
@@ -54,15 +56,16 @@ def morton_interleave(bucket_cols: list[Column], bits: int = ZORDER_BITS) -> Col
     return z
 
 
-def _rank_bucket(col: Column, edges: list[float]) -> Column:
+def _rank_bucket(col: str, edges: list[float]) -> Column:
     """Rank bucket id 0..len(edges): the number of quantile cut points
     ≤ x, evaluated as a codegen filter over the inlined edge array.
     NULLs sort to bucket 0 (the lowest Z-region) so they cluster
     together instead of scattering."""
-    arr = F.array(*[F.lit(float(e)) for e in edges])
-    x = col.cast("double")
-    return F.when(x.isNull(), F.lit(0)).otherwise(
-        F.size(F.filter(arr, lambda e: e <= x))
+    arr = ", ".join(dlit(e) for e in edges)
+    x = f"CAST(`{col}` AS DOUBLE)"
+    return F.expr(
+        f"CASE WHEN {x} IS NULL THEN 0 "
+        f"ELSE size(filter(array({arr}), e -> e <= {x})) END"
     )
 
 
@@ -81,7 +84,7 @@ def zorder_key(
     probs = [(i + 1) / (n_edges + 1) for i in range(n_edges)]
     edges = df.approxQuantile(cols, probs, 1e-3)
     buckets = [
-        _rank_bucket(F.col(c), es) for c, es in zip(cols, edges)
+        _rank_bucket(c, es) for c, es in zip(cols, edges)
     ]
     return df.withColumn("_z", morton_interleave(buckets, bits))
 

@@ -735,6 +735,8 @@ def corpus_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: Fixed retrieval query for the BM25 entry (vocabulary words chosen
 #: to be mid-frequency in the synthetic corpus).
 BM25_TERMS = ("spark", "join", "window")
+# spelled as SQL string literals in text_bm25_topk
+assert not any("'" in t or "\\" in t for t in BM25_TERMS)
 BM25_K1 = 1.2
 BM25_B = 0.75
 BM25_TOPK = 20
@@ -797,14 +799,12 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical across engines (a SUM() over an exploded term table
     would be order-nondeterministic in the last ulp).
     """
-    toks = F.split(F.col("text"), " ")
     f = table(spark, sf_dir, "documents").select(
         "doc_id",
-        F.size(toks).alias("dl"),
+        F.size(F.split("text", " ")).alias("dl"),
         *[
-            F.size(F.filter(toks, (lambda t: lambda x: x == t)(t))).alias(
-                f"tf{i}"
-            )
+            F.expr(f"size(filter(split(text, ' '), x -> x = '{t}'))")
+            .alias(f"tf{i}")
             for i, t in enumerate(BM25_TERMS)
         ],
     )

@@ -511,32 +511,6 @@ def kmeans_fit(
     return cents, assigned, iters
 
 
-def kmeans_fit_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRODUCTION fit summary (float spherical Lloyd's with tol early
-    stop via :func:`kmeans_fit`): final cluster sizes + mean
-    within-cluster cosine. Library surface only since round 8 — the
-    REGISTERED ``emb_kmeans_fit`` entry runs the quantized
-    fixed-iteration twin below so the driver can hash-check the whole
-    fit (the minhash/bloom md5-twin rule applied to k-means)."""
-    cents, assigned, _ = kmeans_fit(table(spark, sf_dir, "embeddings"))
-    cdf = local_frame(
-        spark,
-        [(int(i), [float(x) for x in cents[i]]) for i in range(KMEANS_K)],
-        "c_id int, cv array<double>",
-    )
-    csim = dot("u", "cv")
-    return (
-        assigned.join(F.broadcast(cdf), "c_id")
-        .select("c_id", csim.alias("csim"))
-        .groupBy("c_id")
-        .agg(
-            F.count("*").alias("cluster_size"),
-            int_e(F.avg("csim"), 4).alias("mean_cosine_e4"),
-        )
-        .orderBy("c_id")
-    )
-
-
 #: Fixed Lloyd rounds for the hash-verifiable k-means twin — iteration
 #: count is part of the cross-engine contract (the pagerank rule).
 KMEANS_TWIN_ITERS = 2
@@ -803,8 +777,8 @@ def _kmeans_fit_oracle(
     doc=f"Full k-means fit, hash-verifiable twin (k={KMEANS_K}, "
     f"{KMEANS_TWIN_ITERS} fixed Lloyd rounds over e8-quantized unit "
     "vectors, exact integer dots/updates — bit-identical across "
-    "engines; production float fit stays kmeans_fit/"
-    "kmeans_fit_summary): cluster sizes, mean assignment cosine, "
+    "engines; production float fit stays kmeans_fit): cluster "
+    "sizes, mean assignment cosine, "
     "updated centroid head coordinates.",
     tags=("embedding", "iterative"),
 )

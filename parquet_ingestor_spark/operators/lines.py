@@ -113,14 +113,9 @@ def line_dedup(
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_lines_kept"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("line_no", "line"))
-                    ),
-                    lambda s: s.line,
-                ),
-                " ",
+            F.expr(
+                "array_join(transform(array_sort(collect_list("
+                "struct(line_no, line))), s -> s.line), ' ')"
             ).alias("cleaned_text"),
         )
     )

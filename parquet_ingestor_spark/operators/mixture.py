@@ -27,12 +27,12 @@ from collections.abc import Iterator
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import types as T
 
 from ..catalog import table
 from ..checkpointing import epoch_fold_stream
-from ..functions import int_e, md5_int, tokens
+from ..functions import admission_bucket, int_e, md5_int, tokens, tokens_sql
 from ..queries import register
 
 __all__ = [
@@ -194,14 +194,6 @@ def mixture_weights(docs: DataFrame, stratum_col: str = "source") -> DataFrame:
 # Stratified (balanced) sampling
 
 
-def _admission_bucket(modulus: int) -> Column:
-    """Deterministic uniform bucket in [0, modulus) from
-    (doc_id, source) — md5-derived, identical in Spark and DuckDB,
-    stable under task retry (the corpus_weighted_sample rule)."""
-    key = "concat(CAST(doc_id AS STRING), ':', source)"
-    return F.expr(md5_int(key, 1, 6)) % modulus
-
-
 @register(
     "corpus_stratified_sample",
     oracle="""
@@ -251,7 +243,7 @@ def stratified_sample(docs: DataFrame, modulus: int = 1_000_000) -> DataFrame:
         .join(counts, "source")
         .crossJoin(F.broadcast(mn))  # 1 row — fixed-size broadcast
         .filter(
-            _admission_bucket(modulus) * F.col("cnt")
+            admission_bucket(modulus) * F.col("cnt")
             < F.lit(modulus) * F.col("mn")
         )
         .select("doc_id", "source")
@@ -782,9 +774,8 @@ def text_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = p.select(
         "doc_id", "pos", "tok", F.sum(flag).over(w).alias("chunk_idx")
     )
-    ordered_toks = F.transform(
-        F.array_sort(F.collect_list(F.struct("pos", "tok"))),
-        lambda s: s.tok,
+    ordered_toks = F.expr(
+        "transform(array_sort(collect_list(struct(pos, tok))), s -> s.tok)"
     )
     return (
         c.groupBy("doc_id", "chunk_idx")
@@ -850,10 +841,7 @@ def corpus_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", toks.alias("toks"))
         .filter(F.size("toks") > 0)
     )
-    stop = F.filter(
-        F.col("toks"),
-        lambda w: w.isin("the", "a", "of", "and", "is"),
-    )
+    stop = F.expr("filter(toks, w -> w IN ('the', 'a', 'of', 'and', 'is'))")
     n_words = F.size("toks")
     stop_frac = F.size(stop) / n_words
     uniq_frac = F.size(F.array_distinct("toks")) / n_words
@@ -954,7 +942,7 @@ def _dsir_doc_buckets(
     hasher; only cross-engine reproducibility differs.
     """
     grams = F.expr(
-        "flatten(transform(array(filter(split(text, ' '), w -> w != '')), "
+        f"flatten(transform(array({tokens_sql()}), "
         "toks -> concat(toks, CASE WHEN size(toks) >= 2 THEN "
         "transform(sequence(1, size(toks) - 1), "
         "i -> array_join(slice(toks, i, 2), ' ')) "

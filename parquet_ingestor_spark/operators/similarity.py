@@ -250,13 +250,6 @@ def sim_ivf_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk_expr(table(spark, sf_dir, "embeddings"))
 
 
-def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-k twin (k=IVF_K so tests/oracles are reproducible);
-    production callers use :func:`ivf_search` with ``n_lists=None``
-    (scaled to corpus size) or a trained centroid matrix."""
-    return ivf_search(table(spark, sf_dir, "embeddings"), n_lists=IVF_K)
-
-
 def ivf_topk_expr(
     emb: DataFrame,
     k_top: int = TOPK,
@@ -360,7 +353,6 @@ def ivf_search(
     n_lists: int | None = None,
     nprobe: int = IVF_NPROBE,
     k_top: int = TOPK,
-    centroid_mat=None,
 ) -> DataFrame:
     """IVF search in one corpus scan, the 100 TB shape.
 
@@ -370,10 +362,8 @@ def ivf_search(
     rule), so a probe scans ≈ nprobe × 1024 vectors however big the
     corpus gets; a FIXED n_lists would make every probe scan
     O(n/const) — linear in the corpus again (round-3 verdict #5).
-    Default centroids are the deterministic first-``n_lists`` vectors
-    (a "training-free" stand-in so tests/oracles are reproducible);
-    pass ``centroid_mat`` (an (n_lists × dim) ndarray, e.g. from
-    ``kmeans_fit``) for the trained production path. Centroids and
+    Centroids (the deterministic first-``n_lists`` vectors, a
+    "training-free" stand-in so tests/oracles are reproducible) and
     the 10-row query set are collected to the driver and broadcast;
     each Arrow batch then does assignment (argmax over n_lists),
     probe filtering, and per-batch top-k entirely in numpy. Only
@@ -386,27 +376,17 @@ def ivf_search(
     import pandas as pd
 
     spark = emb.sparkSession
-    if centroid_mat is not None:
-        cm = np.asarray(centroid_mat, dtype=np.float64).copy()
-        qrows = sorted(
-            emb.filter(F.col("vec_id") < N_QUERIES)
-            .select("vec_id", "embedding")
-            .collect(),
-            key=lambda r: r.vec_id,
-        )
-    else:
-        if n_lists is None:
-            n_lists = scaled_k(emb.count())
-        # ONE head collect shared by centroids AND queries (the twin
-        # entries' _head_rows rule, guide §1.2): collecting the two
-        # tiny samples separately cost a full sequential Spark job
-        # each. head is ordered by vec_id, so the filtered slices
-        # equal the old filter-collects exactly (at most n ids are
-        # < n, and all of them sit inside the n-smallest head).
-        head = _head_rows(emb, max(n_lists, N_QUERIES))
-        crows = [r for r in head if r.vec_id < n_lists]
-        cm = np.array([r.embedding for r in crows], dtype=np.float64)
-        qrows = [r for r in head if r.vec_id < N_QUERIES]
+    if n_lists is None:
+        n_lists = scaled_k(emb.count())
+    # ONE head collect shared by centroids AND queries (the twin
+    # entries' _head_rows rule, guide §1.2): two separate collects
+    # cost a sequential Spark job each. head is ordered by vec_id, so
+    # each filtered slice holds every id below its bound (at most n
+    # ids are < n, and all of them sit inside the n-smallest head).
+    head = _head_rows(emb, max(n_lists, N_QUERIES))
+    crows = [r for r in head if r.vec_id < n_lists]
+    cm = np.array([r.embedding for r in crows], dtype=np.float64)
+    qrows = [r for r in head if r.vec_id < N_QUERIES]
     cm /= np.linalg.norm(cm, axis=1, keepdims=True)
     q_ids = [r.vec_id for r in qrows]
     qm = np.array([r.embedding for r in qrows], dtype=np.float64)
@@ -981,15 +961,6 @@ def pq_encode(
     )
 
 
-def pq_encode_sorted(
-    emb: DataFrame, m: int = PQ_SUBSPACES, k: int = PQ_CODES
-) -> DataFrame:
-    """Presentation wrapper: ``pq_encode`` + a vec_id range sort. Only
-    the registered entry pays the sort; serving paths (ADC) consume
-    the unsorted map-only output directly."""
-    return pq_encode(emb, m, k).orderBy("vec_id")
-
-
 def _pq_best_structs(books) -> list[Column]:
     """Per-subspace (d2, code) struct-argmin expressions — the shared
     expression core of :func:`pq_encode_expr`,
@@ -1062,7 +1033,6 @@ def pq_encode_expr(
     emb: DataFrame,
     m: int = PQ_SUBSPACES,
     k: int = PQ_CODES,
-    sort: bool = True,
 ) -> DataFrame:
     """Expression-based PQ encode — the oracle-checkable twin of the
     numpy :func:`pq_encode` path. Every distance is a SEQUENTIAL
@@ -1087,12 +1057,11 @@ def pq_encode_expr(
             best[si]["d2"] if total is None else total + best[si]["d2"]
         )
     mse = total / F.lit(float(m_ * d_sub))
-    out = emb.select(
+    return emb.select(
         "vec_id",
         code_key.alias("code_key"),
         int_e(mse, 6).alias("recon_mse_e6"),
-    )
-    return out.orderBy("vec_id") if sort else out
+    ).orderBy("vec_id")
 
 
 def _pq_code_ctes(m: int = PQ_SUBSPACES, k: int = PQ_CODES) -> str:
@@ -1644,7 +1613,7 @@ def sem_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracle-twin SemDeDup entry: deterministic first-``IVF_K``
     centroids so the DuckDB oracle can reproduce the assignment.
     Production callers use :func:`semantic_dedup` (k scaled to corpus
-    size, optionally k-means-trained centroids)."""
+    size) or :func:`sem_dedup_trained` (k-means-trained centroids)."""
     return semantic_dedup(
         table(spark, sf_dir, "embeddings"), k=IVF_K
     )
@@ -1654,7 +1623,6 @@ def semantic_dedup(
     emb: DataFrame,
     tau: float = SEM_TAU,
     k: int | None = None,
-    centroids: DataFrame | None = None,
     vectorized: bool = True,
 ) -> DataFrame:
     """Semantic dedup via embedding clusters (Abbas et al. 2023,
@@ -1670,10 +1638,8 @@ def semantic_dedup(
     matching SemDeDup's published cluster-per-corpus-size scaling),
     making pair work O(n·target_cluster_size) instead of O(n²/const).
     The registered oracle twin pins ``k=IVF_K`` for SQL
-    expressibility. ``centroids`` (c_id, cv[, cn]) overrides the
-    deterministic first-k rule — pass :func:`~.embeddings.kmeans_fit`
-    output for the trained production path
-    (:func:`sem_dedup_trained` wires that up).
+    expressibility. Centroids are the deterministic first-k vectors;
+    :func:`sem_dedup_trained` is the k-means-trained path.
 
     Assignment reuses the emb_kmeans_step shape: broadcast centroids,
     ``max(struct)`` aggregate, one scalar row per vector through the
@@ -1692,17 +1658,14 @@ def semantic_dedup(
     summation-order noise, so the oracle comparison is mode-agnostic.
     """
     emb = with_norm(emb)
-    if centroids is None:
-        if k is None:
-            # parquet row-count is metadata-only — no full scan
-            k = scaled_k(emb.count())
-        centroids = emb.filter(F.col("vec_id") < k).select(
-            F.col("vec_id").alias("c_id"),
-            F.col("embedding").alias("cv"),
-            F.col("nrm").alias("cn"),
-        )
-    elif "cn" not in centroids.columns:
-        centroids = centroids.withColumn("cn", norm("cv"))
+    if k is None:
+        # parquet row-count is metadata-only — no full scan
+        k = scaled_k(emb.count())
+    centroids = emb.filter(F.col("vec_id") < k).select(
+        F.col("vec_id").alias("c_id"),
+        F.col("embedding").alias("cv"),
+        F.col("nrm").alias("cn"),
+    )
     csim = dot("embedding", "cv") / (F.col("nrm") * F.col("cn"))
     assigned = (
         emb.crossJoin(F.broadcast(centroids))
@@ -1882,48 +1845,20 @@ def pq_adc_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_adc_topk_expr(table(spark, sf_dir, "embeddings"))
 
 
-def ivfpq_index(
-    emb: DataFrame,
-    n_lists: int | None = IVF_K,
-    m: int = PQ_SUBSPACES,
-    k: int = PQ_CODES,
-    centroid_mat=None,
-    books=None,
-) -> DataFrame:
+def ivfpq_index(emb: DataFrame, centroid_mat, books) -> DataFrame:
     """IVF-PQ index build: (vec_id, list_id, code_key) in ONE
     shuffle-free numpy ``mapInPandas`` pass — coarse L2 assignment to
-    the ``n_lists`` centroids and PQ encoding share the batch, so the
-    corpus is read exactly once at index time. ``n_lists=None``
-    scales the list count to the corpus (``scaled_k``); the
-    registered serving twin pins ``IVF_K`` for reproducibility. Note
-    PQ's per-subspace code count ``k`` is deliberately NOT scaled —
-    it is a bit-width choice (4-bit codes), not a partitioning one.
-    Default centroids are the deterministic first-``n_lists`` rule;
-    pass ``centroid_mat`` for a k-means-trained coarse quantizer. At
-    scale the output is written ``partitionBy(list_id)`` so serving
-    scans only probed lists' files; here list pruning happens in the
-    serving pass's mask.
+    the ``centroid_mat`` rows (an (n_lists × dim) ndarray) and PQ
+    encoding against ``books`` (the (m, k, d_sub) codebooks) share the
+    batch, so the corpus is read exactly once at index time. At scale
+    the output is written ``partitionBy(list_id)`` so serving scans
+    only probed lists' files; here list pruning happens in the serving
+    pass's mask.
     """
     import numpy as np
     import pandas as pd
 
-    if centroid_mat is not None:
-        cm = np.asarray(centroid_mat, dtype=np.float64)
-        if books is None:
-            books = pq_codebooks(emb, m, k)
-    else:
-        if n_lists is None:
-            n_lists = scaled_k(emb.count())
-        # ONE head collect covers centroids and (when not prebuilt)
-        # the codebooks — the _head_rows sharing rule; head is
-        # vec_id-ordered, so the filtered slice equals the old
-        # filter-collect exactly
-        head = _head_rows(emb, max(n_lists, k))
-        if books is None:
-            books = pq_codebooks(emb, m, k, head_rows=head)
-        crows = [r for r in head if r.vec_id < n_lists]
-        cm = np.array([r.embedding for r in crows], dtype=np.float64)
-    b = emb.sparkSession.sparkContext.broadcast((cm, books))
+    b = emb.sparkSession.sparkContext.broadcast((centroid_mat, books))
 
     def _index(batches):
         cm, cb = b.value
@@ -2215,13 +2150,11 @@ def ivf_index_write(
     emb: DataFrame,
     path: str,
     n_lists: int | None = None,
-    centroid_mat=None,
 ) -> int:
     """Build and persist the IVF index; returns ``n_lists``.
 
     The codebook rule matches ``ivf_search`` (deterministic
-    first-n vectors by default, corpus-scaled list count; pass a
-    ``kmeans_fit`` matrix for the trained path), so a persisted index
+    first-n vectors, corpus-scaled list count), so a persisted index
     serves bit-identical results to the in-process entry. Assignment
     is one map-only numpy pass (argmax over the broadcast codebook);
     the only write-side shuffle is parquet's own per-partition file
@@ -2232,18 +2165,15 @@ def ivf_index_write(
     import pandas as pd
 
     spark = emb.sparkSession
-    if centroid_mat is not None:
-        cm = np.asarray(centroid_mat, dtype=np.float64).copy()
-    else:
-        if n_lists is None:
-            n_lists = scaled_k(emb.count())
-        crows = sorted(
-            emb.filter(F.col("vec_id") < n_lists)
-            .select("vec_id", "embedding")
-            .collect(),
-            key=lambda r: r.vec_id,
-        )
-        cm = np.array([r.embedding for r in crows], dtype=np.float64)
+    if n_lists is None:
+        n_lists = scaled_k(emb.count())
+    crows = sorted(
+        emb.filter(F.col("vec_id") < n_lists)
+        .select("vec_id", "embedding")
+        .collect(),
+        key=lambda r: r.vec_id,
+    )
+    cm = np.array([r.embedding for r in crows], dtype=np.float64)
     cm /= np.linalg.norm(cm, axis=1, keepdims=True)
     n_lists = cm.shape[0]
     b = spark.sparkContext.broadcast(cm)

@@ -1,4 +1,4 @@
-"""Skew-mitigation primitives: salted aggregation and salted join.
+"""Skew mitigation: two-phase salted aggregation.
 
 AQE's skew-join split handles most skew automatically; salting is the
 explicit technique for the cases AQE can't fix — skewed *aggregation*
@@ -50,32 +50,6 @@ def salted_count_sum(
     return partial.groupBy(key).agg(
         F.sum("_cnt").alias("cnt"), F.sum("_sum").alias("total")
     )
-
-
-def salted_join_counts(
-    facts: DataFrame,
-    dim: DataFrame,
-    fact_key: str,
-    dim_key: str,
-    salts: int = DEFAULT_SALTS,
-    salt_cols: list[str] | None = None,
-) -> DataFrame:
-    """Skewed equi-join: salt the fact side, explode the (small) dim
-    side S× so every (key, salt) shard finds its dim row. Use when the
-    dim is too big to broadcast and the fact key is skewed. The salt
-    is a content hash (see salted_count_sum) so task re-execution
-    re-derives identical shards."""
-    salt_src = [F.col(c) for c in (salt_cols or facts.columns)]
-    salted_facts = facts.withColumn(
-        "_salt", F.pmod(F.xxhash64(*salt_src), F.lit(salts)).cast("int")
-    )
-    exploded_dim = dim.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salts - 1)))
-    ).withColumn("_salt", F.col("_salt").cast("int"))
-    return salted_facts.join(
-        exploded_dim,
-        (F.col(fact_key) == F.col(dim_key)) & (salted_facts._salt == exploded_dim._salt),
-    ).drop("_salt")
 
 
 @register(

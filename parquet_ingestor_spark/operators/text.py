@@ -12,7 +12,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from ..catalog import local_frame, table
-from ..functions import int_e, md5_int, tokens
+from ..functions import admission_bucket, int_e, md5_int, tokens
 from ..checkpointing import truncate_lineage
 from ..queries import register
 
@@ -419,8 +419,7 @@ def corpus_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(100)
         - 5 * F.regexp_extract(F.col("source"), "([0-9]+)", 1).cast("int"),
     )
-    key = "concat(CAST(doc_id AS STRING), ':', source)"
-    bucket = F.expr(md5_int(key, 1, 6)) % 100
+    bucket = admission_bucket(100)
     return (
         table(spark, sf_dir, "documents")
         .select("doc_id", "source", bucket.alias("bucket"), rate.alias("rate"))

@@ -333,8 +333,8 @@ def q49_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor("value").cast("long").cast("string"),
         ),
     )
-    filtered = F.map_filter(F.col("m"), lambda k, v: k != F.lit("user"))
-    upped = F.transform_values(F.col("m"), lambda k, v: F.upper(v))
+    filtered = F.expr("map_filter(m, (k, v) -> k != 'user')")
+    upped = F.expr("transform_values(m, (k, v) -> upper(v))")
     return (
         table(spark, sf_dir, "events")
         .select("event_id", m.alias("m"))

@@ -64,42 +64,6 @@ def rate_envelope_source(
     )
 
 
-def kafka_envelope_source(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    max_offsets_per_trigger: int = 100_000,
-) -> DataFrame:
-    """Kafka → Envelope mapping (value bytes → string, headers+metadata
-    → attributes). Requires the spark-sql-kafka package on the
-    classpath; gated so environments without it fail with a clear
-    message at call time, not import time."""
-    try:
-        raw = (
-            spark.readStream.format("kafka")
-            .option("kafka.bootstrap.servers", bootstrap_servers)
-            .option("subscribe", topic)
-            .option("maxOffsetsPerTrigger", max_offsets_per_trigger)
-            .load()
-        )
-    except Exception as err:  # pragma: no cover - classpath-dependent
-        raise RuntimeError(
-            "Kafka source unavailable: add the spark-sql-kafka-0-10 "
-            "package to the session (spark.jars.packages)"
-        ) from err
-    return raw.select(
-        F.col("value").cast("string").alias("value"),
-        F.map_from_arrays(
-            F.array(F.lit("topic"), F.lit("partition"), F.lit("offset")),
-            F.array(
-                F.col("topic"),
-                F.col("partition").cast("string"),
-                F.col("offset").cast("string"),
-            ),
-        ).alias("attributes"),
-    )
-
-
 def poll_queue_once(
     receive,
     delete,

@@ -110,14 +110,10 @@ def _assert_driver_hashable_schema(name: str, df) -> None:
         )
 
 
-def _uses_outside(
-    root: pathlib.Path, token: str, allowed: set[str]
-) -> list[str]:
-    """``file:line`` of every use of ``token`` under ``root`` — a call
-    whose callee is named ``token`` (``x.token(...)`` or
-    ``token(...)``) or a string constant containing ``token(`` (SQL
-    text) — outside ``allowed``: module paths relative to ``root``
-    (``"functions.py"``) and functions in them
+def _nodes_outside(root: pathlib.Path, allowed: set[str], hit) -> list[str]:
+    """``file:line`` of every AST node under ``root`` for which
+    ``hit(node, module_tree)`` holds, outside ``allowed``: module paths
+    relative to ``root`` (``"functions.py"``) and functions in them
     (``"catalog.py:local_frame"``)."""
     found = []
     for path in sorted(root.rglob("*.py")):
@@ -133,18 +129,28 @@ def _uses_outside(
             for n in ast.walk(fn)
         }
         for node in ast.walk(tree):
-            if id(node) in inside:
-                continue
-            if isinstance(node, ast.Call):
-                f = node.func
-                hit = getattr(f, "attr", getattr(f, "id", None)) == token
-            else:
-                hit = isinstance(node, ast.Constant) and isinstance(
-                    node.value, str
-                ) and f"{token}(" in node.value
-            if hit:
+            if id(node) not in inside and hit(node, tree):
                 found.append(f"{path.relative_to(root.parent)}:{node.lineno}")
     return found
+
+
+def _uses_outside(
+    root: pathlib.Path, token: str, allowed: set[str]
+) -> list[str]:
+    """Every use of ``token`` outside ``allowed`` (see
+    :func:`_nodes_outside`): a call whose callee is named ``token``
+    (``x.token(...)`` or ``token(...)``) or a string constant
+    containing ``token(`` (SQL text)."""
+
+    def hit(node, _tree):
+        if isinstance(node, ast.Call):
+            f = node.func
+            return getattr(f, "attr", getattr(f, "id", None)) == token
+        return isinstance(node, ast.Constant) and isinstance(
+            node.value, str
+        ) and f"{token}(" in node.value
+
+    return _nodes_outside(root, allowed, hit)
 
 
 _PKG = pathlib.Path(catalog.__file__).parent
@@ -159,6 +165,113 @@ def test_md5_bucket_rule_spelled_only_in_functions():
     # conv(substring(md5(...))) — as F.conv or in SQL text — is the
     # md5 bucket rule; every operator reaches it through functions.py
     assert _uses_outside(_PKG, "conv", {"functions.py"}) == []
+
+
+#: Spark's higher-order functions. Handed a Python callable, each one
+#: builds its lambda body through ~130 py4j round trips at plan time;
+#: spelled as SQL text (``F.expr("transform(a, x -> ...)")``) the whole
+#: call is one parse.
+_HIGHER_ORDER = {
+    "transform", "filter", "aggregate", "zip_with", "exists", "forall",
+    "map_filter", "transform_values", "transform_keys", "map_zip_with",
+    "array_sort", "reduce",
+}
+
+
+def _python_callable_higher_order(node, tree) -> bool:
+    """``F.<higher-order>(...)`` with a lambda in an argument, or an
+    argument naming a function defined in the module."""
+    if not (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and isinstance(node.func.value, ast.Name)
+        and node.func.value.id == "F"
+        and node.func.attr in _HIGHER_ORDER
+    ):
+        return False
+    defs = {
+        n.name for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)
+    }
+    args = [*node.args, *(k.value for k in node.keywords)]
+    return any(
+        isinstance(n, ast.Lambda)
+        or (isinstance(n, ast.Name) and n.id in defs)
+        for a in args
+        for n in ast.walk(a)
+    )
+
+
+def test_higher_order_functions_take_sql_lambdas():
+    # text_bpe_encode's lambda calls bpe_encode_len(w, merges), which
+    # inlines merge strings read from data; as SQL text each one would
+    # need literal escaping, so it keeps the Python callable
+    allowed = {"operators/text.py:text_bpe_encode"}
+    found = _nodes_outside(_PKG, allowed, _python_callable_higher_order)
+    assert found == []
+
+
+#: Where a package definition may be used: the package itself, its
+#: tests, tools, examples, the benchmark harnesses and the driver entry.
+_REFERENCE_ROOTS = (
+    "parquet_ingestor_spark", "tests", "tools", "examples", "bench.py",
+    "ingestbench", "__spark_entry__.py",
+)
+
+
+def _top_level_definitions(tree):
+    """(name, first line, last line) of each top-level function, class
+    and non-dunder constant that is not ``@register``-decorated."""
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            if any(
+                getattr(getattr(d, "func", d), "id", None) == "register"
+                for d in node.decorator_list
+            ):
+                continue
+            lines = [node.lineno] + [d.lineno for d in node.decorator_list]
+            yield node.name, min(lines), node.end_lineno
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            for n in ast.walk(node):
+                if (
+                    isinstance(n, ast.Name)
+                    and isinstance(n.ctx, ast.Store)
+                    and not (n.id.startswith("__") and n.id.endswith("__"))
+                ):
+                    yield n.id, node.lineno, node.end_lineno
+
+
+def test_every_package_definition_is_referenced():
+    # a reference is a Name, an Attribute or an import alias anywhere
+    # in _REFERENCE_ROOTS outside the definition's own lines
+    repo = _PKG.parent
+    files = []
+    for r in (repo / r for r in _REFERENCE_ROOTS):
+        files += [r] if r.is_file() else sorted(r.rglob("*.py"))
+    trees = {f: ast.parse(f.read_text()) for f in files}
+    refs: dict[str, list[tuple[pathlib.Path, int]]] = {}
+    for f, tree in trees.items():
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Name):
+                names = [n.id]
+            elif isinstance(n, ast.Attribute):
+                names = [n.attr]
+            elif isinstance(n, ast.alias):
+                names = n.name.split(".")
+            else:
+                continue
+            for name in names:
+                refs.setdefault(name, []).append((f, n.lineno))
+    dead = [
+        f"{f.relative_to(repo)}:{first} {name}"
+        for f, tree in trees.items()
+        if _PKG in f.parents
+        for name, first, last in _top_level_definitions(tree)
+        if all(
+            rf == f and first <= line <= last
+            for rf, line in refs.get(name, [])
+        )
+    ]
+    assert dead == []
 
 
 def test_sim_ivf_topk_plans_no_logical_rdd(spark, sf_dir):

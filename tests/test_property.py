@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from parquet_ingestor_spark.operators.asof import asof_join
@@ -414,18 +414,17 @@ def test_symspell_equals_quadratic_on_random_strings(spark, names, k):
 )
 @given(
     st.lists(
-        st.floats(
-            allow_nan=False, allow_infinity=False, width=64
-        ),
+        st.floats(allow_nan=False, width=64),
         min_size=1,
         max_size=24,
     )
 )
+@example([float("inf"), float("-inf"), -0.0])
 def test_dlit_sql_double_literals_roundtrip_exactly(spark, vals):
-    """Property: dlit renders ANY finite double (subnormals, extreme
-    exponents, negative zero) as a Spark SQL literal that parses back
-    to the identical bits — the contract every PQ/ADC oracle twin's
-    inlined codebook rests on."""
+    """Property: dlit renders ANY non-NaN double (subnormals, extreme
+    exponents, negative zero, ±inf) as a Spark SQL literal that parses
+    back to the identical bits — the contract every PQ/ADC oracle
+    twin's inlined codebook and every Z-order quantile edge rests on."""
     import math
     import struct
 
