@@ -17,7 +17,7 @@ from ..catalog import local_frame, table
 from ..checkpointing import truncate_lineage
 from ..functions import dlit, dot, fold, int_e, norm, seq_dot, sumsq
 from ..queries import register
-from .similarity import with_norm
+from .similarity import _nearest, with_norm
 
 
 #: Fixed power-method rounds for the hash-verifiable PCA entries.
@@ -381,25 +381,14 @@ def emb_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("cn"),
     )
     csim = dot("embedding", "cv") / (F.col("nrm") * F.col("cn"))
-    assigned = (
-        emb.crossJoin(F.broadcast(centroids))
-        .select(
-            "vec_id",
-            F.col("embedding")[0].cast("double").alias("d1"),
-            F.col("embedding")[1].cast("double").alias("d2"),
-            "c_id",
-            csim.alias("csim"),
-        )
-        .groupBy("vec_id")
-        .agg(
-            F.max(
-                F.struct(F.col("csim"), (-F.col("c_id")).alias("nci"))
-            ).alias("best"),
-            F.first("d1").alias("d1"),
-            F.first("d2").alias("d2"),
-        )
-        .select((-F.col("best.nci")).alias("c_id"), "d1", "d2")
-    )
+    cols = [
+        "vec_id",
+        F.col("embedding")[0].cast("double").alias("d1"),
+        F.col("embedding")[1].cast("double").alias("d2"),
+        "c_id",
+        csim.alias("csim"),
+    ]
+    assigned = _nearest(emb, centroids, cols, "csim", ["d1", "d2"])
     return (
         assigned.groupBy("c_id")
         .agg(
@@ -476,19 +465,9 @@ def kmeans_fit(
             "c_id int, cv array<double>",
         )
         csim = dot("u", "cv")
-        assigned = (
-            unit.crossJoin(F.broadcast(cdf))
-            .select("vec_id", "u", "c_id", csim.alias("csim"))
-            .groupBy("vec_id")
-            .agg(
-                F.max(
-                    F.struct(F.col("csim"), (-F.col("c_id")).alias("nci"))
-                ).alias("best"),
-                F.first("u").alias("u"),
-            )
-            .select(
-                "vec_id", (-F.col("best.nci")).cast("int").alias("c_id"), "u"
-            )
+        assigned = _nearest(
+            unit, cdf, ["vec_id", "u", "c_id", csim.alias("csim")], "csim",
+            ["u"],
         )
         sums = (
             assigned.select("c_id", F.posexplode("u").alias("pos", "val"))
@@ -590,39 +569,14 @@ def kmeans_fit_int(
         )
         wq = dot("w", "q", "bigint")
         score = wq.cast("double") / F.sqrt(F.col("norm2").cast("double"))
-        assigned = (
-            w.crossJoin(F.broadcast(cdf))
-            .select(
-                "vec_id",
-                "w",
-                "c_id",
-                wq.alias("dot"),
-                score.alias("score"),
-                "norm2",
-            )
-            .groupBy("vec_id")
-            .agg(
-                # lexicographic struct max ≡ the oracle's row_number
-                # ORDER BY score DESC, c_id (equal scores are
-                # bit-equal, so ties resolve identically); dot/norm2
-                # ride along for the final cosine stage
-                F.max(
-                    F.struct(
-                        F.col("score"),
-                        (-F.col("c_id")).alias("nci"),
-                        F.col("dot"),
-                        F.col("norm2"),
-                    )
-                ).alias("best"),
-                F.first("w").alias("w"),
-            )
-            .select(
-                "vec_id",
-                (-F.col("best.nci")).alias("c_id"),
-                F.col("best.dot").alias("dot"),
-                F.col("best.norm2").alias("cnorm2"),
-                "w",
-            )
+        # equal scores are bit-equal, so ties resolve as the oracle's
+        # do; dot/norm2 ride along for the final cosine stage
+        cols = [
+            "vec_id", "w", "c_id", wq.alias("dot"), score.alias("score"),
+            "norm2",
+        ]
+        assigned = _nearest(
+            w, cdf, cols, "score", ["w"], ride=["dot", "norm2"]
         )
         sums = (
             assigned.select("c_id", F.posexplode("w").alias("pos", "wi"))
@@ -646,7 +600,7 @@ def kmeans_fit_int(
         F.col("dot").cast("double")
         / (
             F.sqrt(norm2w.cast("double"))
-            * F.sqrt(F.col("cnorm2").cast("double"))
+            * F.sqrt(F.col("norm2").cast("double"))
         )
         * F.lit(100000000.0)
     ).cast("long")

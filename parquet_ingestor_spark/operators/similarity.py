@@ -63,22 +63,191 @@ def with_norm(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
     return emb.withColumn("nrm", norm(vec_col))
 
 
+# ---------------------------------------------------------------------------
+# The shared ANN pieces. Every top-k, centroid assignment, probe list,
+# PQ encode and ADC lookup below is built from these.
+
+
+def _topk(df: DataFrame, order: Column, k: int, cols: list) -> DataFrame:
+    """The per-query top-k tail: ``row_number`` over ``q_id`` ordered by
+    ``order`` then ``vec_id``, kept while ``<= k``, projected to
+    ``cols`` (the entry ``"rank"`` is the rank as INT) and sorted by
+    (q_id, rank)."""
+    w = Window.partitionBy("q_id").orderBy(order, F.asc("vec_id"))
+    rank = F.col("rank").cast("int").alias("rank")
+    return (
+        df.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(*[rank if isinstance(c, str) and c == "rank" else c
+                  for c in cols])
+        .orderBy("q_id", "rank")
+    )
+
+
+def _nearest(
+    points: DataFrame,
+    cents: DataFrame,
+    cols: list,
+    score: str,
+    carry=(),
+    ride=(),
+    largest: bool = True,
+    as_: str = "c_id",
+) -> DataFrame:
+    """Each point's best centroid: ``points`` × broadcast ``cents``,
+    projected to ``cols`` (vec_id, c_id, the ``score`` column and the
+    ``carry`` / ``ride`` columns), reduced per vec_id by ONE max
+    (``largest``) or min of struct(score, ±c_id, *ride). The struct
+    order breaks score ties to the smallest c_id, as the oracles'
+    ``row_number() OVER (... ORDER BY score, c_id)`` does; the shuffle
+    carries one scalar row per point and no window sort. Returns
+    (vec_id, ``as_`` = the winning c_id, *ride, *carry), the ``carry``
+    columns passed through ``first``."""
+    if largest:
+        best = F.max(F.struct(score, (-F.col("c_id")).alias("nci"), *ride))
+        cid = -F.col("best.nci")
+    else:
+        best = F.min(F.struct(score, "c_id", *ride))
+        cid = F.col("best.c_id")
+    return (
+        points.crossJoin(F.broadcast(cents))
+        .select(*cols)
+        .groupBy("vec_id")
+        .agg(best.alias("best"), *[F.first(c).alias(c) for c in carry])
+        .select(
+            "vec_id",
+            cid.alias(as_),
+            *[F.col(f"best.{r}").alias(r) for r in ride],
+            *carry,
+        )
+    )
+
+
+def _head_vecs(head, n: int) -> list[tuple[int, list[float]]]:
+    """(vec_id, embedding as Python floats) of the ``head`` rows with
+    vec_id < n: the deterministic centroid or query sample."""
+    return [
+        (int(r.vec_id), [float(x) for x in r.embedding])
+        for r in head
+        if r.vec_id < n
+    ]
+
+
+def _probe(qv, cents, score, nprobe: int, largest: bool = True) -> list:
+    """The c_ids of the ``nprobe`` best ``cents`` (c_id, cv) for query
+    ``qv`` by ``score(qv, c_id, cv)``, ties to the smallest c_id — the
+    driver-side twin of the oracles' probe ``row_number``."""
+    sign = -1.0 if largest else 1.0
+    ranked = sorted((sign * score(qv, cid, cv), cid) for cid, cv in cents)
+    return [cid for _, cid in ranked[:nprobe]]
+
+
+def _stack(rows):
+    """The rows (arrays or lists) stacked as one float64 matrix."""
+    import numpy as np
+
+    return np.stack(rows).astype(np.float64)
+
+
+def _unit(rows):
+    """:func:`_stack`, each row unit-normalised."""
+    import numpy as np
+
+    m = _stack(rows)
+    return m / np.linalg.norm(m, axis=1, keepdims=True)
+
+
+def _assign_np(values, cm):
+    """The unit-normalised batch rows and each row's nearest unit
+    centroid by cosine (argmax, ties to the smallest index)."""
+    import numpy as np
+
+    vm = _unit(values)
+    return vm, np.argmax(vm @ cm.T, axis=1)
+
+
+def _probe_np(qm, cm, nprobe: int):
+    """Each unit query's ``nprobe`` nearest unit centroids by cosine; the
+    stable sort breaks ties to the smallest centroid index."""
+    import numpy as np
+
+    return np.argsort(-(qm @ cm.T), axis=1, kind="stable")[:, :nprobe]
+
+
+def _batch_topk(scores, vec_ids, lists, probe, k: int, largest: bool):
+    """One Arrow batch's top-k per query column of ``scores`` (rows ×
+    queries), over the rows whose list id is in that query's ``probe``
+    row (every row when ``lists`` is None): [(query index, vec_id,
+    score)]. Which of several rows tied at the cut survives is
+    unspecified; the global window re-ranks the survivors."""
+    import numpy as np
+
+    out = []
+    for qi in range(scores.shape[1]):
+        col, ids = scores[:, qi], vec_ids
+        if lists is not None:
+            mask = np.isin(lists, probe[qi])
+            col, ids = col[mask], ids[mask]
+        if not len(col):
+            continue
+        top = min(k, len(col))
+        idx = np.argpartition(-col if largest else col, top - 1)[:top]
+        out.extend((qi, int(ids[i]), float(col[i])) for i in idx)
+    return out
+
+
+def _candidates(hits, q_ids, name: str):
+    """:func:`_batch_topk` rows as a (q_id, vec_id, ``name``) pandas frame."""
+    import pandas as pd
+
+    return pd.DataFrame(
+        [(q_ids[qi], v, s) for qi, v, s in hits],
+        columns=["q_id", "vec_id", name],
+    )
+
+
+def _pq_codes(vm, cb):
+    """numpy PQ encode of the rows of ``vm`` against codebooks ``cb``
+    (m, k, d_sub): the (n, m) per-subspace L2-argmin codes, their
+    base-k packed ``code_key`` and the (n, m, d_sub) subvectors."""
+    import numpy as np
+
+    m, k, d_sub = cb.shape
+    sub = vm.reshape(len(vm), m, d_sub)
+    codes = ((sub[:, :, None, :] - cb[None]) ** 2).sum(axis=3).argmin(axis=2)
+    return codes, (codes * k ** np.arange(m, dtype=np.int64)).sum(axis=1), sub
+
+
+def _adc_tables(qm, books):
+    """(nq, m, k) squared distances from each query's subvectors to
+    every code: the ADC lookup tables."""
+    m, k, d_sub = books.shape
+    sub = qm.reshape(len(qm), m, d_sub)
+    return ((sub[:, :, None, :] - books[None]) ** 2).sum(axis=3)
+
+
+def _adc_dist(keys, dt):
+    """(n, nq) ADC distances of packed code ``keys`` under tables ``dt``:
+    per row, Σ_s dt[q, s, code_s] in subspace order."""
+    import numpy as np
+
+    nq, m, k = dt.shape
+    dist = np.zeros((len(keys), nq))
+    for s in range(m):
+        dist += dt[:, s, (keys // k**s) % k].T
+    return dist
+
+
 def brute_force_topk(
     emb: DataFrame, queries: DataFrame, k: int = TOPK
 ) -> DataFrame:
     """Exact cosine top-k. ``queries``: (q_id, qv, qn); broadcast side."""
     sim = int_e(dot("qv", "embedding") / (F.col("qn") * F.col("nrm")), 4)
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim_e4"), F.asc("vec_id"))
-    return (
+    return _topk(
         with_norm(emb)
         .crossJoin(F.broadcast(queries))
-        .select("q_id", "vec_id", sim.alias("sim_e4"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id", "vec_id", "sim_e4", F.col("rank").cast("int").alias("rank")
-        )
-        .orderBy("q_id", "rank")
+        .select("q_id", "vec_id", sim.alias("sim_e4")),
+        F.desc("sim_e4"), k, ["q_id", "vec_id", "sim_e4", "rank"],
     )
 
 
@@ -278,11 +447,7 @@ def ivf_topk_expr(
     par = spark.sparkContext.defaultParallelism
     n = with_norm(emb.repartition(par, "vec_id"))
     head = _head_rows(emb, max(n_lists, N_QUERIES))
-    cvs = [
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in head
-        if r.vec_id < n_lists
-    ]
+    cvs = _head_vecs(head, n_lists)
     cns = {cid: math.sqrt(seq_dot(v, v)) for cid, v in cvs}
     # the centroid side comes from the SAME bounded head collect the
     # probe computation already paid for — a second parquet scan +
@@ -296,55 +461,26 @@ def ivf_topk_expr(
         "c_id int, cv array<double>, cn double",
     )
     csim = dot("embedding", "cv") / (F.col("nrm") * F.col("cn"))
-    assigned = (
-        n.crossJoin(F.broadcast(cent))
-        .select(
-            "vec_id", "embedding", "nrm", "c_id", csim.alias("csim")
-        )
-        .groupBy("vec_id")
-        .agg(
-            F.max(
-                F.struct(F.col("csim"), (-F.col("c_id")).alias("nci"))
-            ).alias("best"),
-            F.first("embedding").alias("embedding"),
-            F.first("nrm").alias("nrm"),
-        )
-        .select(
-            "vec_id",
-            (-F.col("best.nci")).cast("int").alias("list_id"),
-            "embedding",
-            "nrm",
-        )
+    assigned = _nearest(
+        n, cent, ["vec_id", "embedding", "nrm", "c_id", csim.alias("csim")],
+        "csim", ["embedding", "nrm"], as_="list_id",
     )
-    q_rows = [r for r in head if r.vec_id < N_QUERIES]
     pdata = []
-    for r in q_rows:
-        qv = [float(x) for x in r.embedding]
+    for qid, qv in _head_vecs(head, N_QUERIES):
         qn = math.sqrt(seq_dot(qv, qv))
-        ds = [
-            (seq_dot(qv, cv) / (qn * cns[cid]), cid) for cid, cv in cvs
-        ]
-        ds.sort(key=lambda t: (-t[0], t[1]))
-        pdata.extend(
-            (r.vec_id, cid, qv, qn) for _, cid in ds[:nprobe]
+        probe = _probe(
+            qv, cvs, lambda q, c, v: seq_dot(q, v) / (qn * cns[c]), nprobe
         )
+        pdata.extend((qid, cid, qv, qn) for cid in probe)
     pdf = local_frame(
         spark, pdata, "q_id long, list_id int, qv array<double>, qn double"
     )
     sim = dot("qv", "embedding") / (F.col("qn") * F.col("nrm"))
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
+    return _topk(
         assigned.join(F.broadcast(pdf), "list_id")
-        .select("q_id", "vec_id", sim.alias("sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_top)
-        .select(
-            "q_id",
-            "vec_id",
-            int_e("sim", 4).alias("sim_e4"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-        .orderBy("q_id", "rank")
+        .select("q_id", "vec_id", sim.alias("sim")),
+        F.desc("sim"), k_top,
+        ["q_id", "vec_id", int_e("sim", 4).alias("sim_e4"), "rank"],
     )
 
 
@@ -372,9 +508,6 @@ def ivf_search(
     round-1 plan (n/25 centroids → O(n²/25) crossJoin + per-row window
     sort), which was slower than its own brute-force baseline.
     """
-    import numpy as np
-    import pandas as pd
-
     spark = emb.sparkSession
     if n_lists is None:
         n_lists = scaled_k(emb.count())
@@ -384,58 +517,28 @@ def ivf_search(
     # each filtered slice holds every id below its bound (at most n
     # ids are < n, and all of them sit inside the n-smallest head).
     head = _head_rows(emb, max(n_lists, N_QUERIES))
-    crows = [r for r in head if r.vec_id < n_lists]
-    cm = np.array([r.embedding for r in crows], dtype=np.float64)
-    qrows = [r for r in head if r.vec_id < N_QUERIES]
-    cm /= np.linalg.norm(cm, axis=1, keepdims=True)
-    q_ids = [r.vec_id for r in qrows]
-    qm = np.array([r.embedding for r in qrows], dtype=np.float64)
-    qm /= np.linalg.norm(qm, axis=1, keepdims=True)
-    # nprobe nearest centroids per query, computed driver-side (nq × k).
-    # Stable sort ⇒ centroid-index order breaks ties deterministically.
-    probe = np.argsort(-(qm @ cm.T), axis=1, kind="stable")[:, :nprobe]
-    b = spark.sparkContext.broadcast((q_ids, qm, cm, probe))
+    cm = _unit([v for _, v in _head_vecs(head, n_lists)])
+    q_ids, qvs = zip(*_head_vecs(head, N_QUERIES))
+    qm = _unit(qvs)
+    b = spark.sparkContext.broadcast((q_ids, qm, cm, _probe_np(qm, cm, nprobe)))
 
     def _search(batches):
         q_ids, qm, cm, probe = b.value
         for pdf in batches:
             if not len(pdf):
                 continue
-            vm = np.stack(pdf["embedding"].values).astype(np.float64)
-            vm /= np.linalg.norm(vm, axis=1, keepdims=True)
-            assign = np.argmax(vm @ cm.T, axis=1)
-            sims = vm @ qm.T  # (batch, nq)
-            vec_ids = pdf["vec_id"].values
-            rows = []
-            for qi, qid in enumerate(q_ids):
-                mask = np.isin(assign, probe[qi])
-                if not mask.any():
-                    continue
-                ms = sims[mask, qi]
-                mv = vec_ids[mask]
-                top = min(k_top, len(ms))
-                idx = np.argpartition(-ms, top - 1)[:top]
-                rows.extend(
-                    (qid, int(mv[ri]), float(ms[ri])) for ri in idx
-                )
-            yield pd.DataFrame(rows, columns=["q_id", "vec_id", "sim"])
+            vm, assign = _assign_np(pdf["embedding"].values, cm)
+            hits = _batch_topk(
+                vm @ qm.T, pdf["vec_id"].values, assign, probe, k_top, True
+            )
+            yield _candidates(hits, q_ids, "sim")
 
     candidates = emb.select("vec_id", "embedding").mapInPandas(
         _search, schema="q_id long, vec_id long, sim double"
     )
-    w = Window.partitionBy("q_id").orderBy(
-        F.desc(F.round("sim", 4)), F.asc("vec_id")
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_top)
-        .select(
-            "q_id",
-            "vec_id",
-            int_e("sim", 4).alias("sim_e4"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-        .orderBy("q_id", "rank")
+    return _topk(
+        candidates, F.desc(F.round("sim", 4)), k_top,
+        ["q_id", "vec_id", int_e("sim", 4).alias("sim_e4"), "rank"],
     )
 
 
@@ -472,8 +575,7 @@ def cosine_topk_vectorized(
 
     q_rows = queries.select("q_id", "qv").collect()
     q_ids = [r.q_id for r in q_rows]
-    qm = np.array([r.qv for r in q_rows], dtype=np.float64)
-    qm /= np.linalg.norm(qm, axis=1, keepdims=True)
+    qm = _unit([r.qv for r in q_rows])
     spark = emb.sparkSession
     b_qids = spark.sparkContext.broadcast(q_ids)
     b_qm = spark.sparkContext.broadcast(qm)
@@ -487,9 +589,7 @@ def cosine_topk_vectorized(
             if not len(pdf):
                 continue
             raw = pdf["embedding"].values
-            vm = np.stack(raw).astype(np.float64)
-            vm /= np.linalg.norm(vm, axis=1, keepdims=True)
-            sims = vm @ qmat.T  # (batch, nq)
+            sims = _unit(raw) @ qmat.T  # (batch, nq)
             qint = np.round(sims * 10000.0)  # e4 quanta (prune only)
             top = min(k, len(pdf))
             rows = []
@@ -530,21 +630,10 @@ def cosine_topk_vectorized(
         "q_id long, qv array<double>, qn double",
     )
     sim = dot("qv", "embedding") / (F.col("qn") * norm("embedding"))
-    w = Window.partitionBy("q_id").orderBy(
-        F.desc("sim_e4"), F.asc("vec_id")
-    )
-    return (
+    return _topk(
         candidates.join(F.broadcast(qdf), "q_id")
-        .select("q_id", "vec_id", int_e(sim, 4).alias("sim_e4"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            "vec_id",
-            "sim_e4",
-            F.col("rank").cast("int").alias("rank"),
-        )
-        .orderBy("q_id", "rank")
+        .select("q_id", "vec_id", int_e(sim, 4).alias("sim_e4")),
+        F.desc("sim_e4"), k, ["q_id", "vec_id", "sim_e4", "rank"],
     )
 
 
@@ -927,31 +1016,18 @@ def pq_encode(
 
     def _enc(batches):
         cb = b_books.value  # (m, k, d_sub)
-        m_, k_, d_sub = cb.shape
         for pdf in batches:
             if not len(pdf):
                 continue
-            vm = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
-            n = len(vm)
-            sub = vm.reshape(n, m_, d_sub)  # (n, m, d_sub)
-            # squared L2 distance to every code, per subspace
-            d2 = (
-                (sub[:, :, None, :] - cb[None, :, :, :]) ** 2
-            ).sum(axis=3)  # (n, m, k)
-            codes = d2.argmin(axis=2)  # (n, m)
+            codes, code_key, sub = _pq_codes(_stack(pdf["embedding"]), cb)
             recon = np.take_along_axis(
-                cb[None, :, :, :],
-                codes[:, :, None, None],
-                axis=2,
+                cb[None], codes[:, :, None, None], axis=2
             )[:, :, 0, :]  # (n, m, d_sub)
             mse = ((sub - recon) ** 2).mean(axis=(1, 2))
-            weights = (k_ ** np.arange(m_, dtype=np.int64))
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
-                    "code_key": (codes * weights).sum(axis=1),
+                    "code_key": code_key,
                     "recon_mse": np.round(mse, 6),
                 }
             )
@@ -1029,6 +1105,29 @@ def _pq_best_structs(books) -> list[Column]:
 _PQ_STRUCT_CACHE: dict = {}
 
 
+def _pq_code_cols(books) -> tuple[list[Column], Column]:
+    """The expression PQ encode over ``embedding``: the per-subspace
+    code Columns and the INTEGER e6 reconstruction MSE (Σ d2_min in
+    subspace order, over the dimension count)."""
+    m, _, d_sub = books.shape
+    best = _pq_best_structs(books)
+    total = best[0]["d2"]
+    for b in best[1:]:
+        total = total + b["d2"]
+    mse = int_e(total / F.lit(float(m * d_sub)), 6)
+    return [b["code"] for b in best], mse
+
+
+def _adc_dist_col(m: int, k: int) -> Column:
+    """The ADC distance of a row's codes ``c0..c{m-1}`` under its
+    query's flattened (m × k) table ``dt``: m ``element_at`` lookups
+    summed in subspace order."""
+    dist = F.element_at("dt", F.lit(1) + F.col("c0"))
+    for s in range(1, m):
+        dist = dist + F.element_at("dt", F.lit(s * k + 1) + F.col(f"c{s}"))
+    return dist
+
+
 def pq_encode_expr(
     emb: DataFrame,
     m: int = PQ_SUBSPACES,
@@ -1045,22 +1144,15 @@ def pq_encode_expr(
     (vec_id, code_key, recon_mse_e6) with the MSE an integer e6
     quantization of Σ d2_min / dim."""
     books = pq_codebooks(emb, m, k)  # (m, k, d_sub)
-    m_, k_, d_sub = books.shape
-    best = _pq_best_structs(books)
-    code_key = None
-    for si in range(m_):
-        term = best[si]["code"].cast("long") * F.lit(int(k_**si))
-        code_key = term if code_key is None else code_key + term
-    total = None
-    for si in range(m_):
-        total = (
-            best[si]["d2"] if total is None else total + best[si]["d2"]
-        )
-    mse = total / F.lit(float(m_ * d_sub))
+    codes, mse = _pq_code_cols(books)
+    k_ = books.shape[1]
+    code_key = codes[0].cast("long") * F.lit(1)
+    for si in range(1, len(codes)):
+        code_key = code_key + codes[si].cast("long") * F.lit(int(k_**si))
     return emb.select(
         "vec_id",
         code_key.alias("code_key"),
-        int_e(mse, 6).alias("recon_mse_e6"),
+        mse.alias("recon_mse_e6"),
     ).orderBy("vec_id")
 
 
@@ -1193,9 +1285,6 @@ def pq_adc_topk(
     the PQ-*reconstructed* vector (pinned bit-exact by the test) —
     the approximation lives entirely in the quantizer, not the search.
     """
-    import numpy as np
-    import pandas as pd
-
     spark = emb.sparkSession
     # ONE head collect shared by the codebooks and the query set (the
     # twin entries' _head_rows rule, guide §1.2) — and the prebuilt
@@ -1205,78 +1294,45 @@ def pq_adc_topk(
     # filter+orderBy collect exactly.
     head = _head_rows(emb, max(k, N_QUERIES))
     books = pq_codebooks(emb, m, k, head_rows=head)  # (m, k, d_sub)
-    q_rows = [r for r in head if r.vec_id < N_QUERIES]
-    q_ids = [r.vec_id for r in q_rows]
-    d_sub = books.shape[2]
+    q_ids, qvs = zip(*_head_vecs(head, N_QUERIES))
     # (nq, m, k) squared-distance tables, built once on the driver
-    qm = np.stack(
-        [np.asarray(r.embedding, dtype=np.float64) for r in q_rows]
-    ).reshape(len(q_rows), m, d_sub)
-    tables = ((qm[:, :, None, :] - books[None, :, :, :]) ** 2).sum(axis=3)
-    b_tables = spark.sparkContext.broadcast(tables)
-    b_qids = spark.sparkContext.broadcast(q_ids)
+    b = spark.sparkContext.broadcast((q_ids, _adc_tables(_stack(qvs), books)))
 
     def _adc(batches):
-        dt = b_tables.value  # (nq, m, k)
-        qids = b_qids.value
+        q_ids, dt = b.value
         for pdf in batches:
             if not len(pdf):
                 continue
-            keys = pdf["code_key"].to_numpy()
-            codes = np.stack(
-                [(keys // (k**s)) % k for s in range(m)], axis=1
-            )  # (n, m)
-            # dist[n, q] = sum_s dt[q, s, codes[n, s]]
-            dist = np.zeros((len(keys), dt.shape[0]))
-            for s in range(m):
-                dist += dt[:, s, codes[:, s]].T  # (n, nq)
-            top = min(k_top, len(keys))
-            idx = np.argpartition(dist, top - 1, axis=0)[:top]
-            vec_ids = pdf["vec_id"].to_numpy()
-            rows = []
-            for qi, qid in enumerate(qids):
-                for ri in idx[:, qi]:
-                    rows.append(
-                        (qid, int(vec_ids[ri]), float(dist[ri, qi]))
-                    )
-            yield pd.DataFrame(rows, columns=["q_id", "vec_id", "dist"])
+            dist = _adc_dist(pdf["code_key"].to_numpy(), dt)
+            hits = _batch_topk(
+                dist, pdf["vec_id"].to_numpy(), None, None, k_top, False
+            )
+            yield _candidates(hits, q_ids, "dist")
 
     candidates = pq_encode(emb, m, k, books=books).mapInPandas(
         _adc, schema="q_id long, vec_id long, dist double"
     )
-    w = Window.partitionBy("q_id").orderBy(
-        F.asc(F.round("dist", 6)), F.asc("vec_id")
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_top)
-        .select(
-            "q_id",
-            "vec_id",
-            int_e("dist", 6).alias("dist_e6"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-        .orderBy("q_id", "rank")
+    return _topk(
+        candidates, F.asc(F.round("dist", 6)), k_top,
+        ["q_id", "vec_id", int_e("dist", 6).alias("dist_e6"), "rank"],
     )
 
 
-def _adc_query_tables(q_rows, books) -> list[tuple[int, list[float]]]:
-    """Per-query flattened (m × k) squared-distance tables, computed
+def _adc_query_tables(q_vecs, books) -> list[tuple[int, list[float]]]:
+    """Per-query (``q_vecs``: (q_id, qv) pairs) flattened (m × k) squared-distance tables, computed
     with strictly SEQUENTIAL Python float loops — the same
     left-to-right IEEE fold DuckDB's ``list_sum`` performs, so the
     doubles that ship to executors are bit-identical to the oracle's.
     (numpy's pairwise-summed reductions would not be.)"""
     m, k, d_sub = books.shape
-    out = []
-    for r in q_rows:
-        qv = [float(x) for x in r.embedding]
-        dt = [
+    return [
+        (qid, [
             seq_l2sq(qv[s * d_sub:(s + 1) * d_sub], books[s, c].tolist())
             for s in range(m)
             for c in range(k)
-        ]
-        out.append((r.vec_id, dt))
-    return out
+        ])
+        for qid, qv in q_vecs
+    ]
 
 
 def pq_adc_topk_expr(
@@ -1305,9 +1361,7 @@ def pq_adc_topk_expr(
     spark = emb.sparkSession
     head = _head_rows(emb, max(k, N_QUERIES))
     books = pq_codebooks(emb, m, k, head_rows=head)  # (m, k, d_sub)
-    q_rows = [r for r in head if r.vec_id < N_QUERIES]
-    d_sub = books.shape[2]
-    qdata = _adc_query_tables(q_rows, books)
+    qdata = _adc_query_tables(_head_vecs(head, N_QUERIES), books)
     qdf = local_frame(spark, qdata, "q_id long, dt array<double>")
     # One map-only projection: per-subspace codes + the reconstruction
     # MSE (the quantization error of each scored vector — part of the
@@ -1315,44 +1369,25 @@ def pq_adc_topk_expr(
     # attaches each query's distance table. No exchange before the
     # window: the encode tree is small (see _pq_best_structs), so
     # fusing it into the join stage is safe.
-    d_sub_f = float(m * d_sub)
-    best = _pq_best_structs(books)
-    total = None
-    for s in range(m):
-        total = best[s]["d2"] if total is None else total + best[s]["d2"]
+    codes, mse = _pq_code_cols(books)
     # fan out before the encode: the struct-least code expressions are
     # the CPU; a 1-2-split scan would run them on one core (the IVF
     # twin rule). Round-robin is fine — nothing downstream keys on
     # vec_id before the q_id window.
     par = emb.sparkSession.sparkContext.defaultParallelism
     emb = emb.repartition(par)
-    codes = emb.select(
+    coded = emb.select(
         "vec_id",
-        *[best[s]["code"].alias(f"c{s}") for s in range(m)],
-        int_e(total / F.lit(d_sub_f), 6).alias("recon_mse_e6"),
+        *[c.alias(f"c{s}") for s, c in enumerate(codes)],
+        mse.alias("recon_mse_e6"),
     )
-    dist = None
-    for s in range(m):
-        term = F.element_at(
-            "dt", F.lit(s * k + 1) + F.col(f"c{s}")
-        )
-        dist = term if dist is None else dist + term
-    w = Window.partitionBy("q_id").orderBy(F.asc("dist"), F.asc("vec_id"))
-    return (
-        codes.crossJoin(F.broadcast(qdf))
-        .select(
-            "q_id", "vec_id", dist.alias("dist"), "recon_mse_e6"
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_top)
-        .select(
-            "q_id",
-            "vec_id",
-            int_e("dist", 6).alias("dist_e6"),
-            F.col("rank").cast("int").alias("rank"),
-            "recon_mse_e6",
-        )
-        .orderBy("q_id", "rank")
+    return _topk(
+        coded.crossJoin(F.broadcast(qdf))
+        .select("q_id", "vec_id", _adc_dist_col(m, k).alias("dist"),
+                "recon_mse_e6"),
+        F.asc("dist"), k_top,
+        ["q_id", "vec_id", int_e("dist", 6).alias("dist_e6"), "rank",
+         "recon_mse_e6"],
     )
 
 
@@ -1419,80 +1454,45 @@ def ivfpq_topk_expr(
     spark = emb.sparkSession
     head = _head_rows(emb, max(k, N_QUERIES, n_lists))
     books = pq_codebooks(emb, m, k, head_rows=head)
-    d_sub = books.shape[2]
     # centroids come from the head collect already paid for (the IVF
     # twin rule — a second scan to broadcast 25 rows was a whole job),
     # and the corpus side fans out to cluster parallelism before the
     # expression-heavy assignment; hash partitioning by vec_id lets
     # the argmin groupBy reuse the exchange.
-    cent = local_frame(
-        spark,
-        [
-            (int(r.vec_id), [float(x) for x in r.embedding])
-            for r in head
-            if r.vec_id < n_lists
-        ],
-        "c_id int, cv array<double>",
-    )
+    cvs = _head_vecs(head, n_lists)
+    cent = local_frame(spark, cvs, "c_id int, cv array<double>")
     par = spark.sparkContext.defaultParallelism
     l2 = l2sq("embedding", "cv")
-    assigned = (
-        emb.repartition(par, "vec_id").crossJoin(F.broadcast(cent))
-        .select("vec_id", "embedding", "c_id", l2.alias("l2"))
-        .groupBy("vec_id")
-        .agg(
-            F.min(F.struct(F.col("l2"), F.col("c_id"))).alias("bestc"),
-            F.first("embedding").alias("embedding"),
-        )
-        .select(
-            "vec_id", F.col("bestc.c_id").alias("list_id"), "embedding"
-        )
+    assigned = _nearest(
+        emb.repartition(par, "vec_id"), cent,
+        ["vec_id", "embedding", "c_id", l2.alias("l2")], "l2",
+        ["embedding"], largest=False, as_="list_id",
     )
-    best = _pq_best_structs(books)
-    total = None
-    for s in range(m):
-        total = best[s]["d2"] if total is None else total + best[s]["d2"]
-    codes = assigned.select(
+    codes, mse = _pq_code_cols(books)
+    coded = assigned.select(
         "vec_id",
         "list_id",
-        *[best[s]["code"].alias(f"c{s}") for s in range(m)],
-        int_e(total / F.lit(float(m * d_sub)), 6).alias("recon_mse_e6"),
+        *[c.alias(f"c{s}") for s, c in enumerate(codes)],
+        mse.alias("recon_mse_e6"),
     )
-    q_rows = [r for r in head if r.vec_id < N_QUERIES]
-    cvs = [
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in head
-        if r.vec_id < n_lists
-    ]
-    dts = dict(_adc_query_tables(q_rows, books))
+    q_vecs = _head_vecs(head, N_QUERIES)
+    dts = dict(_adc_query_tables(q_vecs, books))
     pdata = []
-    for r in q_rows:
-        qv = [float(x) for x in r.embedding]
-        ds = sorted((seq_l2sq(qv, cv), cid) for cid, cv in cvs)
-        pdata.extend(
-            (r.vec_id, cid, dts[r.vec_id]) for _, cid in ds[:nprobe]
+    for qid, qv in q_vecs:
+        probe = _probe(
+            qv, cvs, lambda q, _, v: seq_l2sq(q, v), nprobe, largest=False
         )
+        pdata.extend((qid, cid, dts[qid]) for cid in probe)
     pdf = local_frame(
         spark, pdata, "q_id long, list_id int, dt array<double>"
     )
-    dist = None
-    for s in range(m):
-        term = F.element_at("dt", F.lit(s * k + 1) + F.col(f"c{s}"))
-        dist = term if dist is None else dist + term
-    w = Window.partitionBy("q_id").orderBy(F.asc("dist"), F.asc("vec_id"))
-    return (
-        codes.join(F.broadcast(pdf), "list_id")
-        .select("q_id", "vec_id", dist.alias("dist"), "recon_mse_e6")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_top)
-        .select(
-            "q_id",
-            "vec_id",
-            int_e("dist", 6).alias("dist_e6"),
-            F.col("rank").cast("int").alias("rank"),
-            "recon_mse_e6",
-        )
-        .orderBy("q_id", "rank")
+    return _topk(
+        coded.join(F.broadcast(pdf), "list_id")
+        .select("q_id", "vec_id", _adc_dist_col(m, k).alias("dist"),
+                "recon_mse_e6"),
+        F.asc("dist"), k_top,
+        ["q_id", "vec_id", int_e("dist", 6).alias("dist_e6"), "rank",
+         "recon_mse_e6"],
     )
 
 
@@ -1667,49 +1667,43 @@ def semantic_dedup(
         F.col("nrm").alias("cn"),
     )
     csim = dot("embedding", "cv") / (F.col("nrm") * F.col("cn"))
-    assigned = (
-        emb.crossJoin(F.broadcast(centroids))
-        .select("vec_id", "embedding", "nrm", "c_id", csim.alias("csim"))
-        .groupBy("vec_id")
-        .agg(
-            F.max(
-                F.struct(F.col("csim"), (-F.col("c_id")).alias("nci"))
-            ).alias("best"),
-            F.first("embedding").alias("embedding"),
-            F.first("nrm").alias("nrm"),
-        )
-        .select(
-            "vec_id",
-            (-F.col("best.nci")).cast("int").alias("cluster_id"),
-            "embedding",
-            "nrm",
-        )
-    )
+    assigned = _nearest(
+        emb, centroids,
+        ["vec_id", "embedding", "nrm", "c_id", csim.alias("csim")],
+        "csim", ["embedding", "nrm"], as_="cluster_id",
+    ).withColumn("cluster_id", F.col("cluster_id").cast("int"))
     # the assignment feeds the pair search AND the final keeper join —
     # truncate so the broadcast-centroid scoring pass runs once, not
     # per branch (the graph edge-list rule); LAZY so construction runs
     # no job (r6 advisor)
-    assigned = truncate_lineage(assigned)
+    return _sem_keep(
+        truncate_lineage(assigned), tau, vectorized,
+        F.expr("transform(embedding, x -> CAST(x AS DOUBLE) / nrm)"),
+        dot("xs.embedding", "ys.embedding")
+        / (F.col("xs.nrm") * F.col("ys.nrm")),
+    )
+
+
+def _sem_keep(
+    a: DataFrame, tau: float, vectorized: bool, u: Column, cos: Column
+) -> DataFrame:
+    """The SemDeDup keeper rule over an assignment ``a`` (vec_id,
+    cluster_id, ...): a vector is removed iff a smaller-id vector in
+    its cluster has cosine ≥ ``tau``. ``vectorized`` scores each
+    cluster's pairs as one BLAS matmul over the unit vectors ``u``
+    (:func:`_removed_vectorized`); otherwise the expression self-join
+    of ``a`` (aliased ``xs``/``ys``) filters on ``cos``. Returns
+    (vec_id, cluster_id, kept) ordered by vec_id."""
     if vectorized:
-        u = assigned.select(
-            "vec_id",
-            "cluster_id",
-            F.expr(
-                "transform(embedding, x -> CAST(x AS DOUBLE) / nrm)"
-            ).alias("u"),
-        )
-        removed = _removed_vectorized(u, tau).withColumn(
-            "_removed", F.lit(True)
+        removed = _removed_vectorized(
+            a.select("vec_id", "cluster_id", u.alias("u")), tau
         )
     else:
         # Both pair-join branches are the SAME subplan aliased twice,
         # so the cluster-keyed shuffle of the assignment is written
         # once and read twice (ReusedExchange) — the corpus pays the
         # centroid assignment for the pair search once, not twice.
-        xs, ys = assigned.alias("xs"), assigned.alias("ys")
-        cos = dot("xs.embedding", "ys.embedding") / (
-            F.col("xs.nrm") * F.col("ys.nrm")
-        )
+        xs, ys = a.alias("xs"), a.alias("ys")
         removed = (
             xs.join(
                 ys,
@@ -1719,10 +1713,9 @@ def semantic_dedup(
             .filter(cos >= tau)
             .select(F.col("ys.vec_id").alias("vec_id"))
             .distinct()
-            .withColumn("_removed", F.lit(True))
         )
     return (
-        assigned.join(removed, "vec_id", "left")
+        a.join(removed.withColumn("_removed", F.lit(True)), "vec_id", "left")
         .select(
             "vec_id",
             "cluster_id",
@@ -1766,9 +1759,7 @@ def _removed_vectorized(a: DataFrame, tau: float) -> DataFrame:
             removed |= hit.any(axis=0)
         return pd.DataFrame({"vec_id": ids[removed]})
 
-    return a.select("vec_id", "cluster_id", "u").groupBy(
-        "cluster_id"
-    ).applyInPandas(per_cluster, "vec_id long")
+    return a.groupBy("cluster_id").applyInPandas(per_cluster, "vec_id long")
 
 
 def sem_dedup_trained(
@@ -1800,33 +1791,7 @@ def sem_dedup_trained(
     a = assigned.select(
         "vec_id", F.col("c_id").alias("cluster_id"), "u"
     )
-    if vectorized:
-        removed = _removed_vectorized(a, tau).withColumn(
-            "_removed", F.lit(True)
-        )
-    else:
-        xs, ys = a.alias("xs"), a.alias("ys")
-        cos = dot("xs.u", "ys.u")
-        removed = (
-            xs.join(
-                ys,
-                (F.col("xs.cluster_id") == F.col("ys.cluster_id"))
-                & (F.col("xs.vec_id") < F.col("ys.vec_id")),
-            )
-            .filter(cos >= tau)
-            .select(F.col("ys.vec_id").alias("vec_id"))
-            .distinct()
-            .withColumn("_removed", F.lit(True))
-        )
-    return (
-        a.join(removed, "vec_id", "left")
-        .select(
-            "vec_id",
-            "cluster_id",
-            F.col("_removed").isNull().alias("kept"),
-        )
-        .orderBy("vec_id")
-    )
+    return _sem_keep(a, tau, vectorized, F.col("u"), dot("xs.u", "ys.u"))
 
 
 @register(
@@ -1862,27 +1827,16 @@ def ivfpq_index(emb: DataFrame, centroid_mat, books) -> DataFrame:
 
     def _index(batches):
         cm, cb = b.value
-        m_, k_, d_sub = cb.shape
-        weights = k_ ** np.arange(m_, dtype=np.int64)
         for pdf in batches:
             if not len(pdf):
                 continue
-            vm = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
+            vm = _stack(pdf["embedding"])
             d2c = ((vm[:, None, :] - cm[None, :, :]) ** 2).sum(axis=2)
-            lists = d2c.argmin(axis=1)
-            sub = vm.reshape(len(vm), m_, d_sub)
-            codes = (
-                ((sub[:, :, None, :] - cb[None, :, :, :]) ** 2)
-                .sum(axis=3)
-                .argmin(axis=2)
-            )
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
-                    "list_id": lists.astype(np.int32),
-                    "code_key": (codes * weights).sum(axis=1),
+                    "list_id": d2c.argmin(axis=1).astype(np.int32),
+                    "code_key": _pq_codes(vm, cb)[1],
                 }
             )
 
@@ -1924,7 +1878,6 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantizer itself, never the search).
     """
     import numpy as np
-    import pandas as pd
 
     emb = table(spark, sf_dir, "embeddings")
     # ONE head collect feeds codebooks, coarse centroids AND the
@@ -1936,68 +1889,35 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # filtered slice equals the old filter-collect exactly.
     head = _head_rows(emb, max(IVF_K, N_QUERIES, PQ_CODES))
     books = pq_codebooks(emb, head_rows=head)  # (m, k, d_sub)
-    m, k, d_sub = books.shape
-    crows = [r for r in head if r.vec_id < IVF_K]
-    cm = np.array([r.embedding for r in crows], dtype=np.float64)
-    qrows = [r for r in head if r.vec_id < N_QUERIES]
-    q_ids = [r.vec_id for r in qrows]
-    qm = np.array([r.embedding for r in qrows], dtype=np.float64)
+    cm = _stack([v for _, v in _head_vecs(head, IVF_K)])
+    q_ids, qvs = zip(*_head_vecs(head, N_QUERIES))
+    qm = _stack(qvs)
     # probe lists by L2 to coarse centroids; ADC tables per query
     probe = np.argsort(
         ((qm[:, None, :] - cm[None, :, :]) ** 2).sum(axis=2),
         axis=1,
         kind="stable",
     )[:, :IVF_NPROBE]
-    tables = (
-        (qm.reshape(len(q_ids), m, d_sub)[:, :, None, :] - books[None])
-        ** 2
-    ).sum(axis=3)
-    b = spark.sparkContext.broadcast((q_ids, probe, tables))
+    b = spark.sparkContext.broadcast((q_ids, probe, _adc_tables(qm, books)))
 
     def _serve(batches):
         q_ids, probe, dt = b.value
         for pdf in batches:
             if not len(pdf):
                 continue
-            keys = pdf["code_key"].to_numpy()
-            lists = pdf["list_id"].to_numpy()
-            codes = np.stack(
-                [(keys // (k**s)) % k for s in range(m)], axis=1
+            dist = _adc_dist(pdf["code_key"].to_numpy(), dt)
+            hits = _batch_topk(
+                dist, pdf["vec_id"].to_numpy(), pdf["list_id"].to_numpy(),
+                probe, TOPK, False,
             )
-            vec_ids = pdf["vec_id"].to_numpy()
-            rows = []
-            for qi, qid in enumerate(q_ids):
-                mask = np.isin(lists, probe[qi])
-                if not mask.any():
-                    continue
-                mc = codes[mask]
-                dist = np.zeros(mc.shape[0])
-                for s in range(m):
-                    dist += dt[qi, s, mc[:, s]]
-                mv = vec_ids[mask]
-                top = min(TOPK, len(dist))
-                idx = np.argpartition(dist, top - 1)[:top]
-                rows.extend(
-                    (qid, int(mv[ri]), float(dist[ri])) for ri in idx
-                )
-            yield pd.DataFrame(rows, columns=["q_id", "vec_id", "dist"])
+            yield _candidates(hits, q_ids, "dist")
 
     candidates = ivfpq_index(emb, centroid_mat=cm, books=books).mapInPandas(
         _serve, schema="q_id long, vec_id long, dist double"
     )
-    w = Window.partitionBy("q_id").orderBy(
-        F.asc(F.round("dist", 6)), F.asc("vec_id")
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOPK)
-        .select(
-            "q_id",
-            "vec_id",
-            int_e("dist", 6).alias("dist_e6"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-        .orderBy("q_id", "rank")
+    return _topk(
+        candidates, F.asc(F.round("dist", 6)), TOPK,
+        ["q_id", "vec_id", int_e("dist", 6).alias("dist_e6"), "rank"],
     )
 
 
@@ -2022,20 +1942,11 @@ def brute_force_l2_topk(
         - 2 * dot("qv", "embedding"),
         6,
     )
-    w = Window.partitionBy("q_id").orderBy(F.asc("dist_e6"), F.asc("vec_id"))
-    return (
+    return _topk(
         with_norm(emb)
         .crossJoin(F.broadcast(queries))
-        .select("q_id", "vec_id", dist_e6.alias("dist_e6"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            "vec_id",
-            "dist_e6",
-            F.col("rank").cast("int").alias("rank"),
-        )
-        .orderBy("q_id", "rank")
+        .select("q_id", "vec_id", dist_e6.alias("dist_e6")),
+        F.asc("dist_e6"), k, ["q_id", "vec_id", "dist_e6", "rank"],
     )
 
 
@@ -2145,6 +2056,11 @@ def sim_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # reads ~3/n_lists of the corpus from disk, not filter-after-scan).
 # ---------------------------------------------------------------------------
 
+#: The persisted index's two tables, written and read with these
+#: schemas (a read that infers them costs a schema job per table).
+IVF_CENTROIDS_DDL = "list_id int, centroid array<double>"
+IVF_POSTINGS_DDL = "list_id int, vec_id long, embedding array<double>"
+
 
 def ivf_index_write(
     emb: DataFrame,
@@ -2161,20 +2077,13 @@ def ivf_index_write(
     layout."""
     import os
 
-    import numpy as np
     import pandas as pd
 
     spark = emb.sparkSession
     if n_lists is None:
         n_lists = scaled_k(emb.count())
-    crows = sorted(
-        emb.filter(F.col("vec_id") < n_lists)
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r.vec_id,
-    )
-    cm = np.array([r.embedding for r in crows], dtype=np.float64)
-    cm /= np.linalg.norm(cm, axis=1, keepdims=True)
+    cvs = _head_vecs(_head_rows(emb, n_lists), n_lists)
+    cm = _unit([v for _, v in cvs])
     n_lists = cm.shape[0]
     b = spark.sparkContext.broadcast(cm)
 
@@ -2183,27 +2092,24 @@ def ivf_index_write(
         for pdf in batches:
             if not len(pdf):
                 continue
-            vm = np.stack(pdf["embedding"].values).astype(np.float64)
-            vm /= np.linalg.norm(vm, axis=1, keepdims=True)
+            _, lists = _assign_np(pdf["embedding"].values, cmat)
             yield pd.DataFrame(
                 {
-                    "list_id": np.argmax(vm @ cmat.T, axis=1).astype(
-                        "int32"
-                    ),
+                    "list_id": lists.astype("int32"),
                     "vec_id": pdf["vec_id"].values,
                     "embedding": pdf["embedding"].values,
                 }
             )
 
     emb.select("vec_id", "embedding").mapInPandas(
-        _assign, schema="list_id int, vec_id long, embedding array<double>"
+        _assign, schema=IVF_POSTINGS_DDL
     ).write.mode("overwrite").partitionBy("list_id").parquet(
         os.path.join(path, "postings")
     )
     local_frame(
         spark,
         [(int(i), [float(x) for x in cm[i]]) for i in range(n_lists)],
-        "list_id int, centroid array<double>",
+        IVF_CENTROIDS_DDL,
     ).write.mode("overwrite").parquet(os.path.join(path, "centroids"))
     return n_lists
 
@@ -2224,18 +2130,16 @@ def ivf_index_search(
     the final tiny top-k window."""
     import os
 
-    import numpy as np
-    import pandas as pd
-
     crows = sorted(
-        spark.read.parquet(os.path.join(path, "centroids")).collect(),
+        spark.read.schema(IVF_CENTROIDS_DDL)
+        .parquet(os.path.join(path, "centroids"))
+        .collect(),
         key=lambda r: r.list_id,
     )
-    cm = np.array([r.centroid for r in crows], dtype=np.float64)
+    cm = _stack([r.centroid for r in crows])
     q_ids = [int(q[0]) for q in queries]
-    qm = np.array([q[1] for q in queries], dtype=np.float64)
-    qm /= np.linalg.norm(qm, axis=1, keepdims=True)
-    probe = np.argsort(-(qm @ cm.T), axis=1, kind="stable")[:, :nprobe]
+    qm = _unit([q[1] for q in queries])
+    probe = _probe_np(qm, cm, nprobe)
     probed = sorted({int(x) for x in probe.ravel()})
     b = spark.sparkContext.broadcast((q_ids, qm, probe))
 
@@ -2244,42 +2148,21 @@ def ivf_index_search(
         for pdf in batches:
             if not len(pdf):
                 continue
-            vm = np.stack(pdf["embedding"].values).astype(np.float64)
-            vm /= np.linalg.norm(vm, axis=1, keepdims=True)
-            sims = vm @ qm_.T
-            lists = pdf["list_id"].values
-            vec_ids = pdf["vec_id"].values
-            rows = []
-            for qi, qid in enumerate(q_ids_):
-                mask = np.isin(lists, probe_[qi])
-                if not mask.any():
-                    continue
-                ms = sims[mask, qi]
-                mv = vec_ids[mask]
-                top = min(k_top, len(ms))
-                idx = np.argpartition(-ms, top - 1)[:top]
-                rows.extend(
-                    (qid, int(mv[ri]), float(ms[ri])) for ri in idx
-                )
-            yield pd.DataFrame(rows, columns=["q_id", "vec_id", "sim"])
+            hits = _batch_topk(
+                _unit(pdf["embedding"].values) @ qm_.T,
+                pdf["vec_id"].values, pdf["list_id"].values, probe_,
+                k_top, True,
+            )
+            yield _candidates(hits, q_ids_, "sim")
 
     candidates = (
-        spark.read.parquet(os.path.join(path, "postings"))
+        spark.read.schema(IVF_POSTINGS_DDL)
+        .parquet(os.path.join(path, "postings"))
         .where(F.col("list_id").isin(probed))  # static partition prune
         .select("list_id", "vec_id", "embedding")
         .mapInPandas(_score, schema="q_id long, vec_id long, sim double")
     )
-    w = Window.partitionBy("q_id").orderBy(
-        F.desc(F.round("sim", 4)), F.asc("vec_id")
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_top)
-        .select(
-            "q_id",
-            "vec_id",
-            int_e("sim", 4).alias("sim_e4"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-        .orderBy("q_id", "rank")
+    return _topk(
+        candidates, F.desc(F.round("sim", 4)), k_top,
+        ["q_id", "vec_id", int_e("sim", 4).alias("sim_e4"), "rank"],
     )

@@ -151,15 +151,26 @@ _CELLS = {
 
 
 def _site_ddls() -> list[str]:
-    """The DDL literal of every ``local_frame`` call in the package."""
+    """The DDL of every ``local_frame`` call in the package: a string
+    literal, or the name of a module-level string constant."""
     ddls = set()
     for path in sorted(pathlib.Path(catalog.__file__).parent.rglob("*.py")):
-        for node in ast.walk(ast.parse(path.read_text())):
+        tree = ast.parse(path.read_text())
+        consts = {
+            t.id: n.value
+            for n in tree.body
+            if isinstance(n, ast.Assign) and isinstance(n.value, ast.Constant)
+            for t in n.targets
+            if isinstance(t, ast.Name)
+        }
+        for node in ast.walk(tree):
             if (
                 isinstance(node, ast.Call)
                 and getattr(node.func, "id", None) == "local_frame"
             ):
                 ddl = node.args[2]
+                if isinstance(ddl, ast.Name):
+                    ddl = consts.get(ddl.id, ddl)
                 assert isinstance(ddl, ast.Constant), f"{path}:{node.lineno}"
                 ddls.add(ddl.value)
     return sorted(ddls)

@@ -1570,6 +1570,42 @@ def test_persisted_ivf_index_serves_identically_and_prunes(spark, sf_dir, tmp_pa
     assert n_dirs == n_lists
 
 
+def test_persisted_ivf_index_search_reads_with_writer_schema(
+    spark, sf_dir, tmp_path
+):
+    """The search reads both index tables with the writer's schemas, so
+    no schema-inference job runs: building it submits one job (the
+    centroid collect; an inferring read of each table would add one
+    each), and its rows equal the in-process ivf_search's."""
+    from parquet_ingestor_spark.catalog import table
+    from parquet_ingestor_spark.operators.similarity import (
+        N_QUERIES,
+        ivf_index_search,
+        ivf_index_write,
+        ivf_search,
+    )
+
+    sc = spark.sparkContext
+    emb = table(spark, sf_dir, "embeddings")
+    path = str(tmp_path / "ivf")
+    ivf_index_write(emb, path)
+    queries = [
+        (r.vec_id, list(r.embedding))
+        for r in emb.filter(f"vec_id < {N_QUERIES}")
+        .select("vec_id", "embedding")
+        .collect()
+    ]
+    group = "ivf-index-search-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        served = ivf_index_search(spark, path, queries)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    a = sorted(tuple(r) for r in served.collect())
+    assert a == sorted(tuple(r) for r in ivf_search(emb).collect())
+
+
 def test_pca1_power_matches_numpy_dominant_eigvec(spark, sf_dir):
     """The fixed-round power iteration must land on numpy's dominant
     eigenvector (up to the shared sign rule): per-vector pc1

@@ -210,6 +210,42 @@ def test_higher_order_functions_take_sql_lambdas():
     assert found == []
 
 
+def _f_attr(node, names) -> bool:
+    return (
+        isinstance(node, ast.Attribute)
+        and isinstance(node.value, ast.Name)
+        and node.value.id == "F"
+        and node.attr in names
+    )
+
+
+def _topk_window_or_struct_argmax(node, _tree) -> bool:
+    """``F.row_number`` (a top-k window) or ``F.max`` / ``F.min`` of an
+    ``F.struct`` (a centroid argmax)."""
+    if _f_attr(node, {"row_number"}):
+        return True
+    return (
+        isinstance(node, ast.Call)
+        and _f_attr(node.func, {"max", "min"})
+        and bool(node.args)
+        and isinstance(node.args[0], ast.Call)
+        and _f_attr(node.args[0].func, {"struct"})
+    )
+
+
+def test_ann_topk_and_assignment_only_in_shared_helpers():
+    # every top-k tail and nearest-centroid assignment in the ANN and
+    # k-means operators goes through similarity._topk / _nearest
+    ops = _PKG / "operators"
+    ann = {"similarity.py", "embeddings.py"}
+    allowed = {
+        p.relative_to(ops).as_posix() for p in ops.rglob("*.py")
+    } - ann
+    allowed |= {"similarity.py:_topk", "similarity.py:_nearest"}
+    found = _nodes_outside(ops, allowed, _topk_window_or_struct_argmax)
+    assert found == []
+
+
 #: Where a package definition may be used: the package itself, its
 #: tests, tools, examples, the benchmark harnesses and the driver entry.
 _REFERENCE_ROOTS = (
